@@ -41,6 +41,20 @@ from linz_bde_uploader_spark.sources.store import TableStore
 log = logging.getLogger("linz_bde_uploader_spark")
 
 
+def _gated(table: TableDef) -> bool:
+    """Whether ``check_tolerance`` reads the row counts of ``table``'s
+    loads (it returns "ok" for a table with no row_tol)."""
+    return table.row_tol_error is not None or table.row_tol_warning is not None
+
+
+def _changed_tables(changes) -> set[str]:
+    """Lower-cased table names the level-5 change table names: one
+    scan per dataset decides every table's no-changes early exit, the
+    set form of ``prepare_change_table``'s ``lower(tablename)`` filter."""
+    return {r[0] for r in
+            changes.select(F.lower(F.col("tablename"))).distinct().collect()}
+
+
 @dataclass
 class UploadConfig:
     """Knobs mirroring conf/linz_bde_uploader.conf."""
@@ -319,6 +333,18 @@ class BdeUploader:
                 return t
         return None
 
+    def _stored_rows(self, table: TableDef) -> int:
+        """Row count of the table's current store version for the
+        tolerance gate: the pointer's ``rows`` when the writer
+        recorded one, else one count of the stored data (a version
+        written by an ungated load or an older release)."""
+        if not self.store.exists(table.name):
+            return 0
+        rows = self.store.row_count(table.name)
+        if rows is None:
+            rows = self.store.read(self.spark, table.name).count()
+        return rows
+
     def _load_file(self, path: str, table: TableDef):
         """S4+S5+P1: parse header, project valid columns, read+cleanse."""
         header = parse_header(path)
@@ -384,8 +410,12 @@ class BdeUploader:
 
         stg = _track(stg.persist(StorageLevel.MEMORY_AND_DISK))
 
-        prev_count = (self.store.read(self.spark, table.name).count()
-                      if self.store.exists(table.name) else 0)
+        # counts run only for the tolerance gate (an ungated table's
+        # check_tolerance is "ok" whatever the counts); a count that
+        # does run is recorded as the new pointer's ``rows``
+        gated = _gated(table)
+        prev_count = self._stored_rows(table) if gated else 0
+        new_count = None
         if incremental and self.store.exists(table.name):
             cur = self.store.read(self.spark, table.name)
             diff = M.full_diff(cur, stg, table.key, cur.columns)
@@ -394,17 +424,19 @@ class BdeUploader:
             stats = M.MergeStats(ninsert=counts.get("I", 0),
                                  nupdate=counts.get("U", 0),
                                  ndelete=counts.get("D", 0))
-            # the applied result is itself consumed three times
+            # the applied result is itself consumed up to three times
             # (tolerance count, view seeds, store write): persist it
             # too, or each consumer re-runs the full-outer diff join
             new = _track(M.apply_actions(cur, stg, diff, table.key)
                          .persist(StorageLevel.MEMORY_AND_DISK))
+            if gated:
+                new_count = new.count()
         else:
-            n = stg.count()
-            stats = M.MergeStats(ninsert=n, ndelete=prev_count if incremental else 0)
+            # EP1, or EP3 into an empty store: n inserts, no deletes
+            new_count = stg.count()
+            stats = M.MergeStats(ninsert=new_count)
             new = M.level0_replace(stg)  # identity: reads stg's cache
 
-        new_count = new.count()
         tol = M.check_tolerance(new_count, prev_count,
                                 table.row_tol_error, table.row_tol_warning)
         if tol == "error" and prev_count > 0:
@@ -420,16 +452,19 @@ class BdeUploader:
             # so crash replays stay safe without the guard
             seed_views(self.store, table.name, new, ds.name, spec,
                        table.key, force=True)
-        self.store.write(table.name, new, key=table.key, dataset=ds.name)
+        self.store.write(table.name, new, key=table.key, dataset=ds.name,
+                         rows=new_count)
         self._record_loaded(job, table.name, ds.name, "0", stats,
                             time.time() - t0, header.end_time or "")
         return TableResult(table.name, ds.name, "0",
                            "warning" if tol == "warning" else "loaded", stats)
 
     def upload_table_level5(self, job, ds: Dataset, table: TableDef,
-                            changes) -> TableResult:
+                            changes, changed_tables: set[str]) -> TableResult:
         """EP2 per-table CDC merge (bde_ApplyLevel5Update,
-        sql/02-bde_control_functions.sql.in:1576-1818)."""
+        sql/02-bde_control_functions.sql.in:1576-1818).
+        ``changed_tables`` is ``_changed_tables(changes)``, computed
+        once per dataset."""
         t0 = time.time()
         files = ds.files()
         header = None
@@ -445,14 +480,14 @@ class BdeUploader:
                                message="start-time continuity gap exceeds fail tolerance")
 
         cur = self.store.read(self.spark, table.name)
-        chg = M.prepare_change_table(changes, table.name)
         # early-exit if this table has no changed keys (reference :1713)
-        if chg.limit(1).count() == 0:
+        if table.name.lower() not in changed_tables:
             self._record_loaded(job, table.name, ds.name, "5",
                                 M.MergeStats(), time.time() - t0,
                                 header.end_time or "")
             return TableResult(table.name, ds.name, "5", "loaded", M.MergeStats())
 
+        chg = M.prepare_change_table(changes, table.name)
         chg = M.fix_key_swaps(stg, cur, chg, table.key, table.unique_cols)
         spec = self._views.get(table.name)
         # carry the view group columns through classify (free — the
@@ -465,32 +500,37 @@ class BdeUploader:
                                      unique_cols=table.unique_cols,
                                      carry_cols=carry)
         actions = actions.cache()
-        stats = M.merge_stats(actions)
-        merged = M.apply_actions(cur, stg, actions, table.key)
-        prev_count = cur.count()
-        new_count = merged.count()
-        tol = M.check_tolerance(new_count, prev_count,
-                                table.row_tol_error, table.row_tol_warning)
-        if tol == "error" and prev_count > 0:
+        try:
+            stats = M.merge_stats(actions)
+            merged = M.apply_actions(cur, stg, actions, table.key)
+            prev_count = new_count = None
+            if _gated(table):
+                prev_count = self._stored_rows(table)
+                new_count = merged.count()
+            tol = M.check_tolerance(new_count, prev_count,
+                                    table.row_tol_error, table.row_tol_warning)
+            if tol == "error" and prev_count > 0:
+                return TableResult(table.name, ds.name, "5", "error", stats,
+                                   f"tolerance: {new_count} < error floor of {prev_count}")
+            if spec is not None:
+                # maintained views refresh O(changes) BEFORE the base
+                # write, behind the dataset-stamp replay guard shared
+                # with streaming_cdc_upload (operators/view_refresh.py):
+                # a crash between a view write and the base write
+                # replays this dataset on the next run (the ledger
+                # watermark advances only after the base write below),
+                # the stamp skips the already-applied view delta, and
+                # the base write completes — derived state never
+                # double-counts and never goes stale, the reference's
+                # same-transaction consistency contract met by recovery
+                # instead (sql/02-bde_control_functions.sql.in:2595-2676)
+                refresh_views(self.spark, self.store, table.name, cur, stg,
+                              actions, merged, ds.name, spec, table.key)
+            self.store.write(table.name, merged, key=table.key,
+                             dataset=ds.name, rows=new_count)
+        finally:
+            # every exit path, a failed refresh or store write included
             actions.unpersist()
-            return TableResult(table.name, ds.name, "5", "error", stats,
-                               f"tolerance: {new_count} < error floor of {prev_count}")
-        if spec is not None:
-            # maintained views refresh O(changes) BEFORE the base
-            # write, behind the dataset-stamp replay guard shared
-            # with streaming_cdc_upload (operators/view_refresh.py):
-            # a crash between a view write and the base write replays
-            # this dataset on the next run (the ledger watermark
-            # advances only after the base write below), the stamp
-            # skips the already-applied view delta, and the base
-            # write completes — derived state never double-counts and
-            # never goes stale, the reference's same-transaction
-            # consistency contract met by recovery instead
-            # (sql/02-bde_control_functions.sql.in:2595-2676)
-            refresh_views(self.spark, self.store, table.name, cur, stg,
-                          actions, merged, ds.name, spec, table.key)
-        actions.unpersist()
-        self.store.write(table.name, merged, key=table.key, dataset=ds.name)
         self._record_loaded(job, table.name, ds.name, "5", stats,
                             time.time() - t0, header.end_time or "")
         return TableResult(table.name, ds.name, "5",
@@ -567,12 +607,13 @@ class BdeUploader:
                 self._run_sql_hooks("dataset_start", job.id,
                                     level0_ran=level0_ran)
                 try:
-                    changes = None
+                    changes = changed = None
                     if lvl == "5":
                         chg_def = self._change_table_def()
                         if chg_def is None:
                             raise RuntimeError("no l5_change_table configured")
                         _, changes = self._load_file(ds.files()[chg_def.files[0]], chg_def)
+                        changed = _changed_tables(changes)
                     runnable = []
                     for t in tabs:
                         if t.name in failed_tables:
@@ -587,7 +628,8 @@ class BdeUploader:
                             continue
                         runnable.append(t)
 
-                    def run_one(t, _ds=ds, _lvl=lvl, _chg=changes):
+                    def run_one(t, _ds=ds, _lvl=lvl, _chg=changes,
+                                _changed=changed):
                         if not self.ledger.acquire_lock(
                                 t.name, job.id,
                                 steal=self.config.override_locks):
@@ -598,7 +640,8 @@ class BdeUploader:
                             if _lvl == "0":
                                 return self.upload_table_level0(
                                     job, _ds, t, incremental=full_incremental)
-                            return self.upload_table_level5(job, _ds, t, _chg)
+                            return self.upload_table_level5(
+                                job, _ds, t, _chg, _changed)
                         finally:
                             self.ledger.release_lock(t.name, job.id)
 

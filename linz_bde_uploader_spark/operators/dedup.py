@@ -337,11 +337,13 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # ops and carries bits/2+1 aggregation-buffer longs instead of
     # bits (r20, guide §1.2 per-task work / §2.3 narrower partial-agg
     # rows through the exchange; quiet A/B: dedup_simhash vote stage
-    # ~0.8x). Carry-free by construction: the low (bit-j) field
-    # accumulates at most n = count(*) < 2^32 — a doc would need
-    # >= 4.3e9 DISTINCT shingles (tens of GB of text) to overflow
-    # into the high field, beyond any real document. The unpacked
-    # per-bit counts (low = s & (2^32-1), high = s >> 32) are
+    # ~0.8x). Exact while n = count(*) < 2^31: the low (bit-j) field
+    # alone would stay carry-free up to 2^32, but the high field
+    # lives in a SIGNED long — n * 2^32 must stay below 2^63, and
+    # the unpack's arithmetic `>> 32` reads a wrapped sign bit as a
+    # negative count — so a doc would need >= 2.1e9 DISTINCT
+    # shingles (tens of GB of text), beyond any real document. The
+    # unpacked per-bit counts (low = s & (2^32-1), high = s >> 32) are
     # bit-identical to the old one-column-per-bit sums, pinned by
     # tests/test_suite.py::test_simhash_packed_votes_bit_identical.
     # The shared count(*) completes the threshold: the ±1 vote sum

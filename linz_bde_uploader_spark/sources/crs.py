@@ -259,7 +259,7 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
     expressions. With ``enforce_budget`` the malformed-row check on a
     SPLITTABLE (plain-text) file is a separate counting pass over the
     parallel scan (at the production budget of 0 it short-circuits at
-    the first bad row via limit); the main projection then re-scans —
+    the first bad row via take(1)); the main projection then re-scans —
     the same two passes the reference makes (bde_copy cleanses to a
     temp file, COPY re-reads it). A ``.gz`` file decompresses ONCE:
     the repartitioned lines are persisted, the budget count fills the
@@ -328,9 +328,11 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
         bad_rows = split_rows(rows).filter(~F.col("_ok"))
         if budget == 0 and not is_gz:
             # splittable scan: any bad row is fatal, stop at the
-            # first — the limit costs nothing here because the plain
-            # text scan re-reads in parallel, unlike gz above
-            bad = bad_rows.limit(1).count()
+            # first. take(1) scans partitions in growing rounds and
+            # stops at the first bad row: one job for a one-split
+            # file (a limit(1).count() runs two). Re-reading is cheap
+            # because the plain text scan is parallel, unlike gz above
+            bad = len(bad_rows.take(1))
         else:
             bad = bad_rows.count()
         if bad > budget:

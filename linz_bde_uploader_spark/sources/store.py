@@ -10,14 +10,17 @@ succeeds. Readers resolve the pointer first, so they always see a
 complete snapshot; old versions remain as revisions until vacuumed.
 
 Scale design: data files are written hash-clustered by the merge key
-(``repartition(n, key)`` + sorted within partitions). With
-``use_catalog_buckets=True`` each version is additionally registered
-as a BUCKETED catalog table (``bucketBy(n, key).sortBy(key)``), which
-is what lets Catalyst actually elide the shuffle (and sort) when two
-store tables join on the key — plain parquet directories carry no
-bucketing metadata, so without the catalog the files are clustered
-but the join still exchanges. On a real cluster the catalog is the
-metastore; locally it is the session catalog.
+(``repartition(key)`` + sorted within partitions) with no fixed file
+count: AQE coalesces the shuffle, so the number of files follows the
+data — one file for a small table, not one per bucket. ``n_buckets``
+applies only with ``use_catalog_buckets=True``, where each version is
+additionally registered as a BUCKETED catalog table
+(``bucketBy(n, key).sortBy(key)``), which is what lets Catalyst
+actually elide the shuffle (and sort) when two store tables join on
+the key — plain parquet directories carry no bucketing metadata, so
+without the catalog the files are clustered but the join still
+exchanges. On a real cluster the catalog is the metastore; locally it
+is the session catalog.
 """
 
 from __future__ import annotations
@@ -115,9 +118,9 @@ class TableStore:
         could be durable while the data blocks it vouches for are
         not, and the roll-forward recovery would flip pointers onto
         incomplete files after a power failure. O(files) opens on
-        the driver; file count per version is bounded by the bucket
-        count, so this is a constant-ish cost per staged table, not
-        O(data)."""
+        the driver; file count per version follows the data (AQE
+        sizes the keyed write's partitions), so this is a small cost
+        per staged table, not O(rows)."""
         for dirpath, _dirnames, filenames in os.walk(path,
                                                      topdown=False):
             for fn in filenames:
@@ -313,8 +316,9 @@ class TableStore:
                .bucketBy(self.n_buckets, key).sortBy(key)
                .option("path", vdir).saveAsTable(name))
         elif bucketed:
-            # hash-cluster by merge key for co-located future merges
-            (df.repartition(self.n_buckets, F.col(key))
+            # hash-cluster by merge key for co-located future merges;
+            # no partition count, so AQE sizes the files from the data
+            (df.repartition(F.col(key))
                .sortWithinPartitions(key)
                .write.mode("overwrite").parquet(vdir))
         else:

@@ -18,6 +18,11 @@ from linz_bde_uploader_spark.control.logconf import (
 )
 
 REFERENCE_CONF = "/root/reference/conf/linz_bde_uploader.conf"
+# committed synthetic conf with every grammar feature of the reference
+# one (plus a .test layer beside it): the grammar tests run everywhere,
+# the production-parity tests only where the reference checkout is
+CONF_FIXTURE = os.path.join(os.path.dirname(__file__), "data",
+                            "linz_bde_uploader.conf")
 
 TABLES_CONF = """
 TABLE l5_change_table l5_change_table files xaud
@@ -28,10 +33,43 @@ TABLE crs_parcel_bndry key=audit_id row_tol=0.20,0.95 files pab1
 # ------------------------------------------------------------- parsing
 
 
+def _reference_conf() -> dict[str, str]:
+    if not os.path.exists(REFERENCE_CONF):
+        pytest.skip("reference checkout not available")
+    return load_conf(REFERENCE_CONF)
+
+
+def test_parse_conf_fixture_end_to_end():
+    """A production-shaped conf parses whole: plain keys, empty
+    values, heredocs, {name} interpolation with {_configdir}, and the
+    .test layer read last."""
+    conf = load_conf(CONF_FIXTURE)
+    assert conf["application_name"] == "BDE Loader Fixture"
+    assert conf["db_user"] == ""  # empty value line
+    assert conf["db_schema"] == "bde_control"
+    assert conf["bde_tables_config"] == \
+        os.path.join(os.path.dirname(CONF_FIXTURE), "tables.conf")
+    # {db_schema}/{bde_schema} interpolation inside a heredoc, with
+    # the {{id}} runtime placeholder preserved
+    assert conf["db_connect_sql"] == (
+        "SET search_path to bde_control, bde, public;\n"
+        "SELECT bde_control.set_job_id({{id}});")
+    assert conf["level5_starttime_warn_tolerance"] == "0.5"
+    assert conf["max_file_errors"] == "10"
+    # log_settings heredoc: appender options interpolate the smtp keys
+    assert "bde-admin@example.org" in conf["log_settings"]
+    assert "{log_email_address}" not in conf["log_settings"]
+    assert "{{" not in conf["log_settings"]
+    # the .test layer wins over the main file
+    assert conf["db_connection"] == "dbname=bde_fixture_test"
+    assert load_conf(CONF_FIXTURE, include_test=False)["db_connection"] \
+        == "dbname=bde_fixture"
+
+
 def test_parse_reference_conf_end_to_end():
     """The shipped production conf parses whole: plain keys, empty
     values, heredocs, {name} interpolation with {_configdir}."""
-    conf = load_conf(REFERENCE_CONF)
+    conf = _reference_conf()
     assert conf["application_name"] == "LINZ BDE Loader"
     assert conf["db_user"] == ""  # empty value line
     assert conf["db_schema"] == "bde_control"
@@ -50,10 +88,34 @@ def test_parse_reference_conf_end_to_end():
     assert "{{" not in conf["log_settings"]
 
 
+def test_conf_fixture_bde_copy_block_feeds_cleanse():
+    """The embedded bde_copy_configuration block becomes the cleanse
+    config (S5), and the conf keys feed the upload config."""
+    conf = load_conf(CONF_FIXTURE)
+    cfg = upload_config_from_conf(conf)
+    assert cfg.cleanse.wkt_prefix == "SRID=4167;"
+    assert cfg.cleanse.longitude_offset == 160.0
+    assert cfg.cleanse.utf8_enforced
+    assert cfg.cleanse.minimum_year == 1900
+    assert cfg.cleanse.char_map["\x01"] == ""   # delete rule
+    assert cfg.cleanse.char_map["\u2013"] == "-"
+    # the block sets max_errors 0 -> conf-level max_file_errors (10)
+    # must NOT override it
+    assert cfg.cleanse.max_errors == 0
+    assert cfg.level5_starttime_warn_tolerance == 0.5
+    assert cfg.level5_starttime_fail_tolerance == 0.0
+    assert cfg.require_all_dataset_files
+    inc, exc = conf_table_lists(conf)
+    assert inc == ["crs_action", "crs_action_type", "crs_adjustment",
+                   "crs_parcel", "crs_parcel_bndry", "crs_survey",
+                   "crs_title"]
+    assert exc == []
+
+
 def test_reference_bde_copy_block_feeds_cleanse():
     """The embedded bde_copy_configuration block becomes the cleanse
     config (S5) with the production values (conf:349-421)."""
-    conf = load_conf(REFERENCE_CONF)
+    conf = _reference_conf()
     cfg = upload_config_from_conf(conf)
     assert cfg.cleanse.wkt_prefix == "SRID=4167;"
     assert cfg.cleanse.longitude_offset == 160.0
@@ -129,8 +191,22 @@ EOF
 # -------------------------------------------------------- log_settings
 
 
+def test_parse_log_settings_fixture_block():
+    conf = load_conf(CONF_FIXTURE)
+    parsed = parse_log_settings(conf["log_settings"])
+    assert parsed["level"] == logging.DEBUG
+    assert set(parsed["appenders"]) == {"ErrorEmail", "Email"}
+    ee = parsed["appenders"]["ErrorEmail"]
+    assert ee["class"].endswith("MailSender")
+    assert ee["min_level"] == "warning"
+    assert ee["to"] == "bde-admin@example.org"
+    # continuation-line subject, with {application_name} interpolated
+    assert ee["subject"] == "[BDE Loader Fixture] BDE upload errors"
+    assert parsed["appenders"]["Email"]["min_level"] == "info"
+
+
 def test_parse_log_settings_reference_block():
-    conf = load_conf(REFERENCE_CONF)
+    conf = _reference_conf()
     parsed = parse_log_settings(conf["log_settings"])
     assert parsed["level"] == logging.DEBUG
     assert set(parsed["appenders"]) == {"ErrorEmail", "Email"}

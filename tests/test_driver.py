@@ -988,3 +988,189 @@ def test_exception_path_releases_tracked_caches(spark, env):
     # the staged-snapshot persist was tracked and then released by
     # the per-dataset finally — nothing outlives the failed dataset
     assert len(_PERSISTED) == 0
+
+
+@pytest.mark.parametrize("failing", ["store.write", "refresh_views"])
+def test_failed_level5_releases_actions_cache(spark, tmp_path,
+                                              monkeypatch, failing):
+    """The L5 classified-actions cache is released on every exit path:
+    a view refresh or store write that raises must not leave it in the
+    CacheManager of a long-lived session that catches the error and
+    continues."""
+    from linz_bde_uploader_spark import driver as D
+    from linz_bde_uploader_spark.operators.dedup import release_caches
+    from linz_bde_uploader_spark.operators.view_refresh import ViewSpec
+
+    repo = BdeRepository(write_repository(str(tmp_path / "repo")))
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    ledger = Ledger(str(tmp_path / "ctl"))
+    cfg = UploadConfig(views={"crs_parcel_bndry": ViewSpec(
+        group_cols=["reversed"], value_col="sequence")})
+    up = BdeUploader(spark, repo, store, ledger,
+                     parse_tables_conf(TABLES_CONF), config=cfg)
+    up.apply_updates(level0=True)
+    release_caches()
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_manager.isEmpty()
+
+    def boom(*a, **k):
+        raise RuntimeError("disk full")
+
+    if failing == "store.write":
+        monkeypatch.setattr(store, "write", boom)
+    else:
+        monkeypatch.setattr(D, "refresh_views", boom)
+    with pytest.raises(RuntimeError, match="disk full"):
+        up.apply_updates(level5=True)
+    assert cache_manager.isEmpty()
+
+
+def test_gated_table_records_pointer_rows(spark, env):
+    """A gated table's load records its counted rows in the store
+    pointer, equal to the stored row count, after EP1, EP2 and EP3."""
+    import os
+
+    from tests.fixtures import PAB1_L0, write_crs
+
+    up, store, ledger = env
+
+    def assert_rows(n):
+        assert store.row_count("crs_parcel_bndry") == n
+        assert store.read(spark, "crs_parcel_bndry").count() == n
+
+    up.apply_updates(level0=True)                       # EP1
+    assert_rows(3)
+    up.apply_updates(level5=True)                       # EP2
+    assert_rows(5)
+    write_crs(os.path.join(up.repo.root, "level_0", "20160701000000",
+                           "pab1.crs"), PAB1_L0)
+    r = up.apply_updates(full_incremental=True)         # EP3
+    assert r[-1].status == "warning"  # 3 < ceil(5 * 0.95); still written
+    assert (r[-1].stats.ninsert, r[-1].stats.ndelete) == (1, 3)
+    assert_rows(3)
+
+
+def test_gated_prev_count_without_pointer_rows(spark, env):
+    """A store written before pointers carried ``rows`` (or by an
+    ungated load) still gives the gate the exact previous count: the
+    driver counts the stored version once, and the gate decides as
+    before."""
+    import json
+
+    up, store, ledger = env
+    up.apply_updates(level0=True)
+    pointer = store._pointer("crs_parcel_bndry")
+    with open(pointer) as fh:
+        payload = json.load(fh)
+    payload.pop("rows")
+    with open(pointer, "w") as fh:
+        json.dump(payload, fh)
+    assert store.row_count("crs_parcel_bndry") is None
+
+    for t in up.tables:
+        if t.name == "crs_parcel_bndry":
+            t.row_tol_error = 3.0  # needs ceil(3 * 3.0) = 9; merge yields 5
+    r = up.apply_updates(level5=True)
+    assert r[-1].status == "error"
+    assert r[-1].message == "tolerance: 5 < error floor of 3"
+    assert store.row_count("crs_parcel_bndry") is None  # no commit
+
+    for t in up.tables:
+        if t.name == "crs_parcel_bndry":
+            t.row_tol_error = 0.20
+    r = up.apply_updates(level5=True)
+    assert r[-1].status == "loaded"
+    assert store.row_count("crs_parcel_bndry") == 5
+
+
+def test_ungated_level5_runs_no_count(spark, tmp_path, monkeypatch):
+    """A table with no row_tol never reads a row count, so its L5 load
+    runs no ``DataFrame.count`` and its pointer records no ``rows``."""
+    repo = BdeRepository(write_repository(str(tmp_path / "repo")))
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    ledger = Ledger(str(tmp_path / "ctl"))
+    tables = parse_tables_conf("""
+TABLE l5_change_table l5_change_table files xaud
+TABLE crs_parcel_bndry key=audit_id files pab1
+""")
+    up = BdeUploader(spark, repo, store, ledger, tables)
+    up.apply_updates(level0=True)
+
+    counted = []
+    DataFrame = type(spark.range(1))  # the concrete class, not its ABC
+    real_count = DataFrame.count
+
+    def tracing_count(self):
+        counted.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(DataFrame, "count", tracing_count)
+    r = up.apply_updates(level5=True)
+    monkeypatch.undo()
+    assert counted == []
+    assert r[-1].status == "loaded"
+    s = r[-1].stats
+    assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
+    assert store.row_count("crs_parcel_bndry") is None
+    rows = {x.audit_id: x.sequence
+            for x in store.read(spark, "crs_parcel_bndry").collect()}
+    assert rows == {100: 3, 80401149: 20, 80401148: 10, 300: 4, 400: 5}
+
+
+def test_small_keyed_write_is_one_file(spark, tmp_path):
+    """A keyed write is sized by the data, not by ``n_buckets``: a
+    2,000-row table lands as one parquet file."""
+    import os
+
+    store = TableStore(str(tmp_path / "store"))
+    df = spark.range(2000).selectExpr("id", "cast(id * 7 as string) AS v")
+    v = store.write("t", df, key="id")
+    vdir = os.path.join(store.root, "t", f"v={v}")
+    files = [n for n in os.listdir(vdir) if n.endswith(".parquet")]
+    assert len(files) == 1
+    assert store.read(spark, "t").count() == 2000
+
+
+def test_level5_early_exit_uses_one_change_scan(spark, tmp_path,
+                                                monkeypatch):
+    """The change table is scanned once per level-5 dataset: a table
+    it does not name exits early with no changes, and a mixed-case
+    ``tablename`` still names its table."""
+    import os
+
+    from linz_bde_uploader_spark import driver as D
+    from tests.fixtures import XAUD, write_crs
+
+    root = write_repository(str(tmp_path / "repo"))
+    xaud = os.path.join(root, "level_5", "20160601171200", "xaud.crs")
+    write_crs(xaud, XAUD.replace("|crs_parcel_bndry|",
+                                 "|CRS_Parcel_Bndry|"))
+    repo = BdeRepository(root)
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    ledger = Ledger(str(tmp_path / "ctl"))
+    tables = parse_tables_conf(TABLES_CONF + """
+TABLE crs_other key=audit_id files pab1
+""")
+    up = BdeUploader(spark, repo, store, ledger, tables)
+    up.apply_updates(level0=True)
+    v_other = store.current_version("crs_other")
+
+    scans = []
+    real_scan = D._changed_tables
+
+    def tracing_scan(changes):
+        scans.append(changes)
+        return real_scan(changes)
+
+    monkeypatch.setattr(D, "_changed_tables", tracing_scan)
+    by_table = {r.table: r for r in up.apply_updates(level5=True)}
+    assert len(scans) == 1
+    s = by_table["crs_parcel_bndry"].stats
+    assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
+    other = by_table["crs_other"]
+    assert other.status == "loaded"
+    assert other.stats == D.M.MergeStats()
+    assert store.current_version("crs_other") == v_other
+    assert ledger.table("crs_other")["last_upload_dataset"] == \
+        "20160601171200"
