@@ -244,42 +244,49 @@ def dedup_index_build(spark: SparkSession, store, docs: DataFrame,
     can ENFORCE it and compact can RECOVER it (frozen banding,
     exactly as ann_index freezes its centroids; callers passing
     mismatched values get a ValueError, not silent corruption).
+    The three tables commit together in one dataset scope, so a build
+    that fails part-way leaves the previous index (or none) in place;
+    it therefore opens its own scope and must not run inside another.
     An empty ``docs`` frame creates a valid empty index — the
     streaming bootstrap path, so a first batch classifies through the
     same ingest pipeline as every later one."""
     content_t, bands_t, sigs_t, _cd, _bd, _sd = _tables(name)
     d = docs.select(F.col(id_col).alias("id"),
                     F.col(text_col).alias("text"))
-    content = (d.groupBy(F.md5("text").alias("content_hash"))
-               .agg(F.min("id").alias("canonical_id"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        # row count recorded in the pointer: the auto-compact
-        # trigger's denominator, maintained arithmetically thereafter
-        n_content = content.count()
-        store.write(content_t, content, key="content_hash",
-                    rows=n_content,
-                    meta={"num_perm": num_perm, "bands": bands,
-                          "shingle_words": shingle_words,
-                          # frozen at build like the banding trio;
-                          # pre-r20 indexes (no stamp) read/write
-                          # layout-1 keys forever — see _key_layout
-                          "key_layout": 2})
-    finally:
-        content.unpersist()
-    # one minhash aggregate feeds both band minima and signatures
-    wide = (_minhash_wide(d, "text", "id", num_perm, shingle_words)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        store.write(bands_t,
-                    _band_rows_from_wide(wide, num_perm, bands,
-                                         layout=2)
-                    .groupBy("bkey").agg(F.min("id").alias("min_id")),
-                    key="bkey")
-        store.write(sigs_t, sig_array_from_wide(wide, num_perm),
-                    key="id")
-    finally:
-        wide.unpersist()
+    # the three pointers flip together (the store's dataset scope):
+    # a rebuild over an older index that fails part-way must not
+    # leave the layout-2 stamp above the old layout's band rows
+    with store.dataset_scope():
+        content = (d.groupBy(F.md5("text").alias("content_hash"))
+                   .agg(F.min("id").alias("canonical_id"))
+                   .persist(StorageLevel.MEMORY_AND_DISK))
+        try:
+            # row count recorded in the pointer: the auto-compact
+            # trigger's denominator, maintained arithmetically thereafter
+            n_content = content.count()
+            store.write(content_t, content, key="content_hash",
+                        rows=n_content,
+                        meta={"num_perm": num_perm, "bands": bands,
+                              "shingle_words": shingle_words,
+                              # frozen at build like the banding trio;
+                              # pre-r20 indexes (no stamp) read/write
+                              # layout-1 keys forever — see _key_layout
+                              "key_layout": 2})
+        finally:
+            content.unpersist()
+        # one minhash aggregate feeds both band minima and signatures
+        wide = (_minhash_wide(d, "text", "id", num_perm, shingle_words)
+                .persist(StorageLevel.MEMORY_AND_DISK))
+        try:
+            store.write(bands_t,
+                        _band_rows_from_wide(wide, num_perm, bands,
+                                             layout=2)
+                        .groupBy("bkey").agg(F.min("id").alias("min_id")),
+                        key="bkey")
+            store.write(sigs_t, sig_array_from_wide(wide, num_perm),
+                        key="id")
+        finally:
+            wide.unpersist()
 
 
 def dedup_index_ingest(spark: SparkSession, store, batch: DataFrame,

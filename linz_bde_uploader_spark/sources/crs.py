@@ -407,7 +407,52 @@ def cleanse_text(col, cleanse: CleanseConfig):
     multi-character replacements (newline -> literal "\\n") need a
     regexp each. With ``utf8_encoding enforced``, non-ASCII characters
     the map doesn't allow become ``utf8_replace_unmapped`` (reference
-    default '?')."""
+    default '?').
+
+    That chain still scans a value once per step (18 scans for a
+    310-rule map with 15 multi-character rules), yet almost every
+    value is plain ASCII that no rule touches, so it runs behind a one-scan
+    gate: ``when(col.rlike(trigger), chain).otherwise(col)``. The gate
+    is exact. Every step is the identity on a value holding none of
+    the rule source characters (translate, delete and regexp rules),
+    none of the C0 controls the chain deletes, and no non-ASCII
+    character (which the UTF-8 step may replace). Such a value passes
+    through unchanged; any other runs the same chain as before, so
+    the output is identical and NULL stays NULL. The trigger is
+    written as a NEGATED class of the ASCII characters no step
+    changes, so Java compiles it to one bit-set lookup per character;
+    a positive class listing the ~300 trigger characters compiles to
+    a chain of per-character tests and is slower than no gate at all.
+    The collision fallback (``_single_pass_map_udf``) is not gated."""
+    out, sources = _cleanse_chain(col, cleanse)
+    if sources is None:
+        return out
+    return F.when(col.rlike(_trigger_class(sources)), out).otherwise(col)
+
+
+# C0 controls the chain deletes (tab, LF and CR are kept)
+_C0_DELETED = r"[\x00-\x08\x0B\x0C\x0E-\x1F]"
+
+
+def _trigger_class(sources: set[str]) -> str:
+    """Java regex matching any character some cleanse step can change:
+    the complement of the ASCII characters that are neither a rule
+    source nor a deleted C0 control (see ``cleanse_text``)."""
+    safe = [c for c in map(chr, range(128))
+            if c not in sources and not re.fullmatch(_C0_DELETED, c)]
+    return "[^" + "".join(f"\\x{ord(c):02X}" for c in safe) + "]"
+
+
+def _java_replacement(s: str) -> str:
+    """Quote a literal for a Java regex replacement string, as
+    ``Matcher.quoteReplacement`` does: ``\\`` and ``$`` are special."""
+    return s.replace("\\", "\\\\").replace("$", "\\$")
+
+
+def _cleanse_chain(col, cleanse: CleanseConfig):
+    """The ungated cleanse of ``cleanse_text`` and the set of rule
+    source characters that gate it; the set is None when a rule
+    collision forces the single-pass UDF instead."""
     kept_src, kept_dst, del_src, rx_rules, allowed = [], [], [], [], set()
     for src, dst in cleanse.char_map.items():
         allowed.update(ch for ch in dst if ord(ch) > 127)
@@ -426,20 +471,21 @@ def cleanse_text(col, cleanse: CleanseConfig):
     # that as long as no translate output is itself a regexp source;
     # on collision fall back to a single-pass per-character map.
     if set(kept_dst) & {s for s, _ in rx_rules}:
-        return _single_pass_map_udf(cleanse)(col)
+        return _single_pass_map_udf(cleanse)(col), None
     out = col
     # translate pairs positionally; unpaired trailing chars are deleted
     if kept_src or del_src:
         out = F.translate(out, "".join(kept_src + del_src), "".join(kept_dst))
     for src, dst in rx_rules:
-        out = F.regexp_replace(out, re.escape(src), dst.replace("\\", "\\\\"))
+        out = F.regexp_replace(out, re.escape(src), _java_replacement(dst))
     # delete remaining C0 control characters (utf8_replace_invalid delete)
-    out = F.regexp_replace(out, r"[\x00-\x08\x0B\x0C\x0E-\x1F]", "")
+    out = F.regexp_replace(out, _C0_DELETED, "")
     if cleanse.utf8_enforced:
         keep_class = "".join(re.escape(c) for c in sorted(allowed))
         out = F.regexp_replace(out, f"[^\\x00-\\x7F{keep_class}]",
-                               cleanse.utf8_unmapped)
-    return out
+                               _java_replacement(cleanse.utf8_unmapped))
+    sources = set(kept_src + del_src).union(*(s for s, _ in rx_rules))
+    return out, sources
 
 
 def _single_pass_map_udf(cleanse: CleanseConfig):

@@ -19,7 +19,9 @@ The generated table deliberately carries a varchar column with
 planted mapped/unmapped characters so the CLEANSE stage
 (sources/crs.py cleanse_text) does real work, and the run is made
 with the PRODUCTION bde_copy configuration parsed from the reference
-conf (~300 replace rules + utf8 enforcement). The script also
+conf (~300 replace rules + utf8 enforcement) — or, without a reference
+checkout, with the upload benchmark's committed 310-rule synthetic
+block; the output's ``cleanse_conf`` names the block used. The script also
 records WHICH physical path that conf takes — the composed
 translate/regexp form (pure codegen) or the per-row single-pass UDF
 fallback (taken only when a rule's output collides with another
@@ -51,6 +53,10 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
+# the upload benchmark's committed 310-rule bde_copy block: the
+# cleanse fallback where no reference checkout exists
+SYNTHETIC_CONF = os.path.join(REPO, "perfbench", "conf",
+                              "linz_bde_uploader.conf")
 
 HEADER = """\
 HEDR\t 2.0.0
@@ -215,17 +221,27 @@ def gen_repository(root: str, n_rows: int) -> dict:
 
 
 def production_cleanse():
-    """The reference's real bde_copy block (~300 rules, utf8
-    enforced) — the same parse test_production_conf_block pins."""
+    """The bde_copy cleanse config and a label naming the conf it was
+    parsed from. Prefers the reference's real bde_copy block (~300
+    rules, utf8 enforced) — the same parse test_production_conf_block
+    pins. Without a reference checkout it falls back to the committed
+    synthetic block the upload benchmark uses (310 rules, utf8
+    enforced), so the soak runs anywhere the repo does."""
     import re
 
     from linz_bde_uploader_spark.sources.crs import CleanseConfig
 
     path = "/root/reference/conf/linz_bde_uploader.conf"
+    label = ("production bde_copy block "
+             "(conf/linz_bde_uploader.conf:349-1245)")
+    if not os.path.exists(path):
+        path = SYNTHETIC_CONF
+        label = ("synthetic bde_copy block "
+                 "(perfbench/conf/linz_bde_uploader.conf)")
     block = re.search(
-        r"bde_copy_configuration << end_bde_copy_configuration(.*?)"
+        r"bde_copy_configuration\s*<<\s*end_bde_copy_configuration(.*?)"
         r"end_bde_copy_configuration", open(path).read(), re.S).group(1)
-    return CleanseConfig.from_conf_block(block)
+    return CleanseConfig.from_conf_block(block), label
 
 
 def cleanse_path_taken(spark, cfg) -> str:
@@ -435,15 +451,15 @@ def main() -> None:
     from linz_bde_uploader_spark.session import get_spark
 
     spark = get_spark("etl_scale_soak")
-    cleanse = production_cleanse()
+    cleanse, cleanse_conf = production_cleanse()
+    print(f"# cleanse: {cleanse_conf}", file=sys.stderr, flush=True)
     out = {
         "recorded_utc": datetime.datetime.now(
             datetime.timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ"),
         "base_rows": args.base_rows,
         "reps": args.reps,
         "change_frac": "~1% per level-5 dataset (U/I/D even split)",
-        "cleanse_conf": "production bde_copy block "
-                        "(conf/linz_bde_uploader.conf:349-1245)",
+        "cleanse_conf": cleanse_conf,
         "cleanse_path": cleanse_path_taken(spark, cleanse),
         "loadavg_start": [round(x, 2) for x in os.getloadavg()],
         # hypervisor-steal provenance (bench.py r16): loadavg is

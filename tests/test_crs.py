@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from linz_bde_uploader_spark.sources.crs import (
@@ -339,3 +341,106 @@ def test_read_gzip_budget_single_pass(spark, tmp_path):
     assert not _PERSISTED
     assert not cached_lines.storageLevel.useMemory
     assert not cached_lines.storageLevel.useDisk
+
+
+# ------------------------------------------------ gated cleanse chain
+
+_CONF_FIXTURE = os.path.join(os.path.dirname(__file__), "data",
+                             "linz_bde_uploader.conf")
+
+
+def _fixture_cleanse():
+    from linz_bde_uploader_spark.config import (
+        load_conf, upload_config_from_conf)
+
+    return upload_config_from_conf(load_conf(_CONF_FIXTURE)).cleanse
+
+
+_GATE_CONFS = {
+    "default": CleanseConfig,
+    "conf_fixture": _fixture_cleanse,
+    # ASCII sources (| and \), a multi-character source, a source
+    # whose replacement holds regex specials, and a non-ASCII source
+    "ascii_and_multichar": lambda: CleanseConfig(
+        char_map={"|": " ", "\\": "/", "ab": "X", "\n": "\\n",
+                  "é": "e", "~": "$1"},
+        utf8_enforced=True),
+}
+
+
+@pytest.mark.parametrize("conf", sorted(_GATE_CONFS))
+def test_cleanse_gate_matches_ungated_chain(spark, conf):
+    """The gate in front of the cleanse chain is exact: for every
+    character U+0000-U+024F (alone and inside ASCII text), a CJK and
+    an astral character, every map source, "" and NULL, the gated
+    result equals the ungated chain."""
+    from pyspark.sql import functions as F
+
+    from linz_bde_uploader_spark.sources.crs import _cleanse_chain
+
+    cfg = _GATE_CONFS[conf]()
+    chars = [chr(i) for i in range(0x250)] + ["中", "\U0001F600"]
+    chars += list(cfg.char_map)
+    values = [None, ""] + chars + [f"xy {c} zw" for c in chars]
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    chain, sources = _cleanse_chain(F.col("s"), cfg)
+    assert sources is not None  # the composed path, not the UDF
+    rows = df.select("s", cleanse_text(F.col("s"), cfg).alias("gated"),
+                     chain.alias("ungated")).collect()
+    assert len(rows) == len(values)
+    bad = [(r.s, r.gated, r.ungated) for r in rows
+           if r.gated != r.ungated]
+    assert not bad, bad[:5]
+    # the gate passes plain text through untouched and NULL stays NULL
+    by_value = {r.s: r.gated for r in rows}
+    assert by_value["xy A zw"] == "xy A zw"
+    assert by_value[None] is None
+
+
+def test_cleanse_gate_keeps_composed_path_for_300_rules(spark):
+    """A ~300-rule map still folds into the composed JVM expressions
+    with the gate in front: no Python UDF in the plan."""
+    import sys
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts"))
+    from etl_scale_soak import cleanse_path_taken
+    from pyspark.sql import functions as F
+
+    cmap = {chr(0x100 + i): "?" for i in range(290)}
+    cmap.update({chr(c): "" for c in range(1, 9)})
+    cmap.update({"|": " ", "\\": " ", "\n": "\\n", "\r": "\\r"})
+    cfg = CleanseConfig(char_map=cmap, utf8_enforced=True)
+    assert len(cfg.char_map) >= 300
+    assert cleanse_path_taken(spark, cfg) == "composed"
+    df = spark.range(1).select(
+        cleanse_text(F.col("id").cast("string"), cfg).alias("t"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan and "PythonUDF" not in plan
+
+
+def test_cleanse_multichar_replacement_with_dollar(spark):
+    """A multi-character replacement holding '$' is a literal, not a
+    Java group reference (it used to fail the whole load)."""
+    from pyspark.sql import functions as F
+
+    cfg = CleanseConfig.from_conf_block("replace \\u20ac EUR$\n"
+                                        "replace ~ \\\\$1\n")
+    assert cfg.char_map == {"€": "EUR$", "~": "\\$1"}
+    got = spark.range(1).select(
+        cleanse_text(F.lit("5€ ~ok"), cfg).alias("t")).first().t
+    assert got == "5EUR$ \\$1ok"
+
+
+def test_cleanse_utf8_unmapped_dollar(spark):
+    """``utf8_replace_unmapped $`` replaces unmapped non-ASCII
+    characters with a literal '$'."""
+    from pyspark.sql import functions as F
+
+    cfg = CleanseConfig.from_conf_block("utf8_encoding enforced\n"
+                                        "utf8_replace_unmapped $\n")
+    assert cfg.utf8_enforced and cfg.utf8_unmapped == "$"
+    got = spark.range(1).select(
+        cleanse_text(F.lit("a♯b é"), cfg).alias("t")).first().t
+    assert got == "a$b $"

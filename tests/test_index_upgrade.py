@@ -207,3 +207,60 @@ def test_v1_dedup_index_layout_ingests_and_compacts(spark, tmp_path):
     for r in old.read(spark, "dd__bands").limit(20).collect():
         assert ":" not in r["bkey"] and len(r["bkey"]) == 32
     docs.unpersist()
+
+
+def test_v1_dedup_index_rebuild_crash_keeps_v1_layout(spark, tmp_path,
+                                                      monkeypatch):
+    """A rebuild over a v1 dedup index that fails at the band write
+    must leave the v1 index whole: the layout-2 content stamp may not
+    land without the layout-2 bands, or every later ingest computes
+    band keys that match nothing and admits the near-dups. The later
+    ingest must classify the batch exactly as an untouched copy of the
+    v1 fixture does, finding the near-copies of stored docs."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from linz_bde_uploader_spark.operators import dedup_index as DI
+    from linz_bde_uploader_spark.plans.tables import load_table
+
+    docs = (load_table(spark, SF_DIR, "documents")
+            .select("doc_id", "text").limit(80).cache())
+    corpus = docs.filter(F.col("doc_id") % 5 != 0)
+    # near-copies of stored docs: only the band join against the
+    # stored index can find them (a batch-internal pair would not
+    # tell a broken index from a sound one)
+    batch = (corpus.filter(F.col("doc_id") < 20)
+             .select((F.col("doc_id") + 1000).alias("doc_id"),
+                     F.concat("text", F.lit(" plus one more word"))
+                     .alias("text")))
+
+    crashed = TableStore(str(tmp_path / "crashed"), n_buckets=4)
+    _write_v1_dedup_layout(spark, crashed, corpus)
+    shutil.copytree(str(tmp_path / "crashed"), str(tmp_path / "intact"))
+    intact = TableStore(str(tmp_path / "intact"), n_buckets=4)
+
+    write = crashed.write
+
+    def crash_at_bands(table, df, **kw):
+        if table == "dd__bands":
+            raise OSError("injected crash at the band write")
+        return write(table, df, **kw)
+
+    monkeypatch.setattr(crashed, "write", crash_at_bands)
+    with pytest.raises(OSError, match="injected crash"):
+        DI.dedup_index_build(spark, crashed, corpus, "dd")
+    monkeypatch.undo()
+    assert DI._key_layout(crashed, "dd") == 1
+
+    def verdicts(store):
+        v = DI.dedup_index_ingest(spark, store, batch, "dd")
+        got = {(r["id"], r["verdict"], r["dup_of"]) for r in v.collect()}
+        v.unpersist()
+        return got
+
+    got, want = verdicts(crashed), verdicts(intact)
+    assert got == want
+    assert any(verdict == "near_dup" and of < 1000
+               for _id, verdict, of in want)
+    docs.unpersist()
