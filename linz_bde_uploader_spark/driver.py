@@ -22,13 +22,14 @@ import subprocess
 import time
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from linz_bde_uploader_spark.cache import persist, release_caches
 from linz_bde_uploader_spark.catalog.tables import TableDef, validate_key
 from linz_bde_uploader_spark.control.ledger import Ledger
 from linz_bde_uploader_spark.operators import merge as M
-from linz_bde_uploader_spark.operators.dedup import release_caches
 from linz_bde_uploader_spark.operators.view_refresh import (
     ViewSpec, refresh_views, seed_views,
 )
@@ -223,18 +224,26 @@ class BdeUploader:
         except Exception as e:  # parity: log, don't kill the upload
             log.error("sql hook %s failed: %s", event, e)
 
-    def _keep_scratch(self, ds: Dataset, table: TableDef, stg, level: str) -> None:
-        """-keep-files: snapshot the cleansed staging frame under
+    def _stage(self, ds: Dataset, table: TableDef, level: str):
+        """``(header, stg)``: the union of ``table``'s files in ``ds``
+        (header of the last file). With -keep-files the cleansed
+        staging frame is also snapshot under
         <store>/scratch/<dataset>_L<level>_<table> for debugging
         (analog of the reference's retained .unl working files,
         lib/LINZ/BdeUpload.pm:1146-1176)."""
-        if not self.config.keep_files:
-            return
-        import os
-        path = os.path.join(self.store.root, "scratch",
-                            f"{ds.name}_L{level}_{table.name}")
-        stg.write.mode("overwrite").parquet(path)
-        log.info("kept working files: %s", path)
+        files = ds.files()
+        header = stg = None
+        for tag in table.files:
+            header, part = self._load_file(files[tag], table)
+            stg = part if stg is None else stg.unionByName(
+                part, allowMissingColumns=True)
+        if self.config.keep_files:
+            import os
+            path = os.path.join(self.store.root, "scratch",
+                                f"{ds.name}_L{level}_{table.name}")
+            stg.write.mode("overwrite").parquet(path)
+            log.info("kept working files: %s", path)
+        return header, stg
 
     def _record_loaded(self, job, table_name: str, dataset: str,
                        level: str, stats, duration: float,
@@ -384,13 +393,7 @@ class BdeUploader:
                             incremental: bool = False) -> TableResult:
         """EP1 (or EP3 when incremental=True) per-table load."""
         t0 = time.time()
-        files = ds.files()
-        header = None
-        stg = None
-        for tag in table.files:
-            header, part = self._load_file(files[tag], table)
-            stg = part if stg is None else stg.unionByName(part, allowMissingColumns=True)
-        self._keep_scratch(ds, table, stg, "0")
+        header, stg = self._stage(ds, table, "0")
         if table.key:
             validate_key(table, {c.name: c.type_name for c in header.columns})
 
@@ -400,15 +403,11 @@ class BdeUploader:
         # write — and its parse plus ~300-rule cleanse is the L0
         # path's dominant per-pass cost (each pass re-read and
         # re-cleansed the file: measured 4 passes inside the f30
-        # l0_sec before this persist). Persist it once (tracked;
-        # the apply_updates loop releases per dataset). The spill
+        # l0_sec before this persist). Persist it once (the
+        # apply_updates loop releases per dataset). The spill
         # trade at 100 TB is one transient table-sized copy on
         # executor disk vs re-parsing the table per consumer.
-        from pyspark import StorageLevel
-
-        from linz_bde_uploader_spark.operators.dedup import _track
-
-        stg = _track(stg.persist(StorageLevel.MEMORY_AND_DISK))
+        stg = persist(stg, StorageLevel.MEMORY_AND_DISK)
 
         # counts run only for the tolerance gate (an ungated table's
         # check_tolerance is "ok" whatever the counts); a count that
@@ -427,8 +426,8 @@ class BdeUploader:
             # the applied result is itself consumed up to three times
             # (tolerance count, view seeds, store write): persist it
             # too, or each consumer re-runs the full-outer diff join
-            new = _track(M.apply_actions(cur, stg, diff, table.key)
-                         .persist(StorageLevel.MEMORY_AND_DISK))
+            new = persist(M.apply_actions(cur, stg, diff, table.key),
+                          StorageLevel.MEMORY_AND_DISK)
             if gated:
                 new_count = new.count()
         else:
@@ -466,13 +465,7 @@ class BdeUploader:
         ``changed_tables`` is ``_changed_tables(changes)``, computed
         once per dataset."""
         t0 = time.time()
-        files = ds.files()
-        header = None
-        stg = None
-        for tag in table.files:
-            header, part = self._load_file(files[tag], table)
-            stg = part if stg is None else stg.unionByName(part, allowMissingColumns=True)
-        self._keep_scratch(ds, table, stg, "5")
+        header, stg = self._stage(ds, table, "5")
 
         cont = self._check_start_continuity(table, header)
         if cont == "fail":
@@ -496,41 +489,39 @@ class BdeUploader:
         # frame instead of re-scanning the base by key
         carry = (sorted(set(spec.group_cols))
                  if spec is not None and spec.group_cols else None)
-        actions = M.classify_actions(cur, stg, chg, table.key, cur.columns,
-                                     unique_cols=table.unique_cols,
-                                     carry_cols=carry)
-        actions = actions.cache()
-        try:
-            stats = M.merge_stats(actions)
-            merged = M.apply_actions(cur, stg, actions, table.key)
-            prev_count = new_count = None
-            if _gated(table):
-                prev_count = self._stored_rows(table)
-                new_count = merged.count()
-            tol = M.check_tolerance(new_count, prev_count,
-                                    table.row_tol_error, table.row_tol_warning)
-            if tol == "error" and prev_count > 0:
-                return TableResult(table.name, ds.name, "5", "error", stats,
-                                   f"tolerance: {new_count} < error floor of {prev_count}")
-            if spec is not None:
-                # maintained views refresh O(changes) BEFORE the base
-                # write, behind the dataset-stamp replay guard shared
-                # with streaming_cdc_upload (operators/view_refresh.py):
-                # a crash between a view write and the base write
-                # replays this dataset on the next run (the ledger
-                # watermark advances only after the base write below),
-                # the stamp skips the already-applied view delta, and
-                # the base write completes — derived state never
-                # double-counts and never goes stale, the reference's
-                # same-transaction consistency contract met by recovery
-                # instead (sql/02-bde_control_functions.sql.in:2595-2676)
-                refresh_views(self.spark, self.store, table.name, cur, stg,
-                              actions, merged, ds.name, spec, table.key)
-            self.store.write(table.name, merged, key=table.key,
-                             dataset=ds.name, rows=new_count)
-        finally:
-            # every exit path, a failed refresh or store write included
-            actions.unpersist()
+        # the actions frame (changed keys only) feeds the stats, both
+        # apply branches and every view refresh; the apply_updates
+        # loop releases it with the dataset's other persists
+        actions = persist(M.classify_actions(
+            cur, stg, chg, table.key, cur.columns,
+            unique_cols=table.unique_cols, carry_cols=carry))
+        stats = M.merge_stats(actions)
+        merged = M.apply_actions(cur, stg, actions, table.key)
+        prev_count = new_count = None
+        if _gated(table):
+            prev_count = self._stored_rows(table)
+            new_count = merged.count()
+        tol = M.check_tolerance(new_count, prev_count,
+                                table.row_tol_error, table.row_tol_warning)
+        if tol == "error" and prev_count > 0:
+            return TableResult(table.name, ds.name, "5", "error", stats,
+                               f"tolerance: {new_count} < error floor of {prev_count}")
+        if spec is not None:
+            # maintained views refresh O(changes) BEFORE the base
+            # write, behind the dataset-stamp replay guard shared
+            # with streaming_cdc_upload (operators/view_refresh.py):
+            # a crash between a view write and the base write
+            # replays this dataset on the next run (the ledger
+            # watermark advances only after the base write below),
+            # the stamp skips the already-applied view delta, and
+            # the base write completes — derived state never
+            # double-counts and never goes stale, the reference's
+            # same-transaction consistency contract met by recovery
+            # instead (sql/02-bde_control_functions.sql.in:2595-2676)
+            refresh_views(self.spark, self.store, table.name, cur, stg,
+                          actions, merged, ds.name, spec, table.key)
+        self.store.write(table.name, merged, key=table.key,
+                         dataset=ds.name, rows=new_count)
         self._record_loaded(job, table.name, ds.name, "5", stats,
                             time.time() - t0, header.end_time or "")
         return TableResult(table.name, ds.name, "5",
@@ -703,19 +694,9 @@ class BdeUploader:
                         self.results.append(r)
                         self.ledger.heartbeat(job.id)
                 finally:
-                    # the dataset's staged reads are fully consumed once
-                    # its store writes are committed (or rolled back):
-                    # release the engine's tracked persists — the L0
-                    # staged-snapshot persist and the gz single-pass line
-                    # caches (sources/crs.py), plus the touched-group
-                    # relations (operators/merge.py) — so a many-dataset
-                    # run's cache footprint stays bounded at one dataset,
-                    # not the whole history. finally: the abort/exception
-                    # path must release too — a long-lived session that
-                    # catches the error and continues would otherwise
-                    # accumulate one leaked table-sized cache per failed
-                    # dataset (same leak class untrack() closes for the
-                    # gz error-budget raise in read_crs).
+                    # every exit path, a failed load included: a
+                    # dataset's persists are consumed once its store
+                    # writes commit or roll back
                     release_caches()
                 if ds_rolled_back:
                     # a rolled-back dataset applied NOTHING: its

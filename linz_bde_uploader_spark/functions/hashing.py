@@ -72,8 +72,3 @@ def minhash_perm(h: Column, perm_index: Column) -> Column:
     a = (F.lit(2) * perm_index + F.lit(1)).cast("bigint")
     b = (perm_index * perm_index + F.lit(7)).cast("bigint")
     return (a * h + b) % F.lit(MINHASH_PRIME)
-
-
-def sql_minhash_perm(h_expr: str, i_expr: str) -> str:
-    return (f"((CAST(2*{i_expr}+1 AS BIGINT) * {h_expr} + "
-            f"CAST({i_expr}*{i_expr}+7 AS BIGINT)) % {MINHASH_PRIME})")

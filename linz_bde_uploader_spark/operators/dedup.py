@@ -24,11 +24,15 @@ for the 100 TB path:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linz_bde_uploader_spark.cache import persist
+# re-exported: the upload benchmark (perfbench/run.py) imports it from here
+from linz_bde_uploader_spark.cache import release_caches  # noqa: F401
 from linz_bde_uploader_spark.functions.hashing import (
-    MINHASH_PRIME, hash32, hash64s, minhash_perm,
+    hash32, hash64s, minhash_perm,
 )
 
 # Default densification guard for the LSH-bucket self-join family
@@ -42,47 +46,6 @@ from linz_bde_uploader_spark.functions.hashing import (
 # value from the oracle-green capped headline entries; uncapped
 # exact all-pairs is opt-in with an explicit max_bucket_size=None.
 DEFAULT_MAX_BUCKET_SIZE = 40
-
-# relations persisted by the cache_shingles/cache_sets fast paths; a
-# long-lived session (bench reps, check_determinism double-runs, the
-# full-pipeline entry) re-invokes these operators and would otherwise
-# accumulate cached relations until LRU eviction
-_PERSISTED: list[DataFrame] = []
-
-
-def _track(df: DataFrame) -> DataFrame:
-    _PERSISTED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every relation this module persisted. Call between
-    runs in long-lived sessions (the bench/oracle harnesses do); a
-    single pipeline invocation does not need it — the caches are
-    bounded at one row per doc and die with the session."""
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped; nothing to release
-
-
-def untrack(df: DataFrame) -> None:
-    """Unpersist ONE tracked relation immediately. For failure paths
-    that persisted something they will never consume (e.g. a gz read
-    whose error budget failed): raising with the cache live would
-    leak a full cached copy per failure into a long-lived session
-    until the next engine-wide ``release_caches()``."""
-    try:
-        df.unpersist()
-    except Exception:
-        pass
-    try:
-        _PERSISTED.remove(df)
-    except ValueError:
-        pass  # already released engine-wide
-
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
@@ -138,23 +101,6 @@ def _shingle_hashes(docs: DataFrame, text_col: str, id_col: str,
         .select("id", hexpr.alias("h"))
     )
     return out.dropDuplicates(["id", "h"]) if distinct else out
-
-
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_perm: int = 16,
-                       shingle_words: int = 3) -> DataFrame:
-    """MinHash signature matrix: (id, perm, minhash).
-
-    Long-form view over the wide signature matrix (one shuffle; see
-    _minhash_wide).
-    """
-    wide = _minhash_wide(docs, text_col, id_col, num_perm, shingle_words)
-    pairs = F.array(*[
-        F.struct(F.lit(i).alias("perm"), F.col(f"m{i}").alias("minhash"))
-        for i in range(num_perm)
-    ])
-    return wide.select("id", F.explode(pairs).alias("p")) \
-               .select("id", "p.perm", "p.minhash")
 
 
 def _minhash_wide(docs: DataFrame, text_col: str, id_col: str,
@@ -269,14 +215,12 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     the star filter) and Catalyst re-executes the signature aggregate
     per branch otherwise. One row per (doc, band) — far smaller than
     the corpus; callers in long-lived sessions release it via
-    ``release_caches()``.
+    ``cache.release_caches()``.
     """
     band_hashes = lsh_band_hashes(docs, text_col, id_col, num_perm,
                                   bands, shingle_words, portable)
     if cache_index:
-        from pyspark import StorageLevel
-        band_hashes = _track(
-            band_hashes.persist(StorageLevel.MEMORY_AND_DISK))
+        band_hashes = persist(band_hashes, StorageLevel.MEMORY_AND_DISK)
     if max_bucket_size is None:
         a = band_hashes.alias("a")
         b = band_hashes.alias("b")
@@ -416,12 +360,11 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
     consumes it in the group aggregate AND the star join, and the
     64-column vote aggregate behind it is the plan's most expensive
     stage — without the persist Catalyst executes it once per branch.
-    One 16-byte row per doc; released via ``release_caches()``."""
+    One 16-byte row per doc; released via ``cache.release_caches()``."""
     seg_bits = bits // bands
     sh = simhash(docs, text_col, id_col, bits, portable=portable)
     if cache_fp:
-        from pyspark import StorageLevel
-        sh = _track(sh.persist(StorageLevel.MEMORY_AND_DISK))
+        sh = persist(sh, StorageLevel.MEMORY_AND_DISK)
     star = None
     if collapse_identical:
         groups = sh.groupBy("simhash").agg(F.min("id").alias("rep"))
@@ -524,8 +467,6 @@ def verify_pairs_jaccard(docs: DataFrame, pairs: DataFrame,
     ``size(hs)`` — the former ``distinct=True`` + ``count(*)`` form
     paid a second full exchange of the corpus-sized shingle stream
     for information the set already carries."""
-    from pyspark import StorageLevel
-
     sh = _shingle_hashes(docs, text_col, id_col, shingle_words,
                          distinct=False, portable=portable)
     sets = (sh.groupBy("id").agg(F.collect_set("h").alias("hs"))
@@ -534,7 +475,7 @@ def verify_pairs_jaccard(docs: DataFrame, pairs: DataFrame,
         # both join sides consume the aggregate and Catalyst does not
         # reuse the exchange between them (the prefix-Jaccard lesson);
         # bounded at one row per doc, so MEMORY_AND_DISK is safe
-        sets = _track(sets.persist(StorageLevel.MEMORY_AND_DISK))
+        sets = persist(sets, StorageLevel.MEMORY_AND_DISK)
     sa, sb = sets.alias("sa"), sets.alias("sb")
     inter = F.size(F.array_intersect(F.col("sa.hs"), F.col("sb.hs")))
     return (
@@ -644,11 +585,9 @@ def jaccard_pairs_prefix(docs: DataFrame, text_col: str = "text",
     the verify step reuses the same array relation on both sides of
     the candidate join.
     """
-    from pyspark import StorageLevel
-
     sh = _shingle_hashes(docs, text_col, id_col, shingle_words)
     if cache_shingles:
-        sh = _track(sh.cache())
+        sh = persist(sh)
     freq = sh.groupBy("h").agg(F.count("*").alias("df"))
     sets = (
         sh.join(freq, "h")
@@ -658,7 +597,7 @@ def jaccard_pairs_prefix(docs: DataFrame, text_col: str = "text",
         .withColumn("hs", F.transform("arr", lambda s: s["h"]))
     )
     if cache_shingles:
-        sets = _track(sets.persist(StorageLevel.MEMORY_AND_DISK))
+        sets = persist(sets, StorageLevel.MEMORY_AND_DISK)
     prefix_len = (F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1) \
         .cast("int")
     prefix = sets.select(
@@ -701,15 +640,14 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
     sh = _shingle_hashes(docs, text_col, id_col, shingle_words,
                          portable=portable)
     if cache_shingles:
-        sh = _track(sh.cache())
+        sh = persist(sh)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     if cache_shingles:
         # both denominator joins (sa/sb) broadcast this aggregate and
         # Catalyst builds it per branch; one row per doc, so the
         # persist is bounded and saves a full pass over the (cached)
         # shingle stream (r19 A/B)
-        from pyspark import StorageLevel
-        sizes = _track(sizes.persist(StorageLevel.MEMORY_AND_DISK))
+        sizes = persist(sizes, StorageLevel.MEMORY_AND_DISK)
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")))

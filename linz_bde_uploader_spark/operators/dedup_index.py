@@ -3,7 +3,7 @@ TableStore — dedup-on-ingest: classify every document of an incoming
 batch against the ALREADY-INGESTED corpus (exact content dup, MinHash
 near-dup, or new) and admit only the new ones, without ever rescanning
 the corpus. The dedup-family analog of operators/ann_index.py: the
-same build / append-delta / compact / delete / vacuum service shape,
+same build / append-delta / compact / delete service shape,
 applied to the (content-hash, LSH-band, minhash-signature) rows
 `lsh_band_hashes` + `sig_array_from_wide` document as "the persistable
 near-dup index".
@@ -97,6 +97,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from linz_bde_uploader_spark.cache import persist, release
 from linz_bde_uploader_spark.operators.dedup import (
     _minhash_wide, lsh_bands_from_wide, sig_array_from_wide)
 
@@ -257,9 +258,9 @@ def dedup_index_build(spark: SparkSession, store, docs: DataFrame,
     # a rebuild over an older index that fails part-way must not
     # leave the layout-2 stamp above the old layout's band rows
     with store.dataset_scope():
-        content = (d.groupBy(F.md5("text").alias("content_hash"))
-                   .agg(F.min("id").alias("canonical_id"))
-                   .persist(StorageLevel.MEMORY_AND_DISK))
+        content = persist(d.groupBy(F.md5("text").alias("content_hash"))
+                          .agg(F.min("id").alias("canonical_id")),
+                          StorageLevel.MEMORY_AND_DISK)
         try:
             # row count recorded in the pointer: the auto-compact
             # trigger's denominator, maintained arithmetically thereafter
@@ -273,10 +274,11 @@ def dedup_index_build(spark: SparkSession, store, docs: DataFrame,
                               # layout-1 keys forever — see _key_layout
                               "key_layout": 2})
         finally:
-            content.unpersist()
+            release(content)
         # one minhash aggregate feeds both band minima and signatures
-        wide = (_minhash_wide(d, "text", "id", num_perm, shingle_words)
-                .persist(StorageLevel.MEMORY_AND_DISK))
+        wide = persist(_minhash_wide(d, "text", "id", num_perm,
+                                     shingle_words),
+                       StorageLevel.MEMORY_AND_DISK)
         try:
             store.write(bands_t,
                         _band_rows_from_wide(wide, num_perm, bands,
@@ -286,7 +288,7 @@ def dedup_index_build(spark: SparkSession, store, docs: DataFrame,
             store.write(sigs_t, sig_array_from_wide(wide, num_perm),
                         key="id")
         finally:
-            wide.unpersist()
+            release(wide)
 
 
 def dedup_index_ingest(spark: SparkSession, store, batch: DataFrame,
@@ -316,10 +318,10 @@ def dedup_index_ingest(spark: SparkSession, store, batch: DataFrame,
     per the ann_index delete contract.
 
     The returned frame is PERSISTED (and already materialized — the
-    appends derive from it): the caller must ``.unpersist()`` it when
-    done. Returning it unpersisted would make every downstream action
-    re-run the classification joins against a batch frame that a
-    foreachBatch caller no longer owns.
+    appends derive from it): the caller frees it with
+    ``cache.release()`` when done. Returning it unpersisted would make
+    every downstream action re-run the classification joins against
+    a batch frame that a foreachBatch caller no longer owns.
 
     Only the batch shuffles: the membership and verification joins
     hit the stored tables on their clustering keys, and the appended
@@ -355,15 +357,16 @@ def dedup_index_ingest(spark: SparkSession, store, batch: DataFrame,
     tombs = _tombstones(spark, store, name)
     if tombs is not None:
         b = b.join(tombs, "id", "left_anti")
-    b = b.persist()
+    b = persist(b)
     wide = None
     verdicts = None
     try:
         bc = b.select("id", F.md5("text").alias("content_hash"))
         # one minhash aggregate per batch: band rows and signatures
         # both derive map-side from the persisted wide matrix
-        wide = (_minhash_wide(b, "text", "id", num_perm, shingle_words)
-                .persist(StorageLevel.MEMORY_AND_DISK))
+        wide = persist(_minhash_wide(b, "text", "id", num_perm,
+                                     shingle_words),
+                       StorageLevel.MEMORY_AND_DISK)
         bh = _band_rows_from_wide(wide, num_perm, bands, layout)
         bsigs = sig_array_from_wide(wide, num_perm)
 
@@ -433,7 +436,7 @@ def dedup_index_ingest(spark: SparkSession, store, batch: DataFrame,
         near = (verified.groupBy("id")
                 .agg(F.min("_cand").alias("near_of")))
 
-        verdicts = (
+        verdicts = persist(
             b.select("id")
             .join(exact, "id", "left").join(near, "id", "left")
             .select(
@@ -442,8 +445,7 @@ def dedup_index_ingest(spark: SparkSession, store, batch: DataFrame,
                        F.lit("exact_dup"))
                 .when(F.col("near_of").isNotNull(), F.lit("near_dup"))
                 .otherwise(F.lit("new")).alias("verdict"),
-                F.coalesce("exact_of", "near_of").alias("dup_of"))
-            .persist())
+                F.coalesce("exact_of", "near_of").alias("dup_of")))
         # one aggregate both MATERIALIZES the persisted verdicts and
         # yields n_new — the former count() + filtered-count() pair
         # scanned the verdict relation twice for the same information
@@ -512,15 +514,12 @@ def dedup_index_ingest(spark: SparkSession, store, batch: DataFrame,
                                 num_perm=asserted[0],
                                 bands=asserted[1],
                                 shingle_words=asserted[2])
-        return verdicts  # persisted + materialized; caller unpersists
+        return verdicts  # persisted + materialized; caller releases
     except BaseException:
-        if verdicts is not None:
-            verdicts.unpersist()
+        release(verdicts)
         raise
     finally:
-        if wide is not None:
-            wide.unpersist()
-        b.unpersist()
+        release(wide, b)
 
 
 def _maybe_auto_compact(spark: SparkSession, store, name: str,
@@ -605,12 +604,12 @@ def stream_dedup_ingest(spark: SparkSession, src_dir: str, store,
                                              if shingle_words
                                              is not None else 3),
                               id_col=id_col, text_col=text_col)
-        dedup_index_ingest(
+        release(dedup_index_ingest(
             spark, store, batch, name, num_perm=num_perm,
             bands=bands, shingle_words=shingle_words, id_col=id_col,
             text_col=text_col, near_threshold=near_threshold,
             auto_compact_ratio=auto_compact_ratio,
-            auto_compact_min_rows=auto_compact_min_rows).unpersist()
+            auto_compact_min_rows=auto_compact_min_rows))
 
     q = (stream.writeStream.foreachBatch(apply_batch)
          .option("checkpointLocation", checkpoint)
@@ -715,8 +714,8 @@ def dedup_index_compact(spark: SparkSession, store, name: str,
 
     # purge path: drop tombstoned docs' rows and rebuild the bucket
     # minima from what survives
-    sigs = (sigs.join(tombs, "id", "left_anti")
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    sigs = persist(sigs.join(tombs, "id", "left_anti"),
+                   StorageLevel.MEMORY_AND_DISK)
     try:
         store.write(bands_t,
                     _band_rows_from_sigs(sigs, num_perm, bands,
@@ -724,18 +723,18 @@ def dedup_index_compact(spark: SparkSession, store, name: str,
                     .groupBy("bkey").agg(F.min("id").alias("min_id")),
                     key="bkey")
         store.write(sigs_t, sigs, key="id")
-        content = content.join(
+        content = persist(content.join(
             tombs.select(F.col("id").alias("canonical_id")),
-            "canonical_id", "left_anti").persist()
+            "canonical_id", "left_anti"))
         try:
             n = content.count()  # O(index), once per purge-compact
             store.write(content_t, content, key="content_hash", rows=n,
                         meta=meta or None)
         finally:
-            content.unpersist()
+            release(content)
         store.write(_tomb_table(name), tombs.limit(0), rows=0)
     finally:
-        sigs.unpersist()
+        release(sigs)
     return folded
 
 
@@ -763,19 +762,3 @@ def dedup_index_delete(spark: SparkSession, store, ids: DataFrame,
     n = new.count()
     store.write(t, new, rows=n)
     return n
-
-
-def dedup_index_vacuum(spark: SparkSession, store, name: str,
-                       keep: int = 2) -> dict[str, list[int]]:
-    """Retention maintenance for the index's seven tables (C7 applied
-    to the dedup service, the ivf_index_vacuum twin): every
-    append/compact commits a new store version, so a long-running
-    ingest accretes revisions — vacuum drops all but the newest
-    ``keep`` per table (readers pinned to a dropped version fail
-    fast; keep >= 2 preserves one rollback step). Returns
-    {table: [dropped versions]}."""
-    out = {}
-    for t in (*_tables(name), _tomb_table(name)):
-        if store.exists(t):
-            out[t] = store.vacuum(t, keep=keep, spark=spark)
-    return out

@@ -34,8 +34,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from linz_bde_uploader_spark.cache import persist
 
 # Action codes, matching the reference exactly
 # (sql/02-bde_control_functions.sql.in:1750-1765):
@@ -137,8 +140,8 @@ def fallback_touched_groups(current: DataFrame, staged: DataFrame,
     actions frame. Shared by the maintain_* recompute family so the
     derivation exists once, not four times.
 
-    The result is PERSISTED (tracked; released with the engine's
-    other caches via ``dedup.release_caches``): the consumer
+    The result is PERSISTED (released with the engine's other caches
+    by ``cache.release_caches()``): the consumer
     evaluates the relation several times — the bounded inline probe
     collect, both semi-join branches when the probe overflows the
     inline threshold, and the untouched-view anti join — and without
@@ -149,10 +152,6 @@ def fallback_touched_groups(current: DataFrame, staged: DataFrame,
 
     ``del_only`` mirrors carried_touched_groups: just the groups
     that LOSE rows (maintain_hll's recompute trigger)."""
-    from pyspark import StorageLevel
-
-    from linz_bde_uploader_spark.operators.dedup import _track
-
     del_keys = F.broadcast(
         actions.filter(F.col("action").isin(
             ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
@@ -169,7 +168,7 @@ def fallback_touched_groups(current: DataFrame, staged: DataFrame,
             staged.join(ins_keys, key, "left_semi")
             .select(*group_cols)).distinct()
     return mark_selective_for_dpp(
-        _track(touched.persist(StorageLevel.MEMORY_AND_DISK)),
+        persist(touched, StorageLevel.MEMORY_AND_DISK),
         group_cols)
 
 
@@ -665,11 +664,11 @@ def maintain_extrema(current: DataFrame, staged: DataFrame,
     bootstrap / differential-test path — same result, not O(changes)).
 
     Cache note: on the fallback (non-carried) path the touched
-    relation is persisted MEMORY_AND_DISK into the engine's tracked
-    registry (see fallback_touched_groups — the returned plan is
+    relation is persisted MEMORY_AND_DISK through ``cache.persist``
+    (see fallback_touched_groups — the returned plan is
     lazy, so the persist cannot be dropped here). Long-lived
     sessions issuing repeated non-carried refreshes must call
-    ``dedup.release_caches()`` between refreshes or the persisted
+    ``cache.release_caches()`` between refreshes or the persisted
     relations accumulate; the carried path persists nothing."""
     v = F.col(value_col).cast(value_type)
     touched = carried_touched_groups(actions, group_cols)
@@ -770,8 +769,8 @@ def maintain_topk(current: DataFrame, staged: DataFrame,
     ``old_topk=None`` recomputes the untouched side from ``merged``
     directly (bootstrap / differential-test path). Cache note: the
     non-carried fallback persists its touched relation into the
-    tracked registry — long-lived sessions must
-    ``dedup.release_caches()`` between repeated non-carried
+    cache registry — long-lived sessions must
+    ``cache.release_caches()`` between repeated non-carried
     refreshes (see maintain_extrema)."""
     touched = carried_touched_groups(actions, group_cols)
     if touched is None:
@@ -951,8 +950,8 @@ def maintain_distinct(current: DataFrame, staged: DataFrame,
     views.
 
     Cache note: the non-carried fallback persists its touched
-    relation into the tracked registry — long-lived sessions must
-    ``dedup.release_caches()`` between repeated non-carried
+    relation into the cache registry — long-lived sessions must
+    ``cache.release_caches()`` between repeated non-carried
     refreshes (see maintain_extrema)."""
     touched = carried_touched_groups(actions, group_cols)
     if touched is None:

@@ -23,9 +23,11 @@
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from linz_bde_uploader_spark.cache import persist
 from linz_bde_uploader_spark.operators.dedup import DEFAULT_MAX_BUCKET_SIZE
 
 class CapDefault:
@@ -541,7 +543,7 @@ def embedding_near_pairs(corpus: DataFrame, threshold: float = 0.4,
     self-join sides, the hub rows, the members) — without it
     Catalyst re-runs the corpus scan + bucket aggregate per branch.
     One row per vector; callers in long-lived sessions release via
-    ``dedup.release_caches()``. Same knob, same reason, as
+    ``cache.release_caches()``. Same knob, same reason, as
     ``lsh_candidate_pairs(cache_index=)``."""
     if isinstance(max_bucket_size, CapDefault):
         # default-on guard (r16 verdict): an un-opinionated caller at
@@ -604,10 +606,7 @@ def embedding_near_pairs(corpus: DataFrame, threshold: float = 0.4,
             F.count("*").alias("_n"), F.min("id").alias("_hub"))
         cb = c.join(stats, "bucket")
         if cache_buckets:
-            from pyspark import StorageLevel
-
-            from linz_bde_uploader_spark.operators.dedup import _track
-            cb = _track(cb.persist(StorageLevel.MEMORY_AND_DISK))
+            cb = persist(cb, StorageLevel.MEMORY_AND_DISK)
         small = cb.filter(F.col("_n") <= max_bucket_size)
         a, b = small.alias("a"), small.alias("b")
         all_pairs = (
@@ -821,10 +820,6 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.92,
     its k-means k."""
     if centroids is None:
         centroids = seed_centroids(corpus, n_centroids, id_col, vec_col)
-    from pyspark import StorageLevel
-
-    from linz_bde_uploader_spark.operators.dedup import _track
-
     vecs = corpus.select(F.col(id_col).alias("id"),
                          _as_double(F.col(vec_col)).alias("v"))
     # groups feeds the assignment AND the membership join; asgn feeds
@@ -834,15 +829,15 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.92,
     # the corpus, while both persisted relations are one row per
     # DISTINCT vector. Costs ~0.2 s of materialization at sf0.1;
     # scale-safety over micro-bench, same trade as dedup_survivors.
-    # Harnesses release via release_caches().
-    groups = _track(vecs.groupBy("v").agg(F.min("id").alias("rep"))
-                    .persist(StorageLevel.MEMORY_AND_DISK))
-    asgn = _track(
+    # Harnesses release via cache.release_caches().
+    groups = persist(vecs.groupBy("v").agg(F.min("id").alias("rep")),
+                     StorageLevel.MEMORY_AND_DISK)
+    asgn = persist(
         ivf_assign(groups.select(F.col("rep").alias("id"), "v"),
                    centroids, "id", "v", nprobe=1)
         .select(F.col("id").alias("rep"), F.col("v"), F.col("cell"))
-        .withColumn("_nrm", _norm(F.col("v")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .withColumn("_nrm", _norm(F.col("v"))),
+        StorageLevel.MEMORY_AND_DISK)
     a, b = asgn.alias("a"), asgn.alias("b")
     near = (
         a.join(b, (F.col("a.cell") == F.col("b.cell"))

@@ -179,8 +179,8 @@ def maintain_hll(current: DataFrame, staged: DataFrame,
     functions keeping derived tables consistent in-transaction).
 
     Cache note: the non-carried fallback persists its touched
-    relation into the tracked registry — long-lived sessions must
-    ``dedup.release_caches()`` between repeated non-carried
+    relation into the cache registry — long-lived sessions must
+    ``cache.release_caches()`` between repeated non-carried
     refreshes (see merge.maintain_extrema)."""
     from linz_bde_uploader_spark.operators.merge import (
         ACTION_DELETE, ACTION_INSERT, ACTION_KEY_CHANGE, ACTION_UPDATE)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linz_bde_uploader_spark.cache import persist, release
 from linz_bde_uploader_spark.functions.hashing import hash60
 from linz_bde_uploader_spark.functions.text import (
     LANG_STOPWORDS, avg_token_length, quality_score, stopword_count,
@@ -120,7 +121,7 @@ def tf_idf(docs: DataFrame, text_col: str = "text",
                        F.explode(tokens(F.col(text_col))).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     if cache_tf:
-        tf = tf.cache()
+        tf = persist(tf)
     n_docs = docs.agg(F.count("*").alias("n_corpus"))
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
     enriched = (
@@ -204,7 +205,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 10,
                                   F.lit(sep)))
         .select("s", "freq")
     )
-    base = words.persist()
+    base = persist(words)
     base.count()
     words = base
     merges: list[tuple[str, str]] = []
@@ -233,12 +234,12 @@ def bpe_train(docs: DataFrame, n_merges: int = 10,
             words = words.withColumn(
                 "s", F.regexp_replace("s", pat, sep + a + b))
             if (rnd + 1) % persist_every == 0:
-                nxt = words.persist()
+                nxt = persist(words)
                 nxt.count()
-                base.unpersist()
+                release(base)
                 base = words = nxt
     finally:
-        base.unpersist()
+        release(base)
     return merges
 
 

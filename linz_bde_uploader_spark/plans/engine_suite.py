@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from linz_bde_uploader_spark.cache import persist
 from linz_bde_uploader_spark.functions.hashing import hash32, sql_hash32
 from linz_bde_uploader_spark.functions.timeutil import epoch_micros
 from linz_bde_uploader_spark.operators import merge as M
@@ -84,7 +85,8 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     and without the cache each branch would recompute the classify
     3-way join — two full scans of the big tables at 100 TB."""
     cur, stg, chg = cdc_frames(spark, sf_dir)
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey", ORDER_COLS).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
     return merged.select(
         F.col("o_orderkey").alias("key"), "o_totalprice", "o_orderstatus")
@@ -477,8 +479,8 @@ def q_cdc_incremental_agg(spark, sf_dir: str):
     render apart) — its sibling cdc_minmax_refresh with 6 published
     decimals drew the short straw (ORACLE.md)."""
     cur, stg, chg = cdc_frames(spark, sf_dir)
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey",
-                                 ORDER_COLS).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS))
     agg = M.maintain_aggregate(cur, stg, actions, "o_orderkey",
                                ["o_orderstatus"], "o_totalprice")
     return agg.select(
@@ -521,9 +523,9 @@ def q_cdc_minmax_refresh(spark, sf_dir: str):
     ``check_oracle --pandas`` emulation reproducing the exact
     driver red/green split (ORACLE.md)."""
     cur, stg, chg = cdc_frames(spark, sf_dir)
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey",
-                                 ORDER_COLS,
-                                 carry_cols=["o_orderstatus"]).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS,
+                                         carry_cols=["o_orderstatus"]))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
     v = F.col("o_totalprice").cast("decimal(12,2)")
     old = cur.groupBy("o_orderstatus").agg(
@@ -569,9 +571,9 @@ def q_cdc_topk_refresh(spark, sf_dir: str):
     carry-forward + touched-group recompute equals a full refresh.
     Values publish as integer cents (ORACLE.md portable types)."""
     cur, stg, chg = cdc_frames(spark, sf_dir)
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey",
-                                 ORDER_COLS,
-                                 carry_cols=["o_orderstatus"]).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS,
+                                         carry_cols=["o_orderstatus"]))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
     v = F.col("o_totalprice").cast("decimal(12,2)")
     from pyspark.sql import Window
@@ -629,9 +631,9 @@ def q_cdc_distinct_refresh(spark, sf_dir: str):
     so a hash match proves the split equals a full refresh. Published
     columns are BIGINT-only (ORACLE.md portable by construction)."""
     cur, stg, chg = cdc_frames(spark, sf_dir)
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey",
-                                 ORDER_COLS,
-                                 carry_cols=["o_orderstatus"]).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS,
+                                         carry_cols=["o_orderstatus"]))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
     old = (cur.groupBy("o_orderstatus", "o_custkey")
            .agg(F.count("*").alias("_m"))
@@ -676,8 +678,8 @@ def q_cdc_join_refresh(spark, sf_dir: str):
     portable types)."""
     cur, stg, chg = cdc_frames(spark, sf_dir)
     customer = load_table(spark, sf_dir, "customer")
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey",
-                                 ORDER_COLS).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS))
     old = (cur.join(customer,
                     cur["o_custkey"] == customer["c_custkey"], "inner")
            .select(cur["o_orderkey"], cur["o_orderstatus"],
@@ -741,8 +743,8 @@ def q_cdc_manifest_refresh(spark, sf_dir: str):
         .otherwise(F.col("n_chars"))).filter(k % 10 != 3)
     chg = docs.filter((k % 10).isin(3, 7) | (k % 5 == 0)
                       | (k % 11 == 0)).select(k.alias("key"))
-    actions = M.classify_actions(cur, stg, chg, "doc_id",
-                                 ["doc_id", "n_chars"]).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "doc_id",
+                                         ["doc_id", "n_chars"]))
 
     def project(df):
         ck = hash32(F.concat(F.lit("ck:"),
@@ -820,9 +822,9 @@ def q_cdc_hll_refresh(spark, sf_dir: str):
     split is exactly equivalent to a full refresh."""
     from linz_bde_uploader_spark.operators import sketches as SK
     cur, stg, chg = cdc_frames(spark, sf_dir)
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey",
-                                 ORDER_COLS,
-                                 carry_cols=["o_orderstatus"]).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS,
+                                         carry_cols=["o_orderstatus"]))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
     skey = F.col("o_custkey").cast("string")
     old = SK.hll_registers(cur, ["o_orderstatus"], skey)
@@ -872,8 +874,8 @@ def q_cdc_cms_refresh(spark, sf_dir: str):
     end to end."""
     from linz_bde_uploader_spark.operators import sketches as SK
     cur, stg, chg = cdc_frames(spark, sf_dir)
-    actions = M.classify_actions(cur, stg, chg, "o_orderkey",
-                                 ORDER_COLS).cache()
+    actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
+                                         ORDER_COLS))
     skey = F.col("o_custkey").cast("string")
     old = SK.cms_build(cur.select(skey.alias("tok")))
     return SK.maintain_cms(cur, stg, actions, "o_orderkey", skey, old)

@@ -12,9 +12,11 @@ Numeric portability rules (shared with engine_suite):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from linz_bde_uploader_spark.cache import persist, release
 from linz_bde_uploader_spark.functions.hashing import (
     MINHASH_PRIME, sql_hash32, sql_hash60, sql_hash64s,
 )
@@ -2565,16 +2567,13 @@ def q_docs_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source",
         F.col("source").isin(target_srcs).alias("is_target"),
         F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-    from linz_bde_uploader_spark.operators.dedup import _track
-
     # the vocabulary IS the trained LM artifact: persist it — totals
     # and the scoring join both read it, and without the persist
     # Catalyst re-runs the tokenize + vocab aggregate per consumer
     # (the harnesses release via release_caches per query)
-    counts = _track(toks.groupBy("tok").agg(
+    counts = persist(toks.groupBy("tok").agg(
         F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("n_t"),
-        F.sum(F.when(F.col("is_target"), 0).otherwise(1)).alias("n_p"))
-        .persist())
+        F.sum(F.when(F.col("is_target"), 0).otherwise(1)).alias("n_p")))
     totals = counts.agg(F.sum("n_t").alias("tt"), F.sum("n_p").alias("tp"),
                         F.count("*").alias("vv"))
     # add-one smoothing over the joint vocabulary on both sides
@@ -3666,7 +3665,6 @@ def q_docs_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-deterministic with no ordering dependency — pure integer
     arithmetic end to end."""
     from linz_bde_uploader_spark.functions.hashing import hash32
-    from linz_bde_uploader_spark.operators.dedup import _track
 
     docs = parallelize_small(load_table(spark, sf_dir, "documents"))
     # margin = sum over (doc, feat) of cnt * w(feat) = sum over token
@@ -3683,12 +3681,11 @@ def q_docs_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize+hash pass runs once, not twice (released via
     # release_caches); n comes from the histogram's own counts, not a
     # third corpus pass.
-    margins = _track(
+    margins = persist(
         docs.select(F.col("doc_id"), word)
         .select("doc_id", wm.alias("_w"))
         .groupBy("doc_id")
-        .agg(F.sum("_w").alias("margin_milli"))
-        .persist())
+        .agg(F.sum("_w").alias("margin_milli")))
     hist = margins.groupBy("margin_milli").agg(F.count("*").alias("c"))
     wcum = Window.orderBy("margin_milli") \
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4263,10 +4260,7 @@ def q_docs_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # attribution join consume it; unpersisted, Catalyst executed the
     # rule scan twice (r19; one 3-column row per doc, released by the
     # harnesses via release_caches)
-    from pyspark import StorageLevel
-
-    from linz_bde_uploader_spark.operators.dedup import _track
-    ff = _track((docs.select(
+    ff = persist(docs.select(
         "doc_id", F.md5("text").alias("h"),
         F.when(~((n >= 20) & (n <= 10000)), F.lit(1))
         .when(~((sumlen >= 3 * n) & (sumlen <= 10 * n)), F.lit(2))
@@ -4274,8 +4268,8 @@ def q_docs_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(~(alpha * 5 >= n * 4), F.lit(4))
         .when(~(sw >= 2), F.lit(5))
         .when(~F.col("lang").eqNullSafe(F.lit("en")), F.lit(6))
-        .otherwise(F.lit(0)).alias("stage_fail")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .otherwise(F.lit(0)).alias("stage_fail")),
+        StorageLevel.MEMORY_AND_DISK)
     canon = (ff.filter(F.col("stage_fail") == 0)
              .groupBy("h").agg(F.min("doc_id").alias("cid")))
     attr = (ff.join(canon, "h", "left")
@@ -4399,7 +4393,7 @@ def q_docs_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.coalesce("dup_of", F.lit(-1))
                        .cast("bigint").alias("dup_of"))
         rows, schema = out.collect(), out.schema
-        v.unpersist()  # ingest returns persisted (documented contract)
+        release(v)  # ingest returns persisted (documented contract)
         return spark.createDataFrame(rows, schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

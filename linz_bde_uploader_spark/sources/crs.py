@@ -39,9 +39,12 @@ import io
 import re
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from linz_bde_uploader_spark.cache import persist, release
 
 # Header type name -> Spark type
 # (types observed across reference fixtures + tables.conf overrides;
@@ -264,7 +267,7 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
     temp file, COPY re-reads it). A ``.gz`` file decompresses ONCE:
     the repartitioned lines are persisted, the budget count fills the
     cache, and the projection reads from it (see the inline comment;
-    release via ``dedup.release_caches()`` in long-lived sessions).
+    release via ``cache.release_caches()`` in long-lived sessions).
     ``valid_columns`` applies P1 column intersection (projection
     happens before casting, so pruned columns cost nothing).
     """
@@ -312,16 +315,11 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
             # on a corrupt file at budget 0 — the rare case, and one
             # where decompress cost was already sunk on average half
             # the stream — matching the reference's one streaming
-            # bde_copy pass (lib/LINZ/BdeUpload.pm:1146-1201). The
-            # persist is registered in the engine's tracked-cache
-            # registry; long-lived sessions release it with
-            # ``dedup.release_caches()`` like every other tracked
-            # relation (one string row per data line, spills to disk).
-            from pyspark import StorageLevel
-
-            from linz_bde_uploader_spark.operators.dedup import _track
-
-            rows = _track(rows.persist(StorageLevel.MEMORY_AND_DISK))
+            # bde_copy pass (lib/LINZ/BdeUpload.pm:1146-1201).
+            # Long-lived sessions release it with
+            # ``cache.release_caches()`` like every other persist
+            # (one string row per data line, spills to disk).
+            rows = persist(rows, StorageLevel.MEMORY_AND_DISK)
 
     if enforce_budget:
         budget = (cleanse.max_errors if cleanse else 0)
@@ -343,9 +341,7 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
                 # free it NOW, or a session that validates many files
                 # and catches CrsReadError leaks one full cached copy
                 # per rejected file until the next release_caches()
-                from linz_bde_uploader_spark.operators.dedup import untrack
-
-                untrack(rows)
+                release(rows)
             raise CrsReadError(
                 f"{path}: {count} malformed row(s) exceed "
                 f"max_errors={budget}; sample={sample[:3]!r}"

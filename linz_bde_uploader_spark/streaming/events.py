@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from linz_bde_uploader_spark.cache import persist, release
+
 
 def stream_repository(spark: SparkSession, root: str, level: int,
                       schema: T.StructType, file_tag: str = "*",
@@ -333,7 +335,7 @@ def streaming_cdc_upload(spark: SparkSession, root: str, store,
                     topk=view_topk, distinct_col=view_distinct_col)
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        batch = batch.cache()
+        batch = persist(batch)
         try:
             datasets = sorted(r["dataset"] for r in
                               batch.select("dataset").distinct().collect())
@@ -360,9 +362,8 @@ def streaming_cdc_upload(spark: SparkSession, root: str, store,
                 # groups O(changes) — same wiring as the batch driver
                 carry = (sorted(set(spec.group_cols))
                          if spec.group_cols else None)
-                actions = M.classify_actions(cur, stg, chg, key,
-                                             cur.columns,
-                                             carry_cols=carry).cache()
+                actions = persist(M.classify_actions(
+                    cur, stg, chg, key, cur.columns, carry_cols=carry))
                 merged = M.apply_actions(cur, stg, actions, key)
                 # Views refresh BEFORE the base write, each behind its
                 # dataset-stamp replay guard (see refresh_view). The
@@ -385,9 +386,9 @@ def streaming_cdc_upload(spark: SparkSession, root: str, store,
                         store.write(table_name, merged, key=key,
                                     dataset=ds)
                 finally:
-                    actions.unpersist()
+                    release(actions)
         finally:
-            batch.unpersist()
+            release(batch)
 
     q = (
         parsed.writeStream.foreachBatch(apply_batch)

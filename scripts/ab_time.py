@@ -19,7 +19,7 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
 import bench  # steal counter helpers
-from linz_bde_uploader_spark.operators.dedup import release_caches
+from linz_bde_uploader_spark.cache import release_caches
 from linz_bde_uploader_spark.plans.analytics_suite import ANALYTICS_QUERIES
 from linz_bde_uploader_spark.plans.engine_suite import ENGINE_QUERIES
 from linz_bde_uploader_spark.plans.pipeline_suite import PIPELINE_QUERIES

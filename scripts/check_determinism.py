@@ -43,7 +43,7 @@ def main():
             df = fn(spark, sf_dir)
             rows = [tuple(r) for r in df.collect()]
             hashes.append(check_oracle.table_hash(rows, df.columns))
-            from linz_bde_uploader_spark.operators.dedup import release_caches
+            from linz_bde_uploader_spark.cache import release_caches
             release_caches()  # double-runs must not accumulate persists
         if hashes[0] != hashes[1]:
             failures.append(name)

@@ -186,7 +186,7 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            from linz_bde_uploader_spark.operators.dedup import release_caches
+            from linz_bde_uploader_spark.cache import release_caches
             release_caches()  # per-query persists; 89 queries, one session
         except Exception as e:
             failures.append(name)

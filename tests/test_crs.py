@@ -307,7 +307,7 @@ def test_read_gzip_budget_single_pass(spark, tmp_path):
     decompress total, like the reference's one streaming bde_copy
     pass). The budget itself still enforces on gz — the trade is
     full-file counting instead of limit(1) fail-fast there."""
-    from linz_bde_uploader_spark.operators.dedup import release_caches
+    from linz_bde_uploader_spark.cache import release_caches
 
     gz = write_crs(str(tmp_path / "ok.crs.gz"), PAB1_L0, gz=True)
     df = read_crs(spark, gz)
@@ -318,7 +318,7 @@ def test_read_gzip_budget_single_pass(spark, tmp_path):
     # must NOT leak its just-persisted line cache into the registry
     # (a validating session catching CrsReadError would otherwise
     # accumulate one full cached file copy per rejected file)
-    from linz_bde_uploader_spark.operators.dedup import _PERSISTED
+    from linz_bde_uploader_spark.cache import _PERSISTED
 
     n_before_fail = len(_PERSISTED)
     bad = PAB1_L0 + "1|2|3|\n"

@@ -964,12 +964,9 @@ def test_exception_path_releases_tracked_caches(spark, env):
     snapshot is persisted (tracked) BEFORE the store write; a write
     that raises mid-dataset used to leak that table-sized cache into
     a long-lived session that catches the error and continues — the
-    same leak class untrack() closes for the gz error-budget raise
-    in read_crs."""
-    from linz_bde_uploader_spark.operators.dedup import (
-        _PERSISTED,
-        release_caches,
-    )
+    same leak class cache.release() closes for the gz error-budget
+    raise in read_crs."""
+    from linz_bde_uploader_spark.cache import _PERSISTED, release_caches
 
     up, store, ledger = env
     # start from a clean tracker (r18 advice): a persist leaked by an
@@ -998,7 +995,7 @@ def test_failed_level5_releases_actions_cache(spark, tmp_path,
     CacheManager of a long-lived session that catches the error and
     continues."""
     from linz_bde_uploader_spark import driver as D
-    from linz_bde_uploader_spark.operators.dedup import release_caches
+    from linz_bde_uploader_spark.cache import release_caches
     from linz_bde_uploader_spark.operators.view_refresh import ViewSpec
 
     repo = BdeRepository(write_repository(str(tmp_path / "repo")))

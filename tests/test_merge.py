@@ -487,5 +487,5 @@ def test_fallback_touched_derivation_cached_once(spark):
                               merged, old_extrema=old)
     plan2 = out2._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan2
-    from linz_bde_uploader_spark.operators.dedup import release_caches
+    from linz_bde_uploader_spark.cache import release_caches
     release_caches()

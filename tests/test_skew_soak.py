@@ -381,7 +381,7 @@ def test_embedding_cap_bounds_densified_bucket(spark):
     assert sorted(map(tuple, loose.collect())) \
         == sorted(map(tuple, full.collect()))
     # cache_buckets is a pure plan knob: identical results
-    from linz_bde_uploader_spark.operators.dedup import release_caches
+    from linz_bde_uploader_spark.cache import release_caches
     cached = embedding_near_pairs(emb, threshold=0.4,
                                   max_bucket_size=30,
                                   cache_buckets=True)

@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from linz_bde_uploader_spark.cache import release_caches
 from linz_bde_uploader_spark.plans.tables import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -108,8 +109,18 @@ def _norm(rows, cols):
 def test_query_matches_oracle(spark, duck, name):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    # start clean: an entry an earlier query left with the same plan
+    # would absorb this query's persist and hide it from the count
+    release_caches()
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache_manager.numCachedEntries()
     sdf = qs[name](spark, SF_DIR)
     srows = [tuple(r) for r in sdf.collect()]
+    # every persist the query made is registered: the harnesses'
+    # between-reps release leaves the CacheManager as it found it
+    release_caches()
+    assert cache_manager.numCachedEntries() == n_cached
     cur = duck.execute(oracles[name])
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()
