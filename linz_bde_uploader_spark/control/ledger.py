@@ -12,6 +12,17 @@ file per table (`upl_id_lock`,
 sql/01-bde_control_tables.sql:120-128; claim/steal
 sql/02-bde_control_functions.sql.in:539-760), heartbeat + TTL expiry
 (lock_expiry_hours, conf/linz_bde_uploader.conf:124).
+
+Writes: every mutating method runs inside ``Ledger.batch()``, which
+takes the cross-process flock, reloads the state and saves it once on
+exit. ``batch()`` is re-entrant per thread, so calls nested in an
+outer ``with ledger.batch():`` share that one flock, reload and save
+— the JSON analog of running them in one PostgreSQL transaction
+(the reference's dataset transaction, lib/LINZ/BdeDatabase.pm:476-492).
+A block that raises saves nothing and drops its in-memory changes.
+Each save is durable before it returns: the temp file is fsync'd
+before the rename over ``ledger.json`` and the directory after it, so
+a power loss leaves the old or the new ledger, never a torn one.
 """
 
 from __future__ import annotations
@@ -19,6 +30,7 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import threading
 import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
@@ -77,6 +89,7 @@ class Ledger:
         os.makedirs(root, exist_ok=True)
         self._path = os.path.join(root, "ledger.json")
         self._state = self._load()
+        self._local = threading.local()  # per-thread batch depth
 
     def _load(self) -> dict:
         from linz_bde_uploader_spark.control.migrations import (
@@ -99,25 +112,49 @@ class Ledger:
         tmp = self._path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(self._state, fh, indent=1, default=str)
+            # content durable before the rename, the rename durable
+            # before returning (TableStore.write's pointer discipline)
+            fh.flush()
+            os.fsync(fh.fileno())
         os.replace(tmp, self._path)  # atomic commit
+        dfd = os.open(self.root, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
 
     @contextmanager
-    def _exclusive(self):
+    def batch(self):
         """Cross-process read-modify-write: OS file lock + state
         reload, so two concurrent drivers can't both pass the job gate
         or clobber each other's stats (the reference gets this from
-        PostgreSQL row locks; a JSON file needs flock)."""
-        with open(os.path.join(self.root, ".ledger.lock"), "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            self._state = self._load()
-            yield
-            self._save()
+        PostgreSQL row locks; a JSON file needs flock). Re-entrant per
+        thread: an inner ``batch()`` joins the outer one, and only the
+        outermost exit saves. Another thread's batch waits on the
+        flock."""
+        depth = getattr(self._local, "depth", 0)
+        self._local.depth = depth + 1
+        try:
+            if depth:
+                yield
+                return
+            with open(os.path.join(self.root, ".ledger.lock"), "w") as lk:
+                fcntl.flock(lk, fcntl.LOCK_EX)
+                self._state = self._load()
+                try:
+                    yield
+                except BaseException:
+                    self._state = self._load()  # drop unsaved changes
+                    raise
+                self._save()
+        finally:
+            self._local.depth = depth
 
     # --- jobs (C1) ---
     def create_job(self, allow_concurrent: bool = False) -> UploadJob:
         """bde_CreateUpload (sql/02-bde_control_functions.sql.in:270-302):
         refuse when another job is active unless allowed."""
-        with self._exclusive():
+        with self.batch():
             if not allow_concurrent and self.any_active():
                 raise RuntimeError("another upload job is already active")
             jid = self._state["next_job_id"]
@@ -130,7 +167,7 @@ class Ledger:
     def finish_job(self, job_id: int, ok: bool = True) -> None:
         """bde_FinishUpload: status C/E + release locks
         (sql/02-bde_control_functions.sql.in:308-410)."""
-        with self._exclusive():
+        with self.batch():
             for j in self._state["jobs"]:
                 if j["id"] == job_id:
                     j["status"] = STATUS_COMPLETED if ok else STATUS_ERROR
@@ -148,7 +185,7 @@ class Ledger:
                    for j in self._state["jobs"])
 
     def heartbeat(self, job_id: int) -> None:
-        with self._exclusive():
+        with self.batch():
             for j in self._state["jobs"]:
                 if j["id"] == job_id:
                     j["end_time"] = time.time()
@@ -157,7 +194,7 @@ class Ledger:
         """C3: expire jobs with stale heartbeats, freeing their locks."""
         cutoff = time.time() - self.lock_expiry_hours * 3600
         dead = []
-        with self._exclusive():
+        with self.batch():
             for j in self._state["jobs"]:
                 if j["status"] == STATUS_ACTIVE and j["end_time"] <= cutoff:
                     j["status"] = STATUS_ERROR
@@ -172,7 +209,7 @@ class Ledger:
         their stats) older than N days, keeping each table's
         last-upload reference."""
         cutoff = time.time() - older_than_days * 86400
-        with self._exclusive():
+        with self.batch():
             keep_ids = {t.get("last_upload_id")
                         for t in self._state["tables"].values()}
             before = len(self._state["jobs"])
@@ -194,7 +231,7 @@ class Ledger:
     def acquire_lock(self, name: str, job_id: int, steal: bool = False) -> bool:
         """C2: advisory per-table lock claim/steal
         (sql/02-bde_control_functions.sql.in:539-644)."""
-        with self._exclusive():
+        with self.batch():
             t = self.table(name)
             holder = t.get("upl_id_lock")
             if holder is not None and holder != job_id and not steal:
@@ -203,7 +240,7 @@ class Ledger:
         return True
 
     def release_lock(self, name: str, job_id: int) -> None:
-        with self._exclusive():
+        with self.batch():
             t = self.table(name)
             if t.get("upl_id_lock") == job_id:
                 t["upl_id_lock"] = None
@@ -214,26 +251,22 @@ class Ledger:
         """C6: _bde_RecordDatasetLoaded
         (sql/02-bde_control_functions.sql.in:975-1071) — update
         watermarks + append stats row."""
-        with self._exclusive():
-            self._record_dataset_loaded(job_id, table_name, dataset, level,
-                                        stats, duration, details)
-
-    def _record_dataset_loaded(self, job_id, table_name, dataset, level,
-                               stats, duration=0.0, details=""):
-        t = self.table(table_name)
-        t["last_upload_dataset"] = dataset
-        t["last_upload_type"] = level
-        t["last_upload_time"] = time.time()
-        t["last_upload_id"] = job_id
-        t["last_upload_details"] = details
-        if level == "0":
-            t["last_level0_dataset"] = dataset
-        self._state["stats"].append(asdict(UploadStats(
-            upl_id=job_id, table_name=table_name, dataset=dataset,
-            ninsert=getattr(stats, "ninsert", 0), nupdate=getattr(stats, "nupdate", 0),
-            nnullupdate=getattr(stats, "nnullupdate", 0),
-            ndelete=getattr(stats, "ndelete", 0), duration=duration,
-        )))
+        with self.batch():
+            t = self.table(table_name)
+            t["last_upload_dataset"] = dataset
+            t["last_upload_type"] = level
+            t["last_upload_time"] = time.time()
+            t["last_upload_id"] = job_id
+            t["last_upload_details"] = details
+            if level == "0":
+                t["last_level0_dataset"] = dataset
+            self._state["stats"].append(asdict(UploadStats(
+                upl_id=job_id, table_name=table_name, dataset=dataset,
+                ninsert=getattr(stats, "ninsert", 0),
+                nupdate=getattr(stats, "nupdate", 0),
+                nnullupdate=getattr(stats, "nnullupdate", 0),
+                ndelete=getattr(stats, "ndelete", 0), duration=duration,
+            )))
 
     def tables_affected(self, job_id: int, tables: list[str], test: str = "loaded") -> bool:
         """X2 predicate evaluator: bde_TablesAffected

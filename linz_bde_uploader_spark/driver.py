@@ -121,7 +121,7 @@ class UploadConfig:
     # independent job, so N driver threads keep the cluster busy while
     # small tables' planning overhead overlaps big tables' execution.
     # Ledger ops stay correct: every mutation is serialized by the
-    # flock in Ledger._exclusive. 1 = reference-faithful sequential.
+    # flock in Ledger.batch. 1 = reference-faithful sequential.
     parallel_tables: int = 1
 
 
@@ -159,7 +159,8 @@ class BdeUploader:
         self.results: list[TableResult] = []
         # deferred ledger records for the dataset-transaction mode:
         # watermarks/stats must not advance for a dataset that rolls
-        # back, so records buffer here and flush after commit
+        # back, so records buffer here and flush after commit, in the
+        # dataset's one closing ledger write
         self._pending_records: list[tuple] | None = None
         import threading as _threading
         self._pending_lock = _threading.Lock()
@@ -597,6 +598,15 @@ class BdeUploader:
                 self._run_hooks("start_dataset", ds.name, lvl, job.id)
                 self._run_sql_hooks("dataset_start", job.id,
                                     level0_ran=level0_ran)
+                # the dataset's ledger traffic is two writes whatever
+                # its table count: one claims every runnable table's
+                # lock, one (in the finally) flushes the committed
+                # records, releases the locks and heartbeats — the
+                # reference runs them in one dataset transaction
+                # (lib/LINZ/BdeDatabase.pm:476-492)
+                runnable: list[TableDef] = []
+                claimed: set[str] = set()
+                pending: list[tuple] = []
                 try:
                     changes = changed = None
                     if lvl == "5":
@@ -605,7 +615,6 @@ class BdeUploader:
                             raise RuntimeError("no l5_change_table configured")
                         _, changes = self._load_file(ds.files()[chg_def.files[0]], chg_def)
                         changed = _changed_tables(changes)
-                    runnable = []
                     for t in tabs:
                         if t.name in failed_tables:
                             # a failed increment must not be skipped over:
@@ -618,23 +627,25 @@ class BdeUploader:
                                 message="earlier dataset failed for this table"))
                             continue
                         runnable.append(t)
+                    if runnable:
+                        with self.ledger.batch():
+                            claimed = {
+                                t.name for t in runnable
+                                if self.ledger.acquire_lock(
+                                    t.name, job.id,
+                                    steal=self.config.override_locks)}
 
                     def run_one(t, _ds=ds, _lvl=lvl, _chg=changes,
                                 _changed=changed):
-                        if not self.ledger.acquire_lock(
-                                t.name, job.id,
-                                steal=self.config.override_locks):
+                        if t.name not in claimed:
                             return TableResult(
                                 t.name, _ds.name, _lvl, "skipped",
                                 message="locked")
-                        try:
-                            if _lvl == "0":
-                                return self.upload_table_level0(
-                                    job, _ds, t, incremental=full_incremental)
-                            return self.upload_table_level5(
-                                job, _ds, t, _chg, _changed)
-                        finally:
-                            self.ledger.release_lock(t.name, job.id)
+                        if _lvl == "0":
+                            return self.upload_table_level0(
+                                job, _ds, t, incremental=full_incremental)
+                        return self.upload_table_level5(
+                            job, _ds, t, _chg, _changed)
 
                     nthreads = max(1, int(self.config.parallel_tables))
                     use_tx = self.config.use_dataset_transaction
@@ -661,7 +672,7 @@ class BdeUploader:
                         raise
                     ds_rolled_back = False
                     if use_tx:
-                        pending, self._pending_records = \
+                        records, self._pending_records = \
                             self._pending_records, None
                         if any(r.status == "error" for r in batch):
                             ds_rolled_back = True
@@ -682,22 +693,31 @@ class BdeUploader:
                                 failed_tables.add(r.table)
                         else:
                             self.store.commit_dataset()
-                            for rec in pending:
-                                self.ledger.record_dataset_loaded(
-                                    rec[0], rec[1], rec[2], rec[3], rec[4],
-                                    duration=rec[5], details=rec[6])
+                            pending = records
                     for r in batch:
                         if (r.status == "error"
                                 or (r.status == "skipped"
                                     and r.message == "locked")):
                             failed_tables.add(r.table)  # leapfrog hazard
                         self.results.append(r)
-                        self.ledger.heartbeat(job.id)
                 finally:
                     # every exit path, a failed load included: a
                     # dataset's persists are consumed once its store
-                    # writes commit or roll back
+                    # writes commit or roll back, and its claimed locks
+                    # are released (a caller-owned job never reaches
+                    # finish_job's release). Only a committed dataset's
+                    # records land, before the post-level0 functions
+                    # and dataset_end SQL below read the ledger.
                     release_caches()
+                    if runnable:
+                        with self.ledger.batch():
+                            for rec in pending:
+                                self.ledger.record_dataset_loaded(
+                                    rec[0], rec[1], rec[2], rec[3], rec[4],
+                                    duration=rec[5], details=rec[6])
+                            for name in claimed:
+                                self.ledger.release_lock(name, job.id)
+                            self.ledger.heartbeat(job.id)
                 if ds_rolled_back:
                     # a rolled-back dataset applied NOTHING: its
                     # post-level0 functions, finish_dataset hooks, and

@@ -187,6 +187,127 @@ def test_ledger_zombies(tmp_path):
     assert led.table("t1")["upl_id_lock"] is None
 
 
+def test_ledger_save_fsyncs_before_replace(tmp_path, monkeypatch):
+    """Power-loss durability of the ledger: the new ``ledger.json``
+    content is fsync'd before the rename over the old file, and the
+    control directory after it — else a crash can leave a torn
+    ledger that every later run fails to parse. Recorded via a
+    tracing os.fsync/os.replace (fd resolved through /proc/self/fd),
+    as in test_dataset_commit_fsyncs_data_before_manifest."""
+    import os
+
+    root = str(tmp_path / "ctl")
+    led = Ledger(root)
+    events: list[tuple[str, str]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def tracing_fsync(fd):
+        try:
+            events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        except OSError:
+            events.append(("fsync", "?"))
+        real_fsync(fd)
+
+    def tracing_replace(src, dst):
+        events.append(("replace", str(dst)))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", tracing_fsync)
+    monkeypatch.setattr(os, "replace", tracing_replace)
+    led.create_job()
+
+    ledger_json = os.path.join(root, "ledger.json")
+    replaced = events.index(("replace", ledger_json))
+    assert ("fsync", ledger_json + ".tmp") in events[:replaced], events
+    assert ("fsync", os.path.realpath(root)) in events[replaced + 1:], \
+        events
+    assert Ledger(root).any_active()
+
+
+def test_ledger_batch_saves_once(tmp_path, monkeypatch):
+    """Calls nested in ``Ledger.batch()`` share one flock, reload and
+    save at the outermost exit; a block that raises saves nothing and
+    leaves no unsaved change in memory."""
+    root = str(tmp_path / "ctl")
+    led = Ledger(root)
+    job = led.create_job()
+    saves = []
+    real_save = Ledger._save
+
+    def counting_save(self):
+        saves.append(1)
+        real_save(self)
+
+    monkeypatch.setattr(Ledger, "_save", counting_save)
+
+    class S:
+        ninsert, nupdate, nnullupdate, ndelete = 1, 0, 0, 0
+
+    with led.batch():
+        assert led.acquire_lock("t1", job.id)
+        assert led.acquire_lock("t2", job.id)
+        led.record_dataset_loaded(job.id, "t1", "20160601171200", "5", S())
+        with led.batch():
+            led.release_lock("t2", job.id)
+        led.heartbeat(job.id)
+        assert saves == []
+    assert saves == [1]
+    other = Ledger(root)
+    assert other.table("t1")["upl_id_lock"] == job.id
+    assert other.table("t2")["upl_id_lock"] is None
+    assert other.table("t1")["last_upload_dataset"] == "20160601171200"
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with led.batch():
+            led.release_lock("t1", job.id)
+            raise RuntimeError("boom")
+    assert saves == [1]
+    assert led.table("t1")["upl_id_lock"] == job.id
+    assert Ledger(root).table("t1")["upl_id_lock"] == job.id
+
+
+def test_ledger_batch_threads_no_lost_update(tmp_path):
+    """``batch()`` nests per thread, not per ledger: threads sharing
+    one Ledger each take the flock for their own outermost batch, so
+    no thread's record joins (and is lost with) another's save."""
+    import sys
+    import threading
+
+    root = str(tmp_path / "ctl")
+    led = Ledger(root)
+    job = led.create_job()
+
+    class S:
+        ninsert, nupdate, nnullupdate, ndelete = 1, 0, 0, 0
+
+    def work(i):
+        for n in range(3):
+            with led.batch():
+                led.record_dataset_loaded(job.id, f"t{i}", f"d{n}", "5", S())
+                with led.batch():
+                    led.record_dataset_loaded(job.id, f"u{i}", f"d{n}", "5",
+                                              S())
+                led.heartbeat(job.id)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    rows = Ledger(root).stats_rows()
+    assert len(rows) == 8 * 3 * 2
+    assert {(r["table_name"], r["dataset"]) for r in rows} == {
+        (f"{p}{i}", f"d{n}") for p in "tu" for i in range(8)
+        for n in range(3)}
+
+
 def test_store_versioned_snapshots(spark, tmp_path):
     store = TableStore(str(tmp_path / "store"), n_buckets=2)
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])

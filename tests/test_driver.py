@@ -1171,3 +1171,134 @@ TABLE crs_other key=audit_id files pab1
     assert store.current_version("crs_other") == v_other
     assert ledger.table("crs_other")["last_upload_dataset"] == \
         "20160601171200"
+
+
+TWO_TABLES_CONF = TABLES_CONF + """
+TABLE crs_parcel_bndry2 key=audit_id files pab1
+"""
+
+
+def _two_table_uploader(spark, tmp_path, second_l5=False, **cfg):
+    repo = BdeRepository(write_repository(str(tmp_path / "repo"),
+                                          second_l5=second_l5))
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    ledger = Ledger(str(tmp_path / "ctl"))
+    up = BdeUploader(spark, repo, store, ledger,
+                     parse_tables_conf(TWO_TABLES_CONF),
+                     config=UploadConfig(**cfg))
+    return up, store, ledger
+
+
+@pytest.mark.parametrize("use_tx,writes", [(True, 4), (False, 6)])
+def test_level5_dataset_ledger_writes(spark, tmp_path, monkeypatch,
+                                      use_tx, writes):
+    """A dataset costs two ledger writes whatever its table count: one
+    claims every table's lock, one flushes the records, releases the
+    locks and heartbeats. With job create and finish, a two-table
+    level-5 job saves the ledger 4 times under a dataset transaction;
+    per-table commits add one record write per table (n + 4)."""
+    up, store, ledger = _two_table_uploader(
+        spark, tmp_path, use_dataset_transaction=use_tx)
+    up.apply_updates(level0=True)
+    saves = []
+    real_save = Ledger._save
+
+    def counting_save(self):
+        saves.append(1)
+        real_save(self)
+
+    monkeypatch.setattr(Ledger, "_save", counting_save)
+    r = up.apply_updates(level5=True)
+    monkeypatch.undo()
+    assert [x.status for x in r] == ["loaded", "loaded"]
+    assert len(saves) == writes
+    led = Ledger(str(tmp_path / "ctl"))
+    assert [(s["table_name"], s["dataset"]) for s in led.stats_rows()
+            if s["dataset"] == "20160601171200"] == [
+        ("crs_parcel_bndry", "20160601171200"),
+        ("crs_parcel_bndry2", "20160601171200")]
+    assert all(t["upl_id_lock"] is None for t in led._state["tables"].values())
+    assert not led.any_active()
+
+
+def test_locked_table_skipped_and_bypassed(spark, tmp_path):
+    """A table whose lock another job holds is skipped as ``locked``
+    and bypassed in the run's later datasets; its sibling loads both.
+    Afterwards the foreign lock is still the other job's, and none of
+    ours is left held."""
+    up, store, ledger = _two_table_uploader(spark, tmp_path,
+                                            second_l5=True)
+    up.apply_updates(level0=True)
+    job = ledger.create_job()
+    other = ledger.create_job(allow_concurrent=True)
+    assert ledger.acquire_lock("crs_parcel_bndry2", other.id)
+
+    results = up.apply_updates(level5=True, job=job)
+    got = {(r.table, r.dataset): (r.status, r.message) for r in results}
+    d1, d2 = "20160601171200", "20160601180000"
+    assert got[("crs_parcel_bndry", d1)][0] == "loaded"
+    assert got[("crs_parcel_bndry", d2)][0] == "loaded"
+    assert got[("crs_parcel_bndry2", d1)] == ("skipped", "locked")
+    assert got[("crs_parcel_bndry2", d2)] == (
+        "skipped", "earlier dataset failed for this table")
+
+    led = Ledger(str(tmp_path / "ctl"))
+    assert led.table("crs_parcel_bndry2")["upl_id_lock"] == other.id
+    assert led.table("crs_parcel_bndry")["upl_id_lock"] is None
+    assert led.table("crs_parcel_bndry")["last_upload_dataset"] == d2
+    assert led.table("crs_parcel_bndry2")["last_upload_dataset"] == \
+        "20160601000000"
+
+
+def test_raising_table_releases_every_claimed_lock(spark, tmp_path):
+    """A load that raises leaves none of the dataset's claimed locks
+    held — also for a caller-owned job, whose locks finish_job never
+    releases: the first table's write raises before the second runs."""
+    up, store, ledger = _two_table_uploader(spark, tmp_path)
+    job = ledger.create_job()
+
+    def boom(*a, **k):
+        raise RuntimeError("disk full")
+
+    store.write = boom
+    with pytest.raises(RuntimeError, match="disk full"):
+        up.apply_updates(level0=True, job=job)
+    led = Ledger(str(tmp_path / "ctl"))
+    assert [n for n, t in led._state["tables"].items()
+            if t["upl_id_lock"] == job.id] == []
+    assert led.any_active()  # the caller still owns the job
+    assert led.stats_rows() == []
+
+
+def test_dataset_transaction_two_level5_datasets(spark, tmp_path):
+    """Two level-5 datasets in one run under a dataset transaction:
+    both stats rows land in dataset order and the watermark ends at
+    the second. The first dataset's deferred records are written
+    before the second dataset's continuity check reads them: against
+    the level-0 END the second file's START gap (0.46 h) exceeds the
+    fail tolerance, against the first dataset's END it is zero."""
+    repo = BdeRepository(write_repository(str(tmp_path / "repo"),
+                                          second_l5=True))
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    ledger = Ledger(str(tmp_path / "ctl"))
+    cfg = UploadConfig(use_dataset_transaction=True,
+                       level5_starttime_fail_tolerance=0.1)
+    up = BdeUploader(spark, repo, store, ledger,
+                     parse_tables_conf(TABLES_CONF), config=cfg)
+    up.apply_updates(level0=True)
+    r5 = up.apply_updates(level5=True)
+    assert [(r.dataset, r.status) for r in r5] == [
+        ("20160601171200", "loaded"), ("20160601180000", "loaded")]
+
+    led = Ledger(str(tmp_path / "ctl"))
+    l5 = [s for s in led.stats_rows() if s["dataset"] != "20160601000000"]
+    assert [s["dataset"] for s in l5] == ["20160601171200",
+                                          "20160601180000"]
+    assert [(s["ninsert"], s["nupdate"], s["ndelete"]) for s in l5] == [
+        (3, 2, 1), (1, 1, 1)]
+    t = led.table("crs_parcel_bndry")
+    assert t["last_upload_dataset"] == "20160601180000"
+    assert t["last_upload_details"] == "2016-06-01 18:00:00"
+    rows = {x.audit_id: x.sequence
+            for x in store.read(spark, "crs_parcel_bndry").collect()}
+    assert rows == {100: 3, 300: 40, 500: 6, 80401148: 10, 80401149: 20}
