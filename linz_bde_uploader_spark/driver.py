@@ -13,6 +13,12 @@ driver sequences datasets/tables exactly like the reference
 (lib/LINZ/BdeUpload.pm:729,787). Dataset atomicity (C4) comes from the
 store's snapshot-pointer commit: nothing is visible until the pointer
 flips, and a failed dataset simply never commits.
+
+A level-5 load of a table with no maintained view runs one Spark
+action, its store write: the merge is one plan
+(``merge.merge_tagged``), the I/U/0/D stats and the gated row count
+are observed in the write, and the row-count tolerance verdict runs
+after the data lands and before the pointer is staged or flipped.
 """
 
 from __future__ import annotations
@@ -46,6 +52,23 @@ def _gated(table: TableDef) -> bool:
     """Whether ``check_tolerance`` reads the row counts of ``table``'s
     loads (it returns "ok" for a table with no row_tol)."""
     return table.row_tol_error is not None or table.row_tol_warning is not None
+
+
+def _tolerance(table: TableDef, new_count: int | None,
+               prev_count: int | None) -> tuple[str, str | None]:
+    """``(verdict, error message)`` of the A7 row-count gate; the
+    message is None unless the load must not commit (an ``error``
+    verdict against a non-empty previous version)."""
+    tol = M.check_tolerance(new_count, prev_count,
+                            table.row_tol_error, table.row_tol_warning)
+    if tol == "error" and prev_count > 0:
+        return tol, f"tolerance: {new_count} < error floor of {prev_count}"
+    return tol, None
+
+
+class _Rejected(Exception):
+    """A tolerance ``error`` raised by the store write's verdict hook:
+    the table's pointer is neither staged nor flipped."""
 
 
 def _changed_tables(changes) -> set[str]:
@@ -437,11 +460,10 @@ class BdeUploader:
             stats = M.MergeStats(ninsert=new_count)
             new = M.level0_replace(stg)  # identity: reads stg's cache
 
-        tol = M.check_tolerance(new_count, prev_count,
-                                table.row_tol_error, table.row_tol_warning)
-        if tol == "error" and prev_count > 0:
+        tol, error = _tolerance(table, new_count, prev_count)
+        if error:
             return TableResult(table.name, ds.name, "0", "error", stats,
-                               f"tolerance: {new_count} < error floor of {prev_count}")
+                               error)
         spec = self._views.get(table.name)
         if spec is not None:
             # snapshot semantics: L0 replaces the base wholesale, so
@@ -473,7 +495,6 @@ class BdeUploader:
             return TableResult(table.name, ds.name, "5", "error",
                                message="start-time continuity gap exceeds fail tolerance")
 
-        cur = self.store.read(self.spark, table.name)
         # early-exit if this table has no changed keys (reference :1713)
         if table.name.lower() not in changed_tables:
             self._record_loaded(job, table.name, ds.name, "5",
@@ -481,52 +502,88 @@ class BdeUploader:
                                 header.end_time or "")
             return TableResult(table.name, ds.name, "5", "loaded", M.MergeStats())
 
+        cur = self.store.read(self.spark, table.name)
         chg = M.prepare_change_table(changes, table.name)
         chg = M.fix_key_swaps(stg, cur, chg, table.key, table.unique_cols)
+        prev_count = self._stored_rows(table) if _gated(table) else None
         spec = self._views.get(table.name)
+        if spec is None:
+            return self._write_level5(job, ds, table, header, t0,
+                                      cur, stg, chg, prev_count)
         # carry the view group columns through classify (free — the
         # classify join holds both rows) so every partial-refresh
         # view derives its touched groups O(changes) from the actions
         # frame instead of re-scanning the base by key
-        carry = (sorted(set(spec.group_cols))
-                 if spec is not None and spec.group_cols else None)
-        # the actions frame (changed keys only) feeds the stats, both
-        # apply branches and every view refresh; the apply_updates
-        # loop releases it with the dataset's other persists
+        carry = sorted(set(spec.group_cols)) if spec.group_cols else None
+        # with a view, the actions frame (changed keys only) feeds the
+        # stats, both apply branches and every view refresh, so it is
+        # persisted; the apply_updates loop releases it with the
+        # dataset's other persists
         actions = persist(M.classify_actions(
             cur, stg, chg, table.key, cur.columns,
             unique_cols=table.unique_cols, carry_cols=carry))
         stats = M.merge_stats(actions)
         merged = M.apply_actions(cur, stg, actions, table.key)
-        prev_count = new_count = None
-        if _gated(table):
-            prev_count = self._stored_rows(table)
-            new_count = merged.count()
-        tol = M.check_tolerance(new_count, prev_count,
-                                table.row_tol_error, table.row_tol_warning)
-        if tol == "error" and prev_count > 0:
+        new_count = merged.count() if prev_count is not None else None
+        tol, error = _tolerance(table, new_count, prev_count)
+        if error:
             return TableResult(table.name, ds.name, "5", "error", stats,
-                               f"tolerance: {new_count} < error floor of {prev_count}")
-        if spec is not None:
-            # maintained views refresh O(changes) BEFORE the base
-            # write, behind the dataset-stamp replay guard shared
-            # with streaming_cdc_upload (operators/view_refresh.py):
-            # a crash between a view write and the base write
-            # replays this dataset on the next run (the ledger
-            # watermark advances only after the base write below),
-            # the stamp skips the already-applied view delta, and
-            # the base write completes — derived state never
-            # double-counts and never goes stale, the reference's
-            # same-transaction consistency contract met by recovery
-            # instead (sql/02-bde_control_functions.sql.in:2595-2676)
-            refresh_views(self.spark, self.store, table.name, cur, stg,
-                          actions, merged, ds.name, spec, table.key)
+                               error)
+        # maintained views refresh O(changes) BEFORE the base write,
+        # behind the dataset-stamp replay guard shared with
+        # streaming_cdc_upload (operators/view_refresh.py): a crash
+        # between a view write and the base write replays this
+        # dataset on the next run (the ledger watermark advances only
+        # after the base write below), the stamp skips the
+        # already-applied view delta, and the base write completes —
+        # derived state never double-counts and never goes stale, the
+        # reference's same-transaction consistency contract met by
+        # recovery instead (sql/02-bde_control_functions.sql.in:2595-2676)
+        refresh_views(self.spark, self.store, table.name, cur, stg,
+                      actions, merged, ds.name, spec, table.key)
         self.store.write(table.name, merged, key=table.key,
                          dataset=ds.name, rows=new_count)
         self._record_loaded(job, table.name, ds.name, "5", stats,
                             time.time() - t0, header.end_time or "")
         return TableResult(table.name, ds.name, "5",
                            "warning" if tol == "warning" else "loaded", stats)
+
+    def _write_level5(self, job, ds: Dataset, table: TableDef, header,
+                      t0: float, cur, stg, chg,
+                      prev_count: int | None) -> TableResult:
+        """The level-5 merge of a table with no maintained view, whose
+        store write is its only Spark action: ``merge_tagged`` builds
+        classify and apply as one plan, the write observes the action
+        counts and the written row count, and the tolerance verdict
+        runs before the pointer is staged or flipped. ``prev_count``
+        is the gate's previous row count, None for an ungated
+        table."""
+        observed = M.MergeObservation()
+        outcome = {}
+
+        def verdict():
+            stats, rows = observed.result()
+            outcome["stats"] = stats
+            outcome["tol"], error = _tolerance(table, rows, prev_count)
+            if error:
+                raise _Rejected(error)
+            return rows if prev_count is not None else None
+
+        try:
+            self.store.write(
+                table.name,
+                M.merge_tagged(cur, stg, chg, table.key, table.unique_cols),
+                key=table.key, dataset=ds.name,
+                clustered=observed.apply, verdict=verdict)
+        except _Rejected as e:
+            return TableResult(table.name, ds.name, "5", "error",
+                               outcome["stats"], str(e))
+        self._record_loaded(job, table.name, ds.name, "5",
+                            outcome["stats"], time.time() - t0,
+                            header.end_time or "")
+        return TableResult(table.name, ds.name, "5",
+                           "warning" if outcome["tol"] == "warning"
+                           else "loaded", outcome["stats"])
 
     # ------------------------------------------------------------ runs
     def _dataset_available(self, ds: Dataset, tables: list[TableDef]) -> list[str]:

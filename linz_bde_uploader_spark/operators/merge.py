@@ -26,6 +26,14 @@ Scale notes (100 TB design):
 - ``apply_actions`` rewrites only rows whose key appears in the action
   set (left_anti + union) — with a hash-bucketed store this is a
   partition-pruned rewrite, not a full-table rewrite.
+- ``merge_tagged`` is classify + apply as ONE lazy plan whose rows
+  carry their action; ``MergeObservation`` counts the actions in the
+  store write that consumes it, so a level-5 load of a table with no
+  maintained view runs one Spark action (the write), with no
+  persisted actions frame and no separate stats pass. Tables with
+  views keep ``classify_actions`` → ``apply_actions`` →
+  ``merge_stats`` over a persisted actions frame, which the view
+  refresh reads several times.
 - the row comparison is a null-safe column expression (whole-stage
   codegen), never a Python UDF.
 """
@@ -35,7 +43,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from linz_bde_uploader_spark.cache import persist
@@ -52,6 +60,9 @@ ACTION_UPDATE = "U"
 ACTION_DELETE = "D"
 ACTION_NULL_UPDATE = "0"
 ACTION_KEY_CHANGE = "X"
+# merge_tagged's action column: NULL on a row the change list does
+# not name
+ACTION_COL = "_action"
 
 # Default bound for the inline touched-group path (touched_group_semi
 # inline_threshold): a refresh touching at most this many groups
@@ -361,6 +372,43 @@ def fix_key_swaps(staged: DataFrame, current: DataFrame, change_keys: DataFrame,
     return change_keys.unionByName(missing)
 
 
+def _change_key_set(change_keys: DataFrame) -> DataFrame:
+    """The broadcast, de-duplicated change-key relation (column
+    ``key``) that restricts both sides of a classify."""
+    return F.broadcast(
+        change_keys.select(F.col("key").cast("long")).distinct())
+
+
+def _classify_join(current: DataFrame, staged: DataFrame,
+                   chg: DataFrame, key: str,
+                   side_cols: list[str]) -> DataFrame:
+    """The full-outer join of the two change-key residues: each side
+    semi-joined to ``chg`` (a ``_change_key_set``) and projected to
+    ``key`` + ``side_cols``, aliased ``cur`` and ``stg``."""
+    cur = (current.join(chg, current[key] == chg["key"], "left_semi")
+           .select(F.col(key).alias("key"), *side_cols).alias("cur"))
+    stg = (staged.join(chg, staged[key] == chg["key"], "left_semi")
+           .select(F.col(key).alias("key"), *side_cols).alias("stg"))
+    return cur.join(stg, F.col("cur.key") == F.col("stg.key"), "full_outer")
+
+
+def _action(key: str, compare_cols: list[str],
+            unique_cols: list[str]) -> Column:
+    """The I/U/D/0/X action of a ``_classify_join`` row."""
+    non_key_cols = [c for c in compare_cols if c != key]
+    equal = rows_equal_expr("cur", "stg", non_key_cols)
+    unique_changed = any_differs_expr(
+        "cur", "stg", [c for c in unique_cols if c != key])
+    return (
+        F.when(F.col("stg.key").isNull(), F.lit(ACTION_DELETE))
+        .when(F.col("cur.key").isNull(), F.lit(ACTION_INSERT))
+        .when(equal, F.lit(ACTION_NULL_UPDATE))
+        .when(unique_changed if unique_cols else F.lit(False),
+              F.lit(ACTION_KEY_CHANGE))
+        .otherwise(F.lit(ACTION_UPDATE))
+    )
+
+
 def classify_actions(current: DataFrame, staged: DataFrame, change_keys: DataFrame,
                      key: str, compare_cols: list[str],
                      unique_cols: list[str] | None = None,
@@ -395,38 +443,14 @@ def classify_actions(current: DataFrame, staged: DataFrame, change_keys: DataFra
     """
     unique_cols = unique_cols or []
     carry_cols = carry_cols or []
-    chg = F.broadcast(change_keys.select(F.col("key").cast("long")).distinct())
-
     side_cols = list(dict.fromkeys(
         list(compare_cols) + [c for c in carry_cols
                               if c not in compare_cols]))
-    cur = (
-        current.join(chg, current[key] == chg["key"], "left_semi")
-        .select(F.col(key).alias("key"), *side_cols)
-        .alias("cur")
-    )
-    stg = (
-        staged.join(chg, staged[key] == chg["key"], "left_semi")
-        .select(F.col(key).alias("key"), *side_cols)
-        .alias("stg")
-    )
-
-    joined = cur.join(stg, F.col("cur.key") == F.col("stg.key"), "full_outer")
-
-    non_key_cols = [c for c in compare_cols if c != key]
-    equal = rows_equal_expr("cur", "stg", non_key_cols)
-    unique_changed = any_differs_expr("cur", "stg", [c for c in unique_cols if c != key])
-
-    action = (
-        F.when(F.col("stg.key").isNull(), F.lit(ACTION_DELETE))
-        .when(F.col("cur.key").isNull(), F.lit(ACTION_INSERT))
-        .when(equal, F.lit(ACTION_NULL_UPDATE))
-        .when(unique_changed if unique_cols else F.lit(False), F.lit(ACTION_KEY_CHANGE))
-        .otherwise(F.lit(ACTION_UPDATE))
-    )
+    joined = _classify_join(current, staged, _change_key_set(change_keys),
+                            key, side_cols)
     return joined.select(
         F.coalesce(F.col("cur.key"), F.col("stg.key")).alias("key"),
-        action.alias("action"),
+        _action(key, compare_cols, unique_cols).alias("action"),
         *[F.col(f"cur.{c}").alias(f"_old_{c}") for c in carry_cols],
         *[F.col(f"stg.{c}").alias(f"_new_{c}") for c in carry_cols],
     )
@@ -461,13 +485,11 @@ def apply_actions(current: DataFrame, staged: DataFrame, actions: DataFrame,
     return kept.unionByName(ups.select(*current.columns))
 
 
-def merge_stats(actions: DataFrame) -> MergeStats:
-    """A3: I/U/0/D counts for the stats ledger. X counts as BOTH an
-    insert and a delete for stats parity (the reference applies X as
-    delete+insert; see FIXTURES.md F2 golden stats: the re-keyed row
-    lands as +1 insert +1 delete)."""
-    counts = {r["action"]: r["n"] for r in
-              actions.groupBy("action").agg(F.count("*").alias("n")).collect()}
+def _stats_of(counts: dict[str, int]) -> MergeStats:
+    """A3: the ledger's I/U/0/D counts from per-action counts. X
+    counts as BOTH an insert and a delete for stats parity (the
+    reference applies X as delete+insert; see FIXTURES.md F2 golden
+    stats: the re-keyed row lands as +1 insert +1 delete)."""
     x = counts.get(ACTION_KEY_CHANGE, 0)
     return MergeStats(
         ninsert=counts.get(ACTION_INSERT, 0) + x,
@@ -475,6 +497,84 @@ def merge_stats(actions: DataFrame) -> MergeStats:
         nnullupdate=counts.get(ACTION_NULL_UPDATE, 0),
         ndelete=counts.get(ACTION_DELETE, 0) + x,
     )
+
+
+def merge_stats(actions: DataFrame) -> MergeStats:
+    """A3: I/U/0/D counts of an actions frame, by one aggregate
+    action — the stats of the view path, whose persisted actions
+    frame several consumers read."""
+    return _stats_of({r["action"]: r["n"] for r in
+                      actions.groupBy("action")
+                      .agg(F.count("*").alias("n")).collect()})
+
+
+def merge_tagged(current: DataFrame, staged: DataFrame,
+                 change_keys: DataFrame, key: str,
+                 unique_cols: list[str] | None = None) -> DataFrame:
+    """J1-J3 + J6 as one lazy plan: the merged table plus one row per
+    deleted key, every row tagged in ``ACTION_COL``.
+
+        kept     = current ANTI JOIN change keys          (tag NULL)
+        changed  = classify's full-outer residue join, each row the
+                   current row for D and 0 and the staged row for
+                   I/U/X                                   (tag = action)
+        result   = kept ∪ changed
+
+    Dropping the D rows gives exactly ``apply_actions(current,
+    staged, classify_actions(...))`` for tables whose key is unique
+    on each side (an action-0 row is the current row, as apply
+    keeps it). The tags let :class:`MergeObservation` count the
+    actions in the same pass that writes the result, so the load
+    needs no persisted actions frame and no stats action: the
+    reference, too, gets its upload stats as a by-product of the
+    apply (sql/02-bde_control_functions.sql.in:1576-1818).
+
+    The chosen side travels as one struct. Choosing per column would
+    repeat the action expression (itself a comparison of every
+    column) once per column, and the optimizer's cost grows with the
+    square of the table's width."""
+    cols = current.columns
+    chg = _change_key_set(change_keys)
+    action = _action(key, cols, unique_cols or [])
+    row = (F.when(action.isin(ACTION_DELETE, ACTION_NULL_UPDATE),
+                  F.struct(*[F.col(f"cur.{c}") for c in cols]))
+           .otherwise(F.struct(*[F.col(f"stg.{c}") for c in cols])))
+    changed = (_classify_join(current, staged, chg, key, cols)
+               .select(row.alias("_row"), action.alias(ACTION_COL))
+               .select("_row.*", ACTION_COL))
+    kept = (current.join(chg, current[key] == chg["key"], "left_anti")
+            .withColumn(ACTION_COL, F.lit(None).cast("string")))
+    return kept.unionByName(changed)
+
+
+class MergeObservation:
+    """The I/U/0/D/X counts and the written row count of a
+    :func:`merge_tagged` plan, observed in the action that consumes
+    it. ``apply`` is the store write's ``clustered`` hook; ``result``
+    blocks until that action has finished."""
+
+    _CODES = (ACTION_INSERT, ACTION_UPDATE, ACTION_NULL_UPDATE,
+              ACTION_DELETE, ACTION_KEY_CHANGE)
+
+    def __init__(self):
+        self._obs = Observation()
+
+    def apply(self, tagged: DataFrame) -> DataFrame:
+        """Observe ``tagged``'s tags, then drop the D rows and the
+        tag column."""
+        tag = F.col(ACTION_COL)
+        written = ~tag.eqNullSafe(ACTION_DELETE)
+        return (tagged.observe(
+                    self._obs,
+                    *[F.count(F.when(tag == a, 1)).alias(f"n_{a}")
+                      for a in self._CODES],
+                    F.count(F.when(written, 1)).alias("rows"))
+                .filter(written).drop(ACTION_COL))
+
+    def result(self) -> tuple[MergeStats, int]:
+        """``(stats, rows written)``."""
+        m = self._obs.get
+        return _stats_of({a: m[f"n_{a}"] for a in self._CODES}), m["rows"]
 
 
 def full_diff(current: DataFrame, staged: DataFrame, key: str,

@@ -30,9 +30,27 @@ import json
 import os
 import shutil
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable: the schema
+    Spark gives a parquet file it writes (file sources store every
+    column as optional), so a read under it matches inference."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True,
+                          f.metadata) for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType),
+                         _as_nullable(dt.valueType), True)
+    return dt
 
 
 class TableStore:
@@ -269,12 +287,18 @@ class TableStore:
     def _catalog_name(self, table: str, version: int) -> str:
         return f"{self._prefix}_{table}_v{version}"
 
-    def current_version(self, table: str) -> int | None:
+    def _payload(self, table: str) -> dict | None:
+        """The current pointer's payload, None when the table has no
+        committed version."""
         p = self._pointer(table)
         if not os.path.exists(p):
             return None
         with open(p) as fh:
-            return json.load(fh)["version"]
+            return json.load(fh)
+
+    def current_version(self, table: str) -> int | None:
+        payload = self._payload(table)
+        return None if payload is None else payload["version"]
 
     def versions(self, table: str) -> list[int]:
         d = self._tdir(table)
@@ -285,7 +309,9 @@ class TableStore:
     def write(self, table: str, df: DataFrame, key: str | None = None,
               dataset: str | None = None,
               rows: int | None = None,
-              meta: dict | None = None) -> int:
+              meta: dict | None = None,
+              clustered: Callable[[DataFrame], DataFrame] | None = None,
+              verdict: Callable[[], int | None] | None = None) -> int:
         """Write a new snapshot version and atomically commit the
         pointer. ``dataset`` is recorded as the revision comment
         (C8: ver_create_revision with the dataset timestamp).
@@ -299,7 +325,22 @@ class TableStore:
         no Spark job — the analog of the reference persisting a
         table's key columns in its control ledger rather than
         re-deriving them per upload
-        (sql/01-bde_control_tables.sql:100-140)."""
+        (sql/01-bde_control_tables.sql:100-140).
+
+        ``clustered`` maps the key-clustered frame to the frame the
+        files receive. It runs after the ``repartition(key)``, so an
+        ``Observation`` it places sits in the write job's result
+        stage, whose accumulator updates Spark applies once per
+        partition even when a stage is retried. ``verdict`` runs
+        after the data lands and before the pointer is staged or
+        flipped: its return value is the pointer's ``rows`` (in place
+        of ``rows``), and an exception it raises propagates with the
+        pointer untouched — the new ``v=<n>`` directory is then an
+        orphan the table's next write overwrites.
+
+        The pointer also records the schema of the written files, so
+        ``read`` of the current version skips parquet schema
+        inference (a Spark job per read)."""
         with self._staged_lock:
             base_v = max(self.current_version(table) or 0,
                          self._staged_version(table) or 0)
@@ -308,24 +349,31 @@ class TableStore:
         os.makedirs(tdir, exist_ok=True)
         vdir = os.path.join(tdir, f"v={new_v}")
         bucketed = key is not None and key in df.columns
+        if clustered is None:
+            def clustered(d):
+                return d
         if bucketed and self.use_catalog_buckets:
             name = self._catalog_name(table, new_v)
             df.sparkSession.sql(f"DROP TABLE IF EXISTS {name}")
-            (df.repartition(self.n_buckets, F.col(key))
-               .write.mode("overwrite").format("parquet")
+            out = clustered(df.repartition(self.n_buckets, F.col(key)))
+            (out.write.mode("overwrite").format("parquet")
                .bucketBy(self.n_buckets, key).sortBy(key)
                .option("path", vdir).saveAsTable(name))
         elif bucketed:
             # hash-cluster by merge key for co-located future merges;
             # no partition count, so AQE sizes the files from the data
-            (df.repartition(F.col(key))
-               .sortWithinPartitions(key)
-               .write.mode("overwrite").parquet(vdir))
+            out = (clustered(df.repartition(F.col(key)))
+                   .sortWithinPartitions(key))
+            out.write.mode("overwrite").parquet(vdir)
         else:
-            df.write.mode("overwrite").parquet(vdir)
+            out = clustered(df)
+            out.write.mode("overwrite").parquet(vdir)
+        if verdict is not None:
+            rows = verdict()
         payload = {"version": new_v, "key": key, "dataset": dataset,
                    "rows": rows, "meta": meta,
-                   "catalog": bucketed and self.use_catalog_buckets}
+                   "catalog": bucketed and self.use_catalog_buckets,
+                   "schema": _as_nullable(out.schema).jsonValue()}
         with self._staged_lock:
             if self._staged is not None:
                 # dataset-transaction scope: data is on disk but the
@@ -354,11 +402,8 @@ class TableStore:
         zero). Lets size-triggered maintenance (index auto-compact)
         compare delta growth against the base from pointer metadata
         alone, with no counting job per ingest."""
-        p = self._pointer(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh).get("rows")
+        payload = self._payload(table)
+        return None if payload is None else payload.get("rows")
 
     def table_meta(self, table: str) -> dict | None:
         """The ``meta`` dict of the current version, if the writer
@@ -366,20 +411,28 @@ class TableStore:
         Spark job; maintenance paths use this to recover a table's
         frozen identity (index banding parameters) instead of
         trusting the caller to re-supply it correctly."""
-        p = self._pointer(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh).get("meta")
+        payload = self._payload(table)
+        return None if payload is None else payload.get("meta")
 
     def read(self, spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
-        v = version if version is not None else self.current_version(table)
-        if v is None:
+        """The table at ``version``, the current one by default. The
+        current version reads under the schema its pointer recorded,
+        which starts no Spark job; an explicit ``version`` and a
+        pointer written before pointers carried a schema infer it
+        from the parquet footers."""
+        schema = None
+        if version is None:
+            payload = self._payload(table) or {}
+            version, schema = payload.get("version"), payload.get("schema")
+        if version is None:
             raise FileNotFoundError(f"table {table} has no committed version")
-        name = self._catalog_name(table, v)
+        name = self._catalog_name(table, version)
         if self.use_catalog_buckets and spark.catalog.tableExists(name):
             return spark.table(name)
-        return spark.read.parquet(os.path.join(self._tdir(table), f"v={v}"))
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(os.path.join(self._tdir(table), f"v={version}"))
 
     def exists(self, table: str) -> bool:
         return self.current_version(table) is not None
@@ -390,11 +443,8 @@ class TableStore:
         predates dataset stamping. Streaming view maintenance uses
         this as its replay guard: a view whose stamp already equals
         the incoming dataset has incorporated that delta."""
-        p = self._pointer(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh).get("dataset")
+        payload = self._payload(table)
+        return None if payload is None else payload.get("dataset")
 
     def compact(self, spark: SparkSession, table: str,
                 key: str | None = None) -> int:
@@ -411,8 +461,7 @@ class TableStore:
         dataset a table's contents came from. Returns the new version
         number."""
         df = self.read(spark, table)
-        with open(self._pointer(table)) as fh:
-            meta = json.load(fh)
+        meta = self._payload(table)
         meta_key = key if key is not None else meta.get("key")
         return self.write(table, df, key=meta_key,
                           dataset=meta.get("dataset"),

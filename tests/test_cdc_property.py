@@ -1,14 +1,15 @@
 """Property-based check of the CDC core (operators/merge.py):
-classify_actions + apply_actions + merge_stats against a pure-Python
-reference model, over randomized current/staged/changeset states —
-the reference's golden fixtures pin one scenario; this pins the
+classify_actions + apply_actions + merge_stats, and the single-plan
+merge_tagged the driver writes, against a pure-Python reference
+model, over randomized current/staged/changeset states — the
+reference's golden fixtures pin one scenario; this pins the
 semantics across the state space (null values, overlapping and
 disjoint key sets, keys in neither table, empty changesets).
 """
 
 import pytest
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
@@ -84,6 +85,83 @@ def test_cdc_matches_model(spark, cur, stg, chg):
     got_final = {r.id: (r.a, r.b) for r in merged.collect()}
     assert got_final == want_final
     actions.unpersist()
+
+
+def swap_model(cur, stg, chg, u):
+    """``model`` with J4 key-swap repair and X actions on the unique
+    column at tuple index ``u`` (None: no unique column). A current
+    key whose unique value a staged row with a different key carries
+    joins the change set; an update that changes the unique value is
+    X, applied as an update."""
+    if u is not None:
+        chg = set(chg) | {
+            ck for nk, nrow in stg.items() for ck, crow in cur.items()
+            if nk != ck and nrow[u] is not None and nrow[u] == crow[u]}
+    actions, final = model(cur, stg, chg)
+    for k, a in actions.items():
+        if a == "U" and u is not None and cur[k][u] != stg[k][u]:
+            actions[k] = "X"
+    return actions, final
+
+
+chg_list = st.lists(st.integers(min_value=0, max_value=13), max_size=10)
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(cur=table, stg=table, chg=chg_list,
+       u=st.sampled_from([None, 0, 1]))
+@example(cur={0: (1, "x"), 1: (None, None)}, stg={}, chg=[0, 1, 1],
+         u=None)                                        # all deletes
+@example(cur={}, stg={2: (1, None), 3: (None, "y")}, chg=[2, 3, 3],
+         u=0)                                           # all inserts
+@example(cur={0: (1, "x"), 1: (2, "y")}, stg={0: (2, "x"), 1: (1, "y")},
+         chg=[0], u=0)                                  # key swap: X, X
+@example(cur={0: (1, "x")}, stg={0: (1, "x")}, chg=[12, 13, 13],
+         u=1)                                           # keys in neither
+def test_single_plan_merge_matches_model(spark, cur, stg, chg, u):
+    """The driver's single-plan merge (``merge_tagged`` observed by
+    ``MergeObservation`` in the pass that consumes it) writes the same
+    rows and reports the same stats as classify_actions +
+    apply_actions + merge_stats and as the pure-Python model — with
+    duplicate change keys, keys in neither table, NULL compare values,
+    and key swaps on a unique column (X counts as +1 I and +1 D)."""
+    from pyspark.sql import functions as F
+
+    unique_cols = [] if u is None else [["a", "b"][u]]
+    curdf = spark.createDataFrame(
+        [(k, a, b) for k, (a, b) in sorted(cur.items())], SCHEMA)
+    stgdf = spark.createDataFrame(
+        [(k, a, b) for k, (a, b) in sorted(stg.items())], SCHEMA)
+    chgdf = M.fix_key_swaps(stgdf, curdf, M.prepare_change_table(
+        spark.createDataFrame([("T1", k) for k in chg], CHG_SCHEMA), "t1"),
+        "id", unique_cols)
+
+    observed = M.MergeObservation()
+    written = observed.apply(
+        M.merge_tagged(curdf, stgdf, chgdf, "id", unique_cols)
+        .repartition(F.col("id")))
+    got_rows = sorted(map(tuple, written.collect()))
+    got_stats, got_n = observed.result()
+
+    actions = M.classify_actions(curdf, stgdf, chgdf, "id",
+                                 ["id", "a", "b"],
+                                 unique_cols=unique_cols).cache()
+    three_op_stats = M.merge_stats(actions)
+    three_op_rows = sorted(map(tuple, M.apply_actions(
+        curdf, stgdf, actions, "id").collect()))
+    actions.unpersist()
+
+    want_actions, want_final = swap_model(cur, stg, chg, u)
+    n = {a: sum(x == a for x in want_actions.values())
+         for a in ("I", "U", "0", "D", "X")}
+    want_stats = M.MergeStats(ninsert=n["I"] + n["X"], nupdate=n["U"],
+                              nnullupdate=n["0"],
+                              ndelete=n["D"] + n["X"])
+    assert got_rows == three_op_rows
+    assert got_rows == sorted((k, a, b) for k, (a, b) in want_final.items())
+    assert got_stats == three_op_stats == want_stats
+    assert got_n == len(want_final)
 
 
 def diff_model(cur, stg):

@@ -1081,9 +1081,124 @@ def test_gated_prev_count_without_pointer_rows(spark, env):
     assert store.row_count("crs_parcel_bndry") == 5
 
 
+def _tx_env(spark, tmp_path):
+    """``env`` under a dataset transaction."""
+    repo = BdeRepository(write_repository(str(tmp_path / "repo")))
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    up = BdeUploader(spark, repo, store, Ledger(str(tmp_path / "ctl")),
+                     parse_tables_conf(TABLES_CONF),
+                     config=UploadConfig(use_dataset_transaction=True))
+    return up, store
+
+
+def test_tolerance_error_aborts_table_in_dataset_transaction(spark,
+                                                             tmp_path):
+    """Under a dataset transaction a 5->0 collapse that breaches
+    row_tol=0.20 errors with the gate's message and the pointer is
+    left exactly as it was: the verdict runs after the data lands and
+    before the pointer is staged."""
+    import os
+
+    from tests.fixtures import PAB1_L5, XAUD, write_crs
+
+    up, store = _tx_env(spark, tmp_path)
+    up.apply_updates(rebuild=True)
+    with open(store._pointer("crs_parcel_bndry")) as fh:
+        pointer_before = fh.read()
+    newds = os.path.join(up.repo.root, "level_5", "20160602000000")
+    l5 = PAB1_L5[:PAB1_L5.index("{CRS-DATA}") + len("{CRS-DATA}") + 1]
+    xa_head = XAUD[:XAUD.index("{CRS-DATA}") + len("{CRS-DATA}") + 1]
+    xa = xa_head + "".join(
+        f"{i}|crs_parcel_bndry|{k}|D|2016-06-02 00:00:00|\n"
+        for i, k in enumerate([100, 80401148, 80401149, 300, 400]))
+    write_crs(os.path.join(newds, "pab1.crs"), l5)
+    write_crs(os.path.join(newds, "xaud.crs"), xa)
+    r = up.apply_updates(level5=True)
+    assert r[-1].status == "error"
+    assert r[-1].message == "tolerance: 0 < error floor of 5"
+    assert r[-1].stats.ndelete == 5
+    with open(store._pointer("crs_parcel_bndry")) as fh:
+        assert fh.read() == pointer_before
+    assert store.read(spark, "crs_parcel_bndry").count() == 5
+    assert up.ledger.table("crs_parcel_bndry")["last_upload_dataset"] \
+        == "20160601171200"
+
+
+def test_gated_table_records_pointer_rows_in_dataset_transaction(
+        spark, tmp_path):
+    """Under a dataset transaction a gated table's staged pointer
+    records the counted rows, equal to the stored row count, after
+    EP1, EP2 and EP3."""
+    import os
+
+    from tests.fixtures import PAB1_L0, write_crs
+
+    up, store = _tx_env(spark, tmp_path)
+
+    def assert_rows(n):
+        assert store.row_count("crs_parcel_bndry") == n
+        assert store.read(spark, "crs_parcel_bndry").count() == n
+
+    up.apply_updates(level0=True)                       # EP1
+    assert_rows(3)
+    r = up.apply_updates(level5=True)                   # EP2
+    assert r[-1].status == "loaded"
+    s = r[-1].stats
+    assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
+    assert_rows(5)
+    write_crs(os.path.join(up.repo.root, "level_0", "20160701000000",
+                           "pab1.crs"), PAB1_L0)
+    r = up.apply_updates(full_incremental=True)         # EP3
+    assert r[-1].status == "warning"
+    assert_rows(3)
+
+
+def test_level5_changes_absent_from_both_sides(spark, env):
+    """A change list naming only keys that neither the stored table
+    nor the staged file holds finishes with 0/0/0/0 stats and leaves
+    the contents as they were. Bounded: the stats are read from an
+    observation that waits for its metrics, so a plan that pruned the
+    observed node would hang instead of failing."""
+    import os
+    import threading
+
+    from tests.fixtures import PAB1_L5, XAUD, write_crs
+
+    up, store, ledger = env
+    up.apply_updates(level0=True)
+    before = sorted(store.read(spark, "crs_parcel_bndry").collect())
+    ds = os.path.join(up.repo.root, "level_5", "20160601171200")
+    l5 = PAB1_L5[:PAB1_L5.index("{CRS-DATA}") + len("{CRS-DATA}") + 1]
+    xa_head = XAUD[:XAUD.index("{CRS-DATA}") + len("{CRS-DATA}") + 1]
+    write_crs(os.path.join(ds, "pab1.crs"), l5)
+    write_crs(os.path.join(ds, "xaud.crs"), xa_head + "".join(
+        f"{i}|crs_parcel_bndry|{k}|U|2016-06-01 17:12:00|\n"
+        for i, k in enumerate([7, 8, 9])))
+
+    out = {}
+    worker = threading.Thread(
+        target=lambda: out.update(r=up.apply_updates(level5=True)),
+        daemon=True)
+    worker.start()
+    worker.join(timeout=180)
+    assert not worker.is_alive(), "level-5 load did not finish"
+    r = out["r"][-1]
+    assert r.status == "loaded"
+    s = r.stats
+    assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (0, 0, 0, 0)
+    assert store.row_count("crs_parcel_bndry") == 3
+    assert sorted(store.read(spark, "crs_parcel_bndry").collect()) == before
+
+
 def test_ungated_level5_runs_no_count(spark, tmp_path, monkeypatch):
     """A table with no row_tol never reads a row count, so its L5 load
-    runs no ``DataFrame.count`` and its pointer records no ``rows``."""
+    runs no ``DataFrame.count`` and its pointer records no ``rows``.
+    With no maintained view the store write is the merge's only Spark
+    action: no ``collect`` (the dataset's one change scan and
+    ``read_crs``' malformed-row probe aside), no persist, and no
+    ``merge_stats`` — the stats are observed in the write."""
+    from linz_bde_uploader_spark import driver as D
+
     repo = BdeRepository(write_repository(str(tmp_path / "repo")))
     store = TableStore(str(tmp_path / "store"), n_buckets=2)
     ledger = Ledger(str(tmp_path / "ctl"))
@@ -1102,10 +1217,41 @@ TABLE crs_parcel_bndry key=audit_id files pab1
         counted.append(self)
         return real_count(self)
 
+    collected, excused, persisted = [], [], []
+    real_collect = DataFrame.collect
+    real_persist = DataFrame.persist
+
+    def tracing_collect(self):
+        collected.append(self)
+        return real_collect(self)
+
+    def tracing_persist(self, *a, **k):
+        persisted.append(self)
+        return real_persist(self, *a, **k)
+
+    def excusing(fn):
+        def run(*a, **k):
+            n = len(collected)
+            try:
+                return fn(*a, **k)
+            finally:
+                excused.extend(collected[n:])
+        return run
+
+    def no_merge_stats(actions):
+        raise AssertionError("merge_stats called on the no-view path")
+
     monkeypatch.setattr(DataFrame, "count", tracing_count)
+    monkeypatch.setattr(DataFrame, "collect", tracing_collect)
+    monkeypatch.setattr(DataFrame, "persist", tracing_persist)
+    monkeypatch.setattr(D, "_changed_tables", excusing(D._changed_tables))
+    monkeypatch.setattr(D, "read_crs", excusing(D.read_crs))
+    monkeypatch.setattr(D.M, "merge_stats", no_merge_stats)
     r = up.apply_updates(level5=True)
     monkeypatch.undo()
     assert counted == []
+    assert persisted == []
+    assert collected and collected == excused
     assert r[-1].status == "loaded"
     s = r[-1].stats
     assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
@@ -1160,9 +1306,19 @@ TABLE crs_other key=audit_id files pab1
         scans.append(changes)
         return real_scan(changes)
 
+    reads = []
+    real_read = store.read
+
+    def tracing_read(spark, table, *a, **k):
+        reads.append(table)
+        return real_read(spark, table, *a, **k)
+
     monkeypatch.setattr(D, "_changed_tables", tracing_scan)
+    monkeypatch.setattr(store, "read", tracing_read)
     by_table = {r.table: r for r in up.apply_updates(level5=True)}
     assert len(scans) == 1
+    assert "crs_other" not in reads
+    assert "crs_parcel_bndry" in reads
     s = by_table["crs_parcel_bndry"].stats
     assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
     other = by_table["crs_other"]

@@ -53,6 +53,50 @@ def test_stats_golden(golden):
     assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
 
 
+def test_merge_tagged_wide_table_through_store(spark, tmp_path):
+    """A 40-column table merged as one tagged plan through the store
+    write: the written rows are ``apply_actions``' rows and the
+    observed stats are ``merge_stats``' stats. The optimized write
+    plan holds a fixed number of CASE expressions whatever the width:
+    the chosen side travels as one struct, so the action expression
+    (a comparison of every column) is not repeated per column."""
+    from linz_bde_uploader_spark.sources.store import TableStore
+
+    n = 40
+    vals = [F.concat(F.lit(f"v{i}_"), (F.col("id") % (i + 2)).cast("string"))
+            .alias(f"c{i}") for i in range(n - 1)]
+    cur = spark.range(60).select("id", *vals)
+    moved = (F.col("id") % 3 == 0).cast("int")  # a third of rows differ
+    stg = spark.range(20, 80).select("id", *[
+        F.concat(F.lit(f"v{i}_"), (F.col("id") % (i + 2) + moved)
+                 .cast("string")).alias(f"c{i}") for i in range(n - 1)])
+    chg = spark.range(10, 70).select(F.col("id").alias("key"))
+
+    observed = M.MergeObservation()
+    store = TableStore(str(tmp_path / "store"))
+    store.write("t", M.merge_tagged(cur, stg, chg, "id"), key="id",
+                clustered=observed.apply)
+    got_stats, got_rows = observed.result()
+
+    actions = M.classify_actions(cur, stg, chg, "id", cur.columns)
+    want = sorted(map(tuple, M.apply_actions(cur, stg, actions,
+                                             "id").collect()))
+    assert sorted(map(tuple, store.read(spark, "t").collect())) == want
+    assert got_rows == len(want)
+    assert got_stats == M.merge_stats(actions)
+    assert (got_stats.ninsert, got_stats.ndelete) == (10, 10)
+
+    qe = (M.MergeObservation().apply(M.merge_tagged(cur, stg, chg, "id"))
+          ._jdf.queryExecution())
+    spark.conf.set("spark.sql.debug.maxToStringFields", 10 * n)
+    try:
+        plan = qe.optimizedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    assert f"c{n - 2}" in plan   # the plan string is not truncated
+    assert plan.count("CASE WHEN") < 12
+
+
 def test_null_update_action(spark):
     """Key in change list but row identical -> action '0'."""
     cols = ["a", "k"]
