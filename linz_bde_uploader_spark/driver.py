@@ -467,13 +467,10 @@ class BdeUploader:
         spec = self._views.get(table.name)
         if spec is not None:
             # snapshot semantics: L0 replaces the base wholesale, so
-            # views re-seed by direct recompute of the new state —
-            # FORCED past the stamp guard, because a replaced base
-            # invalidates any standing view even one stamped later
-            # (operator-forced re-load); the recompute is idempotent
-            # so crash replays stay safe without the guard
+            # views re-seed by direct recompute of the new state, past
+            # the stamp guard (see seed_views)
             seed_views(self.store, table.name, new, ds.name, spec,
-                       table.key, force=True)
+                       table.key)
         self.store.write(table.name, new, key=table.key, dataset=ds.name,
                          rows=new_count)
         self._record_loaded(job, table.name, ds.name, "0", stats,
@@ -510,18 +507,13 @@ class BdeUploader:
         if spec is None:
             return self._write_level5(job, ds, table, header, t0,
                                       cur, stg, chg, prev_count)
-        # carry the view group columns through classify (free — the
-        # classify join holds both rows) so every partial-refresh
-        # view derives its touched groups O(changes) from the actions
-        # frame instead of re-scanning the base by key
-        carry = sorted(set(spec.group_cols)) if spec.group_cols else None
         # with a view, the actions frame (changed keys only) feeds the
         # stats, both apply branches and every view refresh, so it is
         # persisted; the apply_updates loop releases it with the
         # dataset's other persists
         actions = persist(M.classify_actions(
             cur, stg, chg, table.key, cur.columns,
-            unique_cols=table.unique_cols, carry_cols=carry))
+            unique_cols=table.unique_cols, carry_cols=spec.carry_cols))
         stats = M.merge_stats(actions)
         merged = M.apply_actions(cur, stg, actions, table.key)
         new_count = merged.count() if prev_count is not None else None

@@ -36,11 +36,30 @@ Scale notes (100 TB design):
   refresh reads several times.
 - the row comparison is a null-safe column expression (whole-stage
   codegen), never a Python UDF.
+
+The maintained-view (IVM) family — ``maintain_aggregate``,
+``maintain_extrema``, ``maintain_topk``, ``maintain_sums``,
+``maintain_join``, ``maintain_distinct`` and the two sketch members in
+operators/sketches.py — shares one algebra, each decision written once:
+
+- ``_delta_rows`` is the one place the action codes split into the
+  current rows a merge removes (D/U/X) and the staged rows it adds
+  (I/U/X); ``delta_keys`` gives their broadcast keys;
+- ``touched_groups``, ``touched_group_semi`` and ``drop_groups`` are
+  the touched-group parts, compared null-safely by ``groups_match``;
+- ``_refresh_touched`` is the one partial-refresh body: recompute a
+  view shape over the touched groups' merged rows, carry every other
+  group forward;
+- each view has one shape function (``aggregate_view``,
+  ``extrema_view``, ``topk_view``, ``distinct_view``, ``join_view``),
+  used by both the direct seed (view_refresh.seed_views) and the
+  ``old=None`` bootstrap of its ``maintain_*``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
@@ -63,6 +82,10 @@ ACTION_KEY_CHANGE = "X"
 # merge_tagged's action column: NULL on a row the change list does
 # not name
 ACTION_COL = "_action"
+# a merge removes the current row of a D/U/X key and adds the staged
+# row of an I/U/X key (an update does both)
+_REMOVES = (ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE)
+_ADDS = (ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE)
 
 # Default bound for the inline touched-group path (touched_group_semi
 # inline_threshold): a refresh touching at most this many groups
@@ -111,6 +134,22 @@ def mark_selective_for_dpp(df: DataFrame,
         >= F.lit(-(2 ** 63)))
 
 
+def _delta_rows(actions: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(removed, added)``: the actions rows whose current row a
+    merge removes (D/U/X) and whose staged row it adds (I/U/X) — the
+    one place the family splits an actions frame by action code."""
+    return (actions.filter(F.col("action").isin(*_REMOVES)),
+            actions.filter(F.col("action").isin(*_ADDS)))
+
+
+def delta_keys(actions: DataFrame, key: str = "key"
+               ) -> tuple[DataFrame, DataFrame]:
+    """``(removed, added)``: the broadcast keys, named ``key``, of the
+    current rows a merge removes and of the staged rows it adds."""
+    return tuple(F.broadcast(rows.select(F.col("key").alias(key)))
+                 for rows in _delta_rows(actions))
+
+
 def carried_touched_groups(actions: DataFrame,
                            group_cols: list[str],
                            del_only: bool = False) -> DataFrame | None:
@@ -128,16 +167,15 @@ def carried_touched_groups(actions: DataFrame,
     if not all(f"_old_{g}" in cols and f"_new_{g}" in cols
                for g in group_cols):
         return None
-    dels = (actions.filter(F.col("action").isin(
-        ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(*[F.col(f"_old_{g}").alias(g) for g in group_cols]))
-    if del_only:
-        return mark_selective_for_dpp(dels.distinct(), group_cols)
-    ins = (actions.filter(F.col("action").isin(
-        ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(*[F.col(f"_new_{g}").alias(g) for g in group_cols]))
-    return mark_selective_for_dpp(dels.unionByName(ins).distinct(),
-                                  group_cols)
+    removed, added = _delta_rows(actions)
+
+    def groups(rows, prefix):
+        return rows.select(*[F.col(f"{prefix}{g}").alias(g)
+                             for g in group_cols])
+    touched = groups(removed, "_old_")
+    if not del_only:
+        touched = touched.unionByName(groups(added, "_new_"))
+    return mark_selective_for_dpp(touched.distinct(), group_cols)
 
 
 def fallback_touched_groups(current: DataFrame, staged: DataFrame,
@@ -148,8 +186,7 @@ def fallback_touched_groups(current: DataFrame, staged: DataFrame,
     actions frame built WITHOUT carried group columns — an O(N)
     key-semi-join scan of current/staged (key + group columns only),
     unlike :func:`carried_touched_groups`' O(|changes|) read of the
-    actions frame. Shared by the maintain_* recompute family so the
-    derivation exists once, not four times.
+    actions frame.
 
     The result is PERSISTED (released with the engine's other caches
     by ``cache.release_caches()``): the consumer
@@ -163,24 +200,68 @@ def fallback_touched_groups(current: DataFrame, staged: DataFrame,
 
     ``del_only`` mirrors carried_touched_groups: just the groups
     that LOSE rows (maintain_hll's recompute trigger)."""
-    del_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
-    dels = current.join(del_keys, key, "left_semi").select(*group_cols)
-    if del_only:
-        touched = dels.distinct()
-    else:
-        ins_keys = F.broadcast(
-            actions.filter(F.col("action").isin(
-                ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-            .select(F.col("key").alias(key)))
-        touched = dels.unionByName(
-            staged.join(ins_keys, key, "left_semi")
-            .select(*group_cols)).distinct()
+    del_keys, ins_keys = delta_keys(actions, key)
+    touched = current.join(del_keys, key, "left_semi").select(*group_cols)
+    if not del_only:
+        touched = touched.unionByName(
+            staged.join(ins_keys, key, "left_semi").select(*group_cols))
     return mark_selective_for_dpp(
-        persist(touched, StorageLevel.MEMORY_AND_DISK),
+        persist(touched.distinct(), StorageLevel.MEMORY_AND_DISK),
         group_cols)
+
+
+def touched_groups(current: DataFrame, staged: DataFrame,
+                   actions: DataFrame, key: str, group_cols: list[str],
+                   del_only: bool = False) -> DataFrame:
+    """The touched-group relation of a refresh: carried from the
+    actions frame when it holds the group columns, else the semi-join
+    fallback (see the two functions above).
+
+    Cache note: the fallback persists its relation through
+    ``cache.persist`` and the returned plan is lazy, so the persist
+    cannot be dropped here. Long-lived sessions issuing repeated
+    non-carried refreshes must call ``cache.release_caches()``
+    between refreshes; the carried path persists nothing."""
+    touched = carried_touched_groups(actions, group_cols, del_only)
+    if touched is None:
+        touched = fallback_touched_groups(current, staged, actions, key,
+                                          group_cols, del_only)
+    return touched
+
+
+def groups_match(left: DataFrame, right: DataFrame,
+                 group_cols: list[str]) -> Column:
+    """Null-safe equality of two frames' group columns: GROUP BY's
+    one-NULL-group semantics as a join condition."""
+    return reduce(lambda a, b: a & b,
+                  [left[g].eqNullSafe(right[g]) for g in group_cols])
+
+
+def drop_groups(df: DataFrame, groups: DataFrame,
+                group_cols: list[str]) -> DataFrame:
+    """``df`` without the rows whose group is in ``groups``: a
+    broadcast null-safe anti join."""
+    d, t = df.alias("_d"), F.broadcast(groups).alias("_t")
+    return d.join(t, groups_match(d, t, group_cols), "left_anti")
+
+
+def _inline_groups(rows: list, group_cols: list[str]) -> Column:
+    """The collected touched groups as ONE ``IN`` predicate. A single
+    group column is ``g IN (...)``, with ``OR g IS NULL`` when a NULL
+    group is touched; several are one struct ``IN``, whose struct
+    equality compares fields null-safely. Either way the predicate
+    stays one expression whatever the group count, so whole-stage
+    codegen stays on (an OR of per-group equalities outgrows the
+    64 KB method limit)."""
+    if len(group_cols) > 1:
+        return F.struct(*group_cols).isin(
+            [F.struct(*[F.lit(r[g]).alias(g) for g in group_cols])
+             for r in rows])
+    g = F.col(group_cols[0])
+    values = [r[group_cols[0]] for r in rows]
+    present = [v for v in values if v is not None]
+    cond = g.isin(present) if present else F.lit(False)
+    return cond | g.isNull() if None in values else cond
 
 
 def touched_group_semi(merged: DataFrame, touched: DataFrame,
@@ -225,47 +306,31 @@ def touched_group_semi(merged: DataFrame, touched: DataFrame,
     touched groups are collected (a BOUNDED driver collect — at most
     threshold+1 rows fetched; if more exist the code falls back to
     the join path, so the collect can never scale with data) and
-    inlined as a literal predicate. Catalyst folds the
-    OR-of-equalities to an IN set, which reaches the scan as a
-    STATIC PartitionFilter — no subquery machinery, no broadcast,
-    the same plan a hand-written ``WHERE month IN (...)`` gets.
-    Measured at sf10/80 partitions: static 0.13 s vs DPP 0.61 s vs
-    unpruned 0.87 s for the same semi-join. This is the
-    affected-partition pattern every incremental lakehouse job uses;
-    the threshold makes its driver cost a declared constant. NULL
-    group values inline as IS NULL, so null-safe semantics are
-    preserved exactly on this path regardless of ``null_safe``."""
+    inlined as one literal ``IN`` predicate (:func:`_inline_groups`),
+    which reaches the scan as a STATIC PartitionFilter — no subquery
+    machinery, no broadcast, the same plan a hand-written ``WHERE
+    month IN (...)`` gets. Measured at sf10/80 partitions: static
+    0.13 s vs DPP 0.61 s vs unpruned 0.87 s for the same semi-join.
+    This is the affected-partition pattern every incremental
+    lakehouse job uses; the threshold makes its driver cost a
+    declared constant. NULL groups stay matched null-safely on this
+    path regardless of ``null_safe``."""
     if inline_threshold > 0:
         rows = touched.limit(inline_threshold + 1).collect()
         if len(rows) <= inline_threshold:
             if not rows:
                 return merged.filter(F.lit(False))
-            cond = None
-            for r in rows:
-                c = None
-                for g in group_cols:
-                    v = r[g]
-                    e = (F.col(g).isNull() if v is None
-                         else (F.col(g) == F.lit(v)))
-                    c = e if c is None else (c & e)
-                cond = c if cond is None else (cond | c)
-            return merged.filter(cond)
-    nn = None
-    for g in group_cols:
-        c = F.col(g).isNotNull()
-        nn = c if nn is None else (nn & c)
+            return merged.filter(_inline_groups(rows, group_cols))
+    nn = reduce(lambda a, b: a & b,
+                [F.col(g).isNotNull() for g in group_cols])
     fast = merged.join(F.broadcast(touched.filter(nn)),
                        group_cols, "left_semi")
     if not null_safe:
         return fast
-    t = touched.filter(~nn).alias("t")
     m = merged.alias("m")
-    cond = None
-    for g in group_cols:
-        c = m[g].eqNullSafe(t[g])
-        cond = c if cond is None else (cond & c)
-    slow = m.join(F.broadcast(t), cond, "left_semi")
-    return fast.unionByName(slow)
+    t = F.broadcast(touched.filter(~nn)).alias("t")
+    return fast.unionByName(
+        m.join(t, groups_match(m, t, group_cols), "left_semi"))
 
 
 @dataclass
@@ -472,14 +537,7 @@ def apply_actions(current: DataFrame, staged: DataFrame, actions: DataFrame,
     hash-bucketed store only buckets containing touched keys need
     rewriting (partition-pruned merge).
     """
-    touched = F.broadcast(
-        actions.filter(F.col("action").isin(ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select("key")
-    )
-    upserted = F.broadcast(
-        actions.filter(F.col("action").isin(ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select("key")
-    )
+    touched, upserted = delta_keys(actions)
     kept = current.join(touched, current[key] == touched["key"], "left_anti")
     ups = staged.join(upserted, staged[key] == upserted["key"], "left_semi")
     return kept.unionByName(ups.select(*current.columns))
@@ -645,6 +703,102 @@ def check_tolerance(new_count: int, prev_count: int,
     return "ok"
 
 
+def aggregate_view(df: DataFrame, group_cols: list[str],
+                   value_col: str,
+                   value_type: str = "decimal(12,2)") -> DataFrame:
+    """The aggregate view shape — (group_cols..., n, n_vals, total):
+    row count, non-null value count and DECIMAL(38,2) value sum.
+    Shared by :func:`maintain_aggregate`'s bootstrap and the direct
+    seeding path. It counts the CAST column, not the raw one: a
+    non-null value that casts to NULL is no value, in the seed as in
+    the delta."""
+    v = F.col(value_col).cast(value_type)
+    return df.groupBy(*group_cols).agg(
+        F.count("*").alias("n"), F.count(v).alias("n_vals"),
+        F.sum(v).cast("decimal(38,2)").alias("total"))
+
+
+def extrema_view(df: DataFrame, group_cols: list[str], value_col: str,
+                 value_type: str = "decimal(12,2)") -> DataFrame:
+    """The min/max view shape — (group_cols..., n, vmin, vmax) of the
+    value cast to ``value_type``. Shared by :func:`maintain_extrema`
+    and the direct seeding path."""
+    v = F.col(value_col).cast(value_type)
+    return df.groupBy(*group_cols).agg(
+        F.count("*").alias("n"), F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"))
+
+
+def topk_view(df: DataFrame, group_cols: list[str], key: str,
+              value_col: str, k: int,
+              value_type: str = "decimal(12,2)") -> DataFrame:
+    """The top-k view shape — (group_cols..., rank, key, value) with
+    rank = row_number over (value DESC, key ASC), a total order so
+    the view is set-deterministic. Single source of truth for
+    :func:`maintain_topk`'s recompute/bootstrap AND the direct
+    seeding path (view_refresh.seed_views): both MUST rank
+    identically or an L0 seed and a later L5 refresh would disagree
+    on ties. The rank<=k filter is WindowGroupLimit-pruned (pinned
+    by tests/test_plan_shapes.py)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*group_cols).orderBy(
+        F.col("_v").desc(), F.col(key).asc())
+    return (df.select(*group_cols, F.col(key),
+                      F.col(value_col).cast(value_type).alias("_v"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(*group_cols, F.col("rank").cast("bigint"),
+                    F.col(key), F.col("_v").alias(value_col)))
+
+
+def distinct_view(df: DataFrame, group_cols: list[str],
+                  value_col: str) -> DataFrame:
+    """The distinct-count view shape — (group_cols..., n,
+    n_distinct), both BIGINT. Shared by :func:`maintain_distinct`
+    and the direct seeding path. Two-key hash aggregate ((group,
+    value) then group), NOT count-distinct-with-other-aggs: keeping
+    n as the sum of first-level multiplicities avoids Catalyst's
+    Expand doubling of the input stream."""
+    per_value = (df.groupBy(*group_cols, value_col)
+                 .agg(F.count("*").alias("_m")))
+    return (per_value.groupBy(*group_cols)
+            .agg(F.sum("_m").cast("bigint").alias("n"),
+                 F.count(value_col).alias("n_distinct")))
+
+
+def join_view(fact: DataFrame, key: str, dim: DataFrame,
+              fact_join_col: str, dim_join_col: str,
+              fact_cols: list[str], dim_cols: list[str]) -> DataFrame:
+    """The enriched join view shape — (key, *fact_cols, *dim_cols) of
+    ``fact`` inner-joined to ``dim``. Shared by :func:`maintain_join`
+    and the direct seeding path."""
+    return (fact.join(dim, fact[fact_join_col] == dim[dim_join_col],
+                      "inner")
+            .select(fact[key], *[fact[c] for c in fact_cols],
+                    *[dim[c] for c in dim_cols]))
+
+
+def _refresh_touched(current: DataFrame, staged: DataFrame,
+                     actions: DataFrame, key: str,
+                     group_cols: list[str], merged: DataFrame,
+                     shape, old: DataFrame | None,
+                     groups_nullable: bool,
+                     inline_threshold: int) -> DataFrame:
+    """The partial-refresh body of maintain_extrema, maintain_topk and
+    maintain_distinct: ``shape`` (a view shape of a frame) recomputed
+    over the touched groups' merged rows, unioned with every
+    untouched group of ``old`` — or of ``shape(merged)`` when ``old``
+    is None (the bootstrap / differential-test path: same result, not
+    O(changes))."""
+    touched = touched_groups(current, staged, actions, key, group_cols)
+    recomputed = shape(touched_group_semi(
+        merged, touched, group_cols, null_safe=groups_nullable,
+        inline_threshold=inline_threshold))
+    base = old if old is not None else shape(merged)
+    return drop_groups(base, touched, group_cols).unionByName(recomputed)
+
+
 def maintain_aggregate(current: DataFrame, staged: DataFrame,
                        actions: DataFrame, key: str,
                        group_cols: list[str], value_col: str,
@@ -683,27 +837,17 @@ def maintain_aggregate(current: DataFrame, staged: DataFrame,
     v = F.col(value_col).cast(value_type)
     acc = "decimal(38,2)"
     vn = F.when(v.isNotNull(), F.lit(1)).otherwise(F.lit(0)).cast("long")
-    del_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
-    ins_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
-    if old_agg is not None:
-        # the stored view (group_cols, n, n_vals, total) from the
-        # previous refresh — the truly-incremental path: no scan of
-        # current beyond the changed keys below
-        old = old_agg.select(
-            *group_cols, F.col("n").cast("long").alias("_dn"),
-            F.col("n_vals").cast("long").alias("_dv"),
-            F.col("total").cast(acc).alias("_ds"))
-    else:
-        old = current.groupBy(*group_cols).agg(
-            F.count("*").alias("_dn"),
-            F.count(v).alias("_dv"),
-            F.sum(v).cast(acc).alias("_ds"))
+    del_keys, ins_keys = delta_keys(actions, key)
+    if old_agg is None:
+        old_agg = aggregate_view(current, group_cols, value_col,
+                                 value_type)
+    # the stored view (group_cols, n, n_vals, total) from the previous
+    # refresh — the truly-incremental path: no scan of current beyond
+    # the changed keys below
+    old = old_agg.select(
+        *group_cols, F.col("n").cast("long").alias("_dn"),
+        F.col("n_vals").cast("long").alias("_dv"),
+        F.col("total").cast(acc).alias("_ds"))
     neg = current.join(del_keys, key, "left_semi").select(
         *group_cols, F.lit(-1).cast("long").alias("_dn"),
         (-vn).alias("_dv"), (-v).cast(acc).alias("_ds"))
@@ -763,79 +907,12 @@ def maintain_extrema(current: DataFrame, staged: DataFrame,
     the untouched side is computed from ``merged`` directly (the
     bootstrap / differential-test path — same result, not O(changes)).
 
-    Cache note: on the fallback (non-carried) path the touched
-    relation is persisted MEMORY_AND_DISK through ``cache.persist``
-    (see fallback_touched_groups — the returned plan is
-    lazy, so the persist cannot be dropped here). Long-lived
-    sessions issuing repeated non-carried refreshes must call
-    ``cache.release_caches()`` between refreshes or the persisted
-    relations accumulate; the carried path persists nothing."""
-    v = F.col(value_col).cast(value_type)
-    touched = carried_touched_groups(actions, group_cols)
-    if touched is None:
-        touched = fallback_touched_groups(current, staged, actions,
-                                          key, group_cols)
-
-    def null_safe_on(left, right):
-        cond = None
-        for g in group_cols:
-            c = left[g].eqNullSafe(right[g])
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    recomputed = (
-        touched_group_semi(merged, touched, group_cols,
-                           null_safe=groups_nullable,
-                           inline_threshold=touched_inline_threshold)
-        .groupBy(*group_cols)
-        .agg(F.count("*").alias("n"), F.min(v).alias("vmin"),
-             F.max(v).alias("vmax")))
-    t = F.broadcast(touched).alias("t")
-    base = old_extrema if old_extrema is not None else (
-        merged.groupBy(*group_cols)
-        .agg(F.count("*").alias("n"), F.min(v).alias("vmin"),
-             F.max(v).alias("vmax")))
-    b = base.alias("b")
-    untouched = b.join(t, null_safe_on(b, t), "left_anti")
-    return untouched.unionByName(recomputed)
-
-
-def topk_view(df: DataFrame, group_cols: list[str], key: str,
-              value_col: str, k: int,
-              value_type: str = "decimal(12,2)") -> DataFrame:
-    """The top-k view shape — (group_cols..., rank, key, value) with
-    rank = row_number over (value DESC, key ASC), a total order so
-    the view is set-deterministic. Single source of truth for
-    :func:`maintain_topk`'s recompute/bootstrap AND the direct
-    seeding path (view_refresh.seed_views): both MUST rank
-    identically or an L0 seed and a later L5 refresh would disagree
-    on ties. The rank<=k filter is WindowGroupLimit-pruned (pinned
-    by tests/test_plan_shapes.py)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col("_v").desc(), F.col(key).asc())
-    return (df.select(*group_cols, F.col(key),
-                      F.col(value_col).cast(value_type).alias("_v"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(*group_cols, F.col("rank").cast("bigint"),
-                    F.col(key), F.col("_v").alias(value_col)))
-
-
-def distinct_view(df: DataFrame, group_cols: list[str],
-                  value_col: str) -> DataFrame:
-    """The distinct-count view shape — (group_cols..., n,
-    n_distinct), both BIGINT. Shared by :func:`maintain_distinct`
-    and the direct seeding path. Two-key hash aggregate ((group,
-    value) then group), NOT count-distinct-with-other-aggs: keeping
-    n as the sum of first-level multiplicities avoids Catalyst's
-    Expand doubling of the input stream."""
-    per_value = (df.groupBy(*group_cols, value_col)
-                 .agg(F.count("*").alias("_m")))
-    return (per_value.groupBy(*group_cols)
-            .agg(F.sum("_m").cast("bigint").alias("n"),
-                 F.count(value_col).alias("n_distinct")))
+    Cache note: the non-carried fallback persists its touched
+    relation (see :func:`touched_groups`)."""
+    return _refresh_touched(
+        current, staged, actions, key, group_cols, merged,
+        lambda df: extrema_view(df, group_cols, value_col, value_type),
+        old_extrema, groups_nullable, touched_inline_threshold)
 
 
 def maintain_topk(current: DataFrame, staged: DataFrame,
@@ -868,33 +945,13 @@ def maintain_topk(current: DataFrame, staged: DataFrame,
     Returns (group_cols..., rank, key, value-as-``value_type``).
     ``old_topk=None`` recomputes the untouched side from ``merged``
     directly (bootstrap / differential-test path). Cache note: the
-    non-carried fallback persists its touched relation into the
-    cache registry — long-lived sessions must
-    ``cache.release_caches()`` between repeated non-carried
-    refreshes (see maintain_extrema)."""
-    touched = carried_touched_groups(actions, group_cols)
-    if touched is None:
-        touched = fallback_touched_groups(current, staged, actions,
-                                          key, group_cols)
-
-    def null_safe_on(left, right):
-        cond = None
-        for g in group_cols:
-            c = left[g].eqNullSafe(right[g])
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    def topk(df: DataFrame) -> DataFrame:
-        return topk_view(df, group_cols, key, value_col, k, value_type)
-
-    recomputed = topk(touched_group_semi(
-        merged, touched, group_cols, null_safe=groups_nullable,
-        inline_threshold=touched_inline_threshold))
-    t = F.broadcast(touched).alias("t")
-    base = old_topk if old_topk is not None else topk(merged)
-    b = base.alias("b")
-    untouched = b.join(t, null_safe_on(b, t), "left_anti")
-    return untouched.unionByName(recomputed)
+    non-carried fallback persists its touched relation (see
+    :func:`touched_groups`)."""
+    return _refresh_touched(
+        current, staged, actions, key, group_cols, merged,
+        lambda df: topk_view(df, group_cols, key, value_col, k,
+                             value_type),
+        old_topk, groups_nullable, touched_inline_threshold)
 
 
 def maintain_sums(current: DataFrame, staged: DataFrame,
@@ -919,14 +976,7 @@ def maintain_sums(current: DataFrame, staged: DataFrame,
     in maintain_aggregate instead.
 
     Returns (group_cols..., n, *sum_cols) — all BIGINT."""
-    del_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
-    ins_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
+    del_keys, ins_keys = delta_keys(actions, key)
     if old_sums is not None:
         old = old_sums.select(
             *group_cols, F.col("n").cast("long").alias("_dn"),
@@ -990,25 +1040,12 @@ def maintain_join(current: DataFrame, staged: DataFrame,
     Returns (key, *fact_cols, *dim_cols). ``old_view=None`` computes
     the pre-merge view from ``current`` directly (bootstrap /
     differential-test path — same result, not O(changes))."""
-    del_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
-    ins_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
-
-    def enrich(fact: DataFrame) -> DataFrame:
-        return (fact.join(dim,
-                          fact[fact_join_col] == dim[dim_join_col],
-                          "inner")
-                .select(fact[key], *[fact[c] for c in fact_cols],
-                        *[dim[c] for c in dim_cols]))
-
-    base = old_view if old_view is not None else enrich(current)
+    del_keys, ins_keys = delta_keys(actions, key)
+    shape = (dim, fact_join_col, dim_join_col, fact_cols, dim_cols)
+    base = old_view if old_view is not None else join_view(
+        current, key, *shape)
     kept = base.join(del_keys, key, "left_anti")
-    added = enrich(staged.join(ins_keys, key, "left_semi"))
+    added = join_view(staged.join(ins_keys, key, "left_semi"), key, *shape)
     return kept.unionByName(added)
 
 
@@ -1050,31 +1087,8 @@ def maintain_distinct(current: DataFrame, staged: DataFrame,
     views.
 
     Cache note: the non-carried fallback persists its touched
-    relation into the cache registry — long-lived sessions must
-    ``cache.release_caches()`` between repeated non-carried
-    refreshes (see maintain_extrema)."""
-    touched = carried_touched_groups(actions, group_cols)
-    if touched is None:
-        touched = fallback_touched_groups(current, staged, actions,
-                                          key, group_cols)
-
-    def null_safe_on(left, right):
-        cond = None
-        for g in group_cols:
-            c = left[g].eqNullSafe(right[g])
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    def distinct_counts(df: DataFrame) -> DataFrame:
-        return distinct_view(df, group_cols, value_col)
-
-    recomputed = distinct_counts(
-        touched_group_semi(merged, touched, group_cols,
-                           null_safe=groups_nullable,
-                           inline_threshold=touched_inline_threshold))
-    t = F.broadcast(touched).alias("t")
-    base = old_distinct if old_distinct is not None \
-        else distinct_counts(merged)
-    b = base.alias("b")
-    untouched = b.join(t, null_safe_on(b, t), "left_anti")
-    return untouched.unionByName(recomputed)
+    relation (see :func:`touched_groups`)."""
+    return _refresh_touched(
+        current, staged, actions, key, group_cols, merged,
+        lambda df: distinct_view(df, group_cols, value_col),
+        old_distinct, groups_nullable, touched_inline_threshold)

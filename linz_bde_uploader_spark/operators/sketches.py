@@ -38,7 +38,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linz_bde_uploader_spark.functions.hashing import hash60
-from linz_bde_uploader_spark.operators.merge import TOUCHED_INLINE_DEFAULT
+from linz_bde_uploader_spark.operators.merge import (
+    TOUCHED_INLINE_DEFAULT, delta_keys, drop_groups, touched_group_semi,
+    touched_groups)
 from linz_bde_uploader_spark.operators.topk import grouped_topk
 
 # HLL geometry: m = 2^8 = 256 registers from the top 8 bits of the
@@ -181,54 +183,31 @@ def maintain_hll(current: DataFrame, staged: DataFrame,
     Cache note: the non-carried fallback persists its touched
     relation into the cache registry — long-lived sessions must
     ``cache.release_caches()`` between repeated non-carried
-    refreshes (see merge.maintain_extrema)."""
-    from linz_bde_uploader_spark.operators.merge import (
-        ACTION_DELETE, ACTION_INSERT, ACTION_KEY_CHANGE, ACTION_UPDATE)
+    refreshes (see merge.touched_groups)."""
     if old_regs is None:
         return hll_registers(merged, group_cols, sketch_key)
-    ins_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
+    _, ins_keys = delta_keys(actions, key)
     # groups losing rows: only the CURRENT side of D/U/X names them.
     # With carried group columns (classify_actions carry_cols) the
     # set derives from the actions frame alone — O(changes);
     # mark_selective_for_dpp + touched_group_semi then let a
     # group-partitioned merged scan prune to these groups' partitions
-    # (see merge.py for the DPP heuristic and null-split story).
-    from linz_bde_uploader_spark.operators.merge import (
-        carried_touched_groups, fallback_touched_groups,
-        touched_group_semi)
-    rec_groups = carried_touched_groups(actions, group_cols,
-                                        del_only=True)
-    if rec_groups is None:
-        # shared persisted derivation (see merge.fallback_touched_
-        # groups): the relation feeds the inline probe, the semi
-        # branches AND two anti joins below — one scan, not four
-        rec_groups = fallback_touched_groups(
-            current, staged, actions, key, group_cols, del_only=True)
-
-    def null_safe_on(left, right):
-        cond = None
-        for g in group_cols:
-            c = left[g].eqNullSafe(right[g])
-            cond = c if cond is None else (cond & c)
-        return cond
-
+    # (see merge.py for the DPP heuristic and null-split story). The
+    # fallback derivation is persisted: it feeds the inline probe,
+    # the semi branches AND two anti joins below.
+    lost = touched_groups(current, staged, actions, key, group_cols,
+                          del_only=True)
     recomputed = hll_registers(
-        touched_group_semi(merged, rec_groups, group_cols,
+        touched_group_semi(merged, lost, group_cols,
                            null_safe=groups_nullable,
                            inline_threshold=touched_inline_threshold),
         group_cols, sketch_key)
-    t = F.broadcast(rec_groups).alias("t")
-    adds = staged.join(ins_keys, key, "left_semi").alias("a")
     add_regs = hll_registers(
-        adds.join(t, null_safe_on(adds, t), "left_anti"),
+        drop_groups(staged.join(ins_keys, key, "left_semi"), lost,
+                    group_cols),
         group_cols, sketch_key)
-    b = old_regs.alias("b")
-    untouched = b.join(t, null_safe_on(b, t), "left_anti")
     merged_untouched = (
-        untouched.unionByName(add_regs)
+        drop_groups(old_regs, lost, group_cols).unionByName(add_regs)
         .groupBy(*group_cols, "idx").agg(F.max("m").alias("m")))
     return merged_untouched.unionByName(recomputed)
 
@@ -334,7 +313,7 @@ def cms_lookup(cms: DataFrame, probes: DataFrame,
 
 def maintain_cms(current: DataFrame, staged: DataFrame,
                  actions: DataFrame, key: str, sketch_key: Column,
-                 old_cms: DataFrame) -> DataFrame:
+                 old_cms: DataFrame | None = None) -> DataFrame:
     """Incremental maintenance of a CMS counter view through a CDC
     merge — and the reason it completes the IVM taxonomy: CMS is a
     LINEAR sketch (counters are sums), so it is FULLY
@@ -346,17 +325,13 @@ def maintain_cms(current: DataFrame, staged: DataFrame,
     groups that lose rows because max has no inverse; sums do).
     O(|changed rows| x d) cell deltas against the 4096-row view.
     Cells that return to zero are dropped so the maintained table
-    stays identical to a from-scratch build."""
-    from linz_bde_uploader_spark.operators.merge import (
-        ACTION_DELETE, ACTION_INSERT, ACTION_KEY_CHANGE, ACTION_UPDATE)
-    del_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_DELETE, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
-    ins_keys = F.broadcast(
-        actions.filter(F.col("action").isin(
-            ACTION_INSERT, ACTION_UPDATE, ACTION_KEY_CHANGE))
-        .select(F.col("key").alias(key)))
+    stays identical to a from-scratch build. ``old_cms=None`` is the
+    bootstrap path: the old counters are built from ``current``
+    (same result as a build over the merged state, not
+    O(changes))."""
+    del_keys, ins_keys = delta_keys(actions, key)
+    if old_cms is None:
+        old_cms = cms_build(current.select(sketch_key.alias("tok")))
     removed = cms_build(
         current.join(del_keys, key, "left_semi")
         .select(sketch_key.alias("tok"))) \

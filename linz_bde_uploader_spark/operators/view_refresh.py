@@ -2,7 +2,11 @@
 (streaming/events.streaming_cdc_upload) and the BATCH CLI driver
 (driver.BdeUploader): one implementation of the dataset-stamp replay
 guard and the per-family maintenance calls, so the two paths cannot
-drift.
+drift. Each view a ``ViewSpec`` declares is one entry of ``_views``:
+its table suffix, its seed (the view's one shape function in
+operators/merge.py or operators/sketches.py) and its ``maintain_*``
+refresh; ``seed_views`` and ``refresh_views`` are each one loop over
+those entries.
 
 Reference contract: derived state stays consistent with the merge
 inside the same dataset transaction — the reference runs its
@@ -28,9 +32,10 @@ state, with no cross-table transaction. (Dataset names are
 fixed-width timestamps, so lexicographic order is chronological
 order — the O1 repository-ordering invariant.)
 
-Scale shape: each refresh is O(|changes|) — the delta algebra of
-operators/merge.maintain_aggregate / maintain_extrema /
-maintain_join — never a rescan of the merged base table.
+Scale shape: each refresh is the delta algebra of operators/merge.py
+— O(|changes|) for the self-maintainable views (agg, join, cms), a
+recompute of only the touched groups' merged rows for the others —
+never a rebuild from the whole merged base table.
 """
 
 from __future__ import annotations
@@ -102,89 +107,86 @@ class ViewSpec:
         if self.distinct_col is not None and not self.group_cols:
             raise ValueError("ViewSpec.distinct_col requires group_cols")
 
+    @property
+    def carry_cols(self) -> list[str] | None:
+        """The group columns ``classify_actions`` carries (free: the
+        classify join holds both rows), so every partial-refresh view
+        derives its touched groups O(changes) from the actions frame
+        instead of re-scanning the base by key."""
+        return sorted(set(self.group_cols)) if self.group_cols else None
+
 
 def _behind(store, view_table: str, ds: str) -> bool:
     stamp = store.current_dataset(view_table)
     return stamp is None or stamp < ds
 
 
-def _enrich(fact: DataFrame, key: str, join: dict) -> DataFrame:
-    dim = join["dim"]
-    return (fact.join(dim, fact[join["fact_col"]] == dim[join["dim_col"]],
-                      "inner")
-            .select(fact[key], *[fact[c] for c in join["fact_cols"]],
-                    *[dim[c] for c in join["dim_cols"]]))
+def _views(spec: ViewSpec, key: str):
+    """``(suffix, seed, maintain)`` of every view ``spec`` declares, in
+    write order. ``seed(df)`` is the view of a state, by the view's
+    one shape function; ``maintain(cur, stg, actions, merged, old)``
+    is its refresh through one merge, ``old=None`` (no stored view
+    yet) bootstrapping."""
+    from linz_bde_uploader_spark.operators import sketches as SK
+
+    g, v, vt = spec.group_cols, spec.value_col, spec.value_type
+    if spec.join is not None:
+        j = (spec.join["dim"], spec.join["fact_col"], spec.join["dim_col"],
+             spec.join["fact_cols"], spec.join["dim_cols"])
+        yield ("join", lambda df: M.join_view(df, key, *j),
+               lambda cur, stg, a, merged, old: M.maintain_join(
+                   cur, stg, a, key, *j, old_view=old))
+    if spec.hll_key is not None:
+        hk = F.col(spec.hll_key).cast("string")
+        yield ("hll", lambda df: SK.hll_registers(df, g, hk),
+               lambda cur, stg, a, merged, old: SK.maintain_hll(
+                   cur, stg, a, key, g, hk, merged, old_regs=old))
+    if spec.cms_key is not None:
+        ck = F.col(spec.cms_key).cast("string")
+        yield ("cms", lambda df: SK.cms_build(df.select(ck.alias("tok"))),
+               lambda cur, stg, a, merged, old: SK.maintain_cms(
+                   cur, stg, a, key, ck, old_cms=old))
+    if spec.topk is not None:
+        yield ("topk",
+               lambda df: M.topk_view(df, g, key, v, spec.topk,
+                                      value_type=vt),
+               lambda cur, stg, a, merged, old: M.maintain_topk(
+                   cur, stg, a, key, g, v, merged, k=spec.topk,
+                   old_topk=old, value_type=vt))
+    if spec.distinct_col is not None:
+        dc = spec.distinct_col
+        yield ("distinct", lambda df: M.distinct_view(df, g, dc),
+               lambda cur, stg, a, merged, old: M.maintain_distinct(
+                   cur, stg, a, key, g, dc, merged, old_distinct=old))
+    if g is None or v is None:
+        return
+    yield ("agg", lambda df: M.aggregate_view(df, g, v, vt),
+           lambda cur, stg, a, merged, old: M.maintain_aggregate(
+               cur, stg, a, key, g, v, value_type=vt, old_agg=old))
+    if spec.minmax:
+        yield ("minmax", lambda df: M.extrema_view(df, g, v, vt),
+               lambda cur, stg, a, merged, old: M.maintain_extrema(
+                   cur, stg, a, key, g, v, merged, old_extrema=old,
+                   value_type=vt))
 
 
 def seed_views(store, table_name: str, df: DataFrame, ds: str,
-               spec: ViewSpec, key: str, force: bool = False) -> None:
+               spec: ViewSpec, key: str) -> None:
     """Direct-recompute seeding for snapshot semantics: the streaming
     bootstrap batch and the batch driver's level-0 replace both
-    install the views as plain aggregates/joins of the new state —
-    there is no prior view to delta against (bootstrap) or the whole
-    base was just replaced (L0), so O(changes) does not apply.
+    install the views as the view shapes of the new state — there is
+    no prior view to delta against (bootstrap) or the whole base was
+    just replaced (L0), so O(changes) does not apply.
 
-    ``force=True`` (the snapshot-replace path) writes regardless of
-    the stamp guard: a snapshot REPLACES the base, so any standing
-    view state is invalid by definition — including a view stamped
-    LATER than the incoming dataset (an operator-forced re-load over
-    leftover derived state; dataset order says nothing there). The
-    seed is a direct recompute of the staged frame, so re-running it
-    on a crash replay is idempotent — the guard's double-apply
-    hazard, which only exists for DELTAS, does not apply. Without
-    force (no caller uses it today) the ordered guard applies as in
-    the incremental path."""
-    if spec.join is not None and (
-            force or _behind(store, f"{table_name}__join", ds)):
-        store.write(f"{table_name}__join", _enrich(df, key, spec.join),
-                    dataset=ds)
-    if spec.hll_key is not None and spec.group_cols and (
-            force or _behind(store, f"{table_name}__hll", ds)):
-        from linz_bde_uploader_spark.operators.sketches import (
-            hll_registers)
-        store.write(f"{table_name}__hll",
-                    hll_registers(df, spec.group_cols,
-                                  F.col(spec.hll_key).cast("string")),
-                    dataset=ds)
-    if spec.cms_key is not None and (
-            force or _behind(store, f"{table_name}__cms", ds)):
-        from linz_bde_uploader_spark.operators.sketches import cms_build
-        store.write(f"{table_name}__cms",
-                    cms_build(df.select(F.col(spec.cms_key)
-                                        .cast("string").alias("tok"))),
-                    dataset=ds)
-    if spec.topk is not None and (
-            force or _behind(store, f"{table_name}__topk", ds)):
-        store.write(f"{table_name}__topk",
-                    M.topk_view(df, spec.group_cols, key,
-                                spec.value_col, spec.topk,
-                                value_type=spec.value_type),
-                    dataset=ds)
-    if spec.distinct_col is not None and (
-            force or _behind(store, f"{table_name}__distinct", ds)):
-        store.write(f"{table_name}__distinct",
-                    M.distinct_view(df, spec.group_cols,
-                                    spec.distinct_col),
-                    dataset=ds)
-    if spec.group_cols is None or spec.value_col is None:
-        return
-    vv = F.col(spec.value_col).cast(spec.value_type)
-    if force or _behind(store, f"{table_name}__agg", ds):
-        # count the CAST column, not the raw one: maintain_aggregate
-        # counts non-null of the cast, and a non-null value that casts
-        # to NULL must not inflate the seed
-        seed = df.groupBy(*spec.group_cols).agg(
-            F.count("*").alias("n"),
-            F.count(vv).alias("n_vals"),
-            F.sum(vv).cast("decimal(38,2)").alias("total"))
-        store.write(f"{table_name}__agg", seed, dataset=ds)
-    if spec.minmax and (
-            force or _behind(store, f"{table_name}__minmax", ds)):
-        mm0 = df.groupBy(*spec.group_cols).agg(
-            F.count("*").alias("n"),
-            F.min(vv).alias("vmin"),
-            F.max(vv).alias("vmax"))
-        store.write(f"{table_name}__minmax", mm0, dataset=ds)
+    The seed writes past the dataset-stamp guard: a snapshot REPLACES
+    the base, so any standing view state is invalid by definition —
+    including a view stamped LATER than the incoming dataset (an
+    operator-forced re-load over leftover derived state; dataset
+    order says nothing there). The seed is a direct recompute, so
+    re-running it on a crash replay is idempotent — the guard's
+    double-apply hazard exists only for DELTAS."""
+    for suffix, seed, _ in _views(spec, key):
+        store.write(f"{table_name}__{suffix}", seed(df), dataset=ds)
 
 
 def refresh_views(spark: SparkSession, store, table_name: str,
@@ -193,71 +195,15 @@ def refresh_views(spark: SparkSession, store, table_name: str,
                   key: str) -> None:
     """O(changes) incremental refresh of every view in ``spec``
     against one CDC merge's (current, staged, actions, merged)
-    quadruple, each write behind the ordered dataset-stamp guard.
+    quadruple, each write behind the ordered dataset-stamp guard. A
+    view with no stored table yet bootstraps (``old=None``).
     MUST be called BEFORE the base-table write: once the base is
     merged a replay classifies all-'0' and the view delta is no
     longer derivable, so any view still lagging at that point would
     stay stale forever."""
-    if spec.join is not None and _behind(store, f"{table_name}__join", ds):
-        jt = f"{table_name}__join"
-        old_jv = store.read(spark, jt) if store.exists(jt) else None
-        jv = M.maintain_join(cur, stg, actions, key,
-                             spec.join["dim"], spec.join["fact_col"],
-                             spec.join["dim_col"], spec.join["fact_cols"],
-                             spec.join["dim_cols"], old_view=old_jv)
-        store.write(jt, jv, dataset=ds)
-    ht = f"{table_name}__hll"
-    if spec.hll_key is not None and spec.group_cols \
-            and _behind(store, ht, ds):
-        from linz_bde_uploader_spark.operators.sketches import (
-            maintain_hll)
-        old_regs = store.read(spark, ht) if store.exists(ht) else None
-        regs = maintain_hll(cur, stg, actions, key, spec.group_cols,
-                            F.col(spec.hll_key).cast("string"),
-                            merged, old_regs=old_regs)
-        store.write(ht, regs, dataset=ds)
-    ct = f"{table_name}__cms"
-    if spec.cms_key is not None and _behind(store, ct, ds):
-        from linz_bde_uploader_spark.operators.sketches import (
-            cms_build, maintain_cms)
-        if store.exists(ct):
-            cms = maintain_cms(cur, stg, actions, key,
-                               F.col(spec.cms_key).cast("string"),
-                               old_cms=store.read(spark, ct))
-        else:  # bootstrap: no prior sketch to delta against
-            cms = cms_build(merged.select(F.col(spec.cms_key)
-                                          .cast("string").alias("tok")))
-        store.write(ct, cms, dataset=ds)
-    tt = f"{table_name}__topk"
-    if spec.topk is not None and _behind(store, tt, ds):
-        old_tk = store.read(spark, tt) if store.exists(tt) else None
-        tk = M.maintain_topk(cur, stg, actions, key,
-                             spec.group_cols, spec.value_col,
-                             merged, k=spec.topk, old_topk=old_tk,
-                             value_type=spec.value_type)
-        store.write(tt, tk, dataset=ds)
-    dt = f"{table_name}__distinct"
-    if spec.distinct_col is not None and _behind(store, dt, ds):
-        old_dc = store.read(spark, dt) if store.exists(dt) else None
-        dc = M.maintain_distinct(cur, stg, actions, key,
-                                 spec.group_cols, spec.distinct_col,
-                                 merged, old_distinct=old_dc)
-        store.write(dt, dc, dataset=ds)
-    if spec.group_cols is None or spec.value_col is None:
-        return
-    at = f"{table_name}__agg"
-    if _behind(store, at, ds):
-        old = store.read(spark, at) if store.exists(at) else None
-        view = M.maintain_aggregate(cur, stg, actions, key,
-                                    spec.group_cols, spec.value_col,
-                                    value_type=spec.value_type,
-                                    old_agg=old)
-        store.write(at, view, dataset=ds)
-    mt = f"{table_name}__minmax"
-    if spec.minmax and _behind(store, mt, ds):
-        old_mm = store.read(spark, mt) if store.exists(mt) else None
-        mm = M.maintain_extrema(cur, stg, actions, key,
-                                spec.group_cols, spec.value_col,
-                                merged, old_extrema=old_mm,
-                                value_type=spec.value_type)
-        store.write(mt, mm, dataset=ds)
+    for suffix, _, maintain in _views(spec, key):
+        vt = f"{table_name}__{suffix}"
+        if _behind(store, vt, ds):
+            old = store.read(spark, vt) if store.exists(vt) else None
+            store.write(vt, maintain(cur, stg, actions, merged, old),
+                        dataset=ds)

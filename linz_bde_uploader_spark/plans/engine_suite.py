@@ -527,10 +527,7 @@ def q_cdc_minmax_refresh(spark, sf_dir: str):
                                          ORDER_COLS,
                                          carry_cols=["o_orderstatus"]))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
-    v = F.col("o_totalprice").cast("decimal(12,2)")
-    old = cur.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n"), F.min(v).alias("vmin"),
-        F.max(v).alias("vmax"))
+    old = M.extrema_view(cur, ["o_orderstatus"], "o_totalprice")
     mm = M.maintain_extrema(cur, stg, actions, "o_orderkey",
                             ["o_orderstatus"], "o_totalprice",
                             merged, old_extrema=old)
@@ -575,17 +572,8 @@ def q_cdc_topk_refresh(spark, sf_dir: str):
                                          ORDER_COLS,
                                          carry_cols=["o_orderstatus"]))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
-    v = F.col("o_totalprice").cast("decimal(12,2)")
-    from pyspark.sql import Window
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        v.desc(), F.col("o_orderkey").asc())
-    old = (cur.select("o_orderstatus", "o_orderkey", v.alias("_v"))
-           .withColumn("rank", F.row_number().over(
-               Window.partitionBy("o_orderstatus").orderBy(
-                   F.col("_v").desc(), F.col("o_orderkey").asc())))
-           .filter(F.col("rank") <= 3)
-           .select("o_orderstatus", F.col("rank").cast("bigint"),
-                   "o_orderkey", F.col("_v").alias("o_totalprice")))
+    old = M.topk_view(cur, ["o_orderstatus"], "o_orderkey",
+                      "o_totalprice", 3)
     tk = M.maintain_topk(cur, stg, actions, "o_orderkey",
                          ["o_orderstatus"], "o_totalprice",
                          merged, k=3, old_topk=old)
@@ -635,11 +623,7 @@ def q_cdc_distinct_refresh(spark, sf_dir: str):
                                          ORDER_COLS,
                                          carry_cols=["o_orderstatus"]))
     merged = M.apply_actions(cur, stg, actions, "o_orderkey")
-    old = (cur.groupBy("o_orderstatus", "o_custkey")
-           .agg(F.count("*").alias("_m"))
-           .groupBy("o_orderstatus")
-           .agg(F.sum("_m").cast("bigint").alias("n"),
-                F.count("o_custkey").alias("n_distinct")))
+    old = M.distinct_view(cur, ["o_orderstatus"], "o_custkey")
     dc = M.maintain_distinct(cur, stg, actions, "o_orderkey",
                              ["o_orderstatus"], "o_custkey",
                              merged, old_distinct=old)
@@ -680,15 +664,11 @@ def q_cdc_join_refresh(spark, sf_dir: str):
     customer = load_table(spark, sf_dir, "customer")
     actions = persist(M.classify_actions(cur, stg, chg, "o_orderkey",
                                          ORDER_COLS))
-    old = (cur.join(customer,
-                    cur["o_custkey"] == customer["c_custkey"], "inner")
-           .select(cur["o_orderkey"], cur["o_orderstatus"],
-                   cur["o_totalprice"], customer["c_mktsegment"],
-                   customer["c_nationkey"]))
-    view = M.maintain_join(cur, stg, actions, "o_orderkey",
-                           customer, "o_custkey", "c_custkey",
-                           ["o_orderstatus", "o_totalprice"],
-                           ["c_mktsegment", "c_nationkey"],
+    shape = (customer, "o_custkey", "c_custkey",
+             ["o_orderstatus", "o_totalprice"],
+             ["c_mktsegment", "c_nationkey"])
+    old = M.join_view(cur, "o_orderkey", *shape)
+    view = M.maintain_join(cur, stg, actions, "o_orderkey", *shape,
                            old_view=old)
     return view.select(
         "o_orderkey", "o_orderstatus",

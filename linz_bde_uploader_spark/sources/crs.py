@@ -357,7 +357,11 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
 
     exprs = []
     for i, c in keep:
-        raw = F.element_at(F.col("_p"), i + 1)
+        # F.get is NULL past the end, so no filter order — Catalyst
+        # may evaluate a pushed-down predicate on a parsed column
+        # before ``_ok`` — can raise on a short malformed row. Rows
+        # that pass ``_ok`` hold every field.
+        raw = F.get(F.col("_p"), i)
         val = F.when(raw == "", F.lit(None)).otherwise(raw)  # empty = NULL
         exprs.append(_cast_and_cleanse(val, c, cleanse).alias(c.name))
     return data.filter(F.col("_ok")).select(*exprs)

@@ -38,6 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from linz_bde_uploader_spark.cache import persist, release
+from linz_bde_uploader_spark.operators.view_refresh import (
+    ViewSpec, refresh_views, seed_views,
+)
 
 
 def stream_repository(spark: SparkSession, root: str, level: int,
@@ -69,7 +72,7 @@ def parse_crs_stream(lines: DataFrame, schema: T.StructType) -> DataFrame:
                 .filter(F.size(parts) == ncols + 1)
     exprs = []
     for i, field in enumerate(schema.fields):
-        raw = F.element_at(parts, i + 1)
+        raw = F.get(parts, i)
         # try_cast: a malformed row must not kill a long-running
         # stream (the batch reader enforces the error budget instead)
         val = F.when(raw == "", F.lit(None)).otherwise(raw) \
@@ -245,14 +248,7 @@ def streaming_cdc_upload(spark: SparkSession, root: str, store,
                          schema: T.StructType, file_tag: str,
                          checkpoint: str,
                          max_files_per_trigger: int | None = None,
-                         view_group_cols: list[str] | None = None,
-                         view_value_col: str | None = None,
-                         view_minmax: bool = False,
-                         view_join: dict | None = None,
-                         view_hll_key: str | None = None,
-                         view_cms_key: str | None = None,
-                         view_topk: int | None = None,
-                         view_distinct_col: str | None = None,
+                         views: ViewSpec | None = None,
                          use_dataset_transaction: bool = False) -> None:
     """The poll-run upload loop as a stream: watch the level_5
     repository, and for every micro-batch of new dataset files run the
@@ -270,55 +266,24 @@ def streaming_cdc_upload(spark: SparkSession, root: str, store,
     reference's sequential semantics; ``maxFilesPerTrigger`` bounds
     per-batch work.
 
-    With ``view_group_cols``/``view_value_col`` set, a continuously-
-    maintained aggregate view ``<table>__agg`` refreshes alongside
-    every merge via the O(changes) delta algebra
-    (operators/merge.maintain_aggregate): the STORED view is the old
-    state, so each refresh touches only changed-key rows — a
-    streaming materialized view. foreachBatch is at-least-once, so
-    each view write sits behind a dataset-stamp replay guard (the
-    store's C8 revision comment doubles as the watermark) and the
-    base-table write comes last; a replayed batch either re-derives
-    the identical delta from the still-pre-merge base or is skipped
-    by the stamp — exactly-once view maintenance without any
-    cross-table transaction. ``view_minmax=True`` additionally
-    maintains ``<table>__minmax`` through the partial-refresh path
-    (operators/merge.maintain_extrema): untouched groups carry
-    forward from the stored view, touched groups recompute from the
-    post-merge state.
-
-    ``view_hll_key`` (requires ``view_group_cols``) additionally
-    maintains a per-group distinct-count sketch view ``<table>__hll``
-    (operators/sketches.maintain_hll — register max-merge on
-    insert-only groups, touched-group recompute on row loss), the
-    streaming distinct-users-per-segment materialization.
-
-    ``view_cms_key`` additionally maintains a count-min frequency
-    sketch view ``<table>__cms`` (operators/sketches.maintain_cms —
-    a LINEAR sketch: deletes subtract, inserts add, no recompute
-    branch at any granularity), the streaming token-frequency
-    materialization. Needs no group columns.
-
-    ``view_topk`` / ``view_distinct_col`` additionally maintain the
-    per-group leaderboard ``<table>__topk`` (merge.maintain_topk,
-    k rows per group, value DESC / key ASC total order) and the exact
-    count-distinct ``<table>__distinct`` (merge.maintain_distinct,
-    last-holder deletes recompute touched groups) — the same
-    touched-group partial-refresh discipline as minmax/hll.
-
-    ``view_join`` (keys: ``dim`` DataFrame, ``fact_col``, ``dim_col``,
-    ``fact_cols``, ``dim_cols``) additionally maintains an enriched
-    join view ``<table>__join`` via the delta-join rule
-    (operators/merge.maintain_join): the stored view minus the
-    batch's D/U/X keys plus the staged delta joined to the static
-    dimension — per micro-batch the view refresh is O(|changes|) and
-    never re-joins the base table. Same replay-guard discipline as
-    the other views.
+    ``views`` (an operators/view_refresh.ViewSpec) names the
+    maintained views that refresh alongside every merge — the
+    streaming materialized views. The STORED view is the old state,
+    so each refresh is the delta algebra of operators/merge.py: the
+    aggregate, join and count-min views are self-maintainable
+    (O(changed keys)); the min/max, top-k, distinct-count and HLL
+    views recompute only the groups the batch touched, carrying every
+    other group forward. foreachBatch is at-least-once, so each view
+    write sits behind a dataset-stamp replay guard (the store's C8
+    revision comment doubles as the watermark) and the base-table
+    write comes last; a replayed batch either re-derives the
+    identical delta from the still-pre-merge base or is skipped by
+    the stamp — exactly-once view maintenance without any
+    cross-table transaction. The first batch seeds every view from
+    the bootstrap snapshot. The batch driver refreshes its views
+    through the same functions (``UploadConfig.views``).
     """
     from linz_bde_uploader_spark.operators import merge as M
-    from linz_bde_uploader_spark.operators.view_refresh import (
-        ViewSpec, refresh_views, seed_views,
-    )
     from linz_bde_uploader_spark.sources.crs import read_crs
 
     lines = stream_repository(spark, root, 5, schema, file_tag,
@@ -329,10 +294,7 @@ def streaming_cdc_upload(spark: SparkSession, root: str, store,
     # operators/view_refresh.py, SHARED with the batch CLI driver so
     # the two upload paths cannot drift (its module docstring carries
     # the ordered-guard correctness argument)
-    spec = ViewSpec(group_cols=view_group_cols, value_col=view_value_col,
-                    minmax=view_minmax, join=view_join,
-                    hll_key=view_hll_key, cms_key=view_cms_key,
-                    topk=view_topk, distinct_col=view_distinct_col)
+    spec = views or ViewSpec()
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         batch = persist(batch)
@@ -344,26 +306,25 @@ def streaming_cdc_upload(spark: SparkSession, root: str, store,
                            .select(*[f.name for f in schema.fields])
                 if not store.exists(table_name):
                     # bootstrap: direct-recompute seed of every view,
-                    # forced — a freshly-created base invalidates any
-                    # leftover view state whatever its stamp says.
+                    # past the stamp guard — a freshly-created base
+                    # invalidates any leftover view state whatever its
+                    # stamp says.
                     # Under the dataset transaction the base + seeds
                     # flip together, same as the CDC branch below.
                     with store.dataset_scope(use_dataset_transaction):
                         store.write(table_name, stg, key=key, dataset=ds)
                         seed_views(store, table_name, stg, ds, spec,
-                                   key, force=True)
+                                   key)
                     continue
                 cur = store.read(spark, table_name)
                 chg = M.prepare_change_table(
                     read_crs(spark, f"{root}/level_5/{ds}/xaud.crs"),
                     table_name)
-                # carry view group columns (free in the classify
-                # join) so partial-refresh views derive touched
-                # groups O(changes) — same wiring as the batch driver
-                carry = (sorted(set(spec.group_cols))
-                         if spec.group_cols else None)
+                # carried view group columns: partial-refresh views
+                # derive touched groups O(changes), as in the driver
                 actions = persist(M.classify_actions(
-                    cur, stg, chg, key, cur.columns, carry_cols=carry))
+                    cur, stg, chg, key, cur.columns,
+                    carry_cols=spec.carry_cols))
                 merged = M.apply_actions(cur, stg, actions, key)
                 # Views refresh BEFORE the base write, each behind its
                 # dataset-stamp replay guard (see refresh_view). The

@@ -92,6 +92,33 @@ def test_error_budget(spark, tmp_path):
     assert df.count() == 3
 
 
+
+def test_read_crs_filter_order_cannot_raise(spark, tmp_path):
+    """A filter on a parsed column may run before the data-row and
+    column-count filters: Catalyst pushes it into the same Filter,
+    and without whole-stage codegen (which a large predicate
+    disables) the shared field pick is evaluated first for every
+    line. The pick must then yield NULL, not raise, on header lines
+    and on malformed rows the budget tolerates — and the rows are
+    those of the unfiltered read."""
+    import pyspark.sql.functions as F
+
+    p = write_crs(str(tmp_path / "bad.crs"), PAB1_L0 + "1|2|3|\n7|\n")
+    cfg = CleanseConfig(max_errors=2)
+    a = F.col("audit_id")
+    want = sorted(r.audit_id for r in read_crs(spark, p, cleanse=cfg)
+                  .filter((a > 80401148) & (a < 10 ** 9)).collect())
+    assert want == [80401149, 80401150]
+    key = "spark.sql.codegen.wholeStage"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = read_crs(spark, p, cleanse=cfg).filter(
+            (a > 80401148) & (a < 10 ** 9))
+        assert sorted(r.audit_id for r in got.collect()) == want
+    finally:
+        spark.conf.set(key, before)
+
 def test_cleanse_char_map(spark):
     import pyspark.sql.functions as F
     cfg = CleanseConfig()

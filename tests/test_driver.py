@@ -1458,3 +1458,78 @@ def test_dataset_transaction_two_level5_datasets(spark, tmp_path):
     rows = {x.audit_id: x.sequence
             for x in store.read(spark, "crs_parcel_bndry").collect()}
     assert rows == {100: 3, 300: 40, 500: 6, 80401148: 10, 80401149: 20}
+
+
+def _grouped_crs(rows) -> str:
+    """A .crs file of table ``crs_grouped`` (id, grp, val) holding
+    ``rows``, with the header lines of a real extract."""
+    head = "".join(
+        f"COLUMN\t {c:<30} integer {n}\n"
+        for c, n in (("id", "NOT NULL"), ("grp", "NULL"), ("val", "NULL")))
+    return ("HEDR\t 2.0.0\nSOFTWARE cbe_b30 V1.0.1\nSCHEMA\t V1.0\n"
+            "USER\t crs_bde\nSTART\t 2016-06-01 17:12:25\n"
+            "END\t 2016-06-01 17:12:25\nSQL\t SELECT * FROM crs_grouped\n"
+            "TABLE\tcrs_grouped\n" + head + "DESC\nSIZE          100\n"
+            "{CRS-DATA}\n"
+            + "".join(f"{i}|{g}|{v}|\n" for i, g, v in rows))
+
+
+@pytest.mark.parametrize("touched", [64, 65])
+def test_level5_minmax_refresh_at_inline_bound(spark, tmp_path,
+                                               monkeypatch, touched):
+    """A level-5 merge of a table with a min/max view, touching
+    exactly ``TOUCHED_INLINE_DEFAULT`` groups (the inlined touched-set
+    predicate) and one more (the join form): the load succeeds and the
+    refreshed view equals a full recompute of the merged base. The
+    inlined predicate reaches the staged file's parse, header lines
+    included, so it must neither break whole-stage codegen nor meet
+    a field pick that raises on a line the data filter drops."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from linz_bde_uploader_spark import driver as D
+    from tests.fixtures import XAUD, write_crs
+
+    assert D.M.TOUCHED_INLINE_DEFAULT == 64
+    root = str(tmp_path / "repo")
+    base = [(i, i % 100, i) for i in range(1, 201)]
+    changed = [(100 + g, g, -(100 + g)) for g in range(touched)]
+    write_crs(os.path.join(root, "level_0", "20160601000000", "grp1.crs"),
+              _grouped_crs(base))
+    l5 = os.path.join(root, "level_5", "20160601171200")
+    write_crs(os.path.join(l5, "grp1.crs"), _grouped_crs(changed))
+    xaud = (XAUD[:XAUD.index("{CRS-DATA}\n") + 11] + "".join(
+        f"{n}|crs_grouped|{i}|U|2016-06-01 17:12:17|\n"
+        for n, (i, _, _) in enumerate(changed, 1)))
+    write_crs(os.path.join(l5, "xaud.crs"), xaud)
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    up = BdeUploader(spark, BdeRepository(root), store,
+                     Ledger(str(tmp_path / "ctl")), parse_tables_conf("""
+TABLE l5_change_table l5_change_table files xaud
+TABLE crs_grouped key=id view=grp:val:minmax files grp1
+"""))
+    assert [x.status for x in up.apply_updates(level0=True)] == ["loaded"]
+
+    sizes = []
+    real_semi = D.M.touched_group_semi
+
+    def sizing_semi(merged, touched_df, *a, **k):
+        sizes.append(touched_df.count())
+        return real_semi(merged, touched_df, *a, **k)
+
+    monkeypatch.setattr(D.M, "touched_group_semi", sizing_semi)
+    r = up.apply_updates(level5=True)
+    monkeypatch.undo()
+    assert [(x.status, x.stats.nupdate) for x in r] == [
+        ("loaded", touched)]
+    assert sizes == [touched]
+    v = F.col("val").cast("decimal(12,2)")
+    want = (store.read(spark, "crs_grouped").groupBy("grp")
+            .agg(F.count("*").alias("n"), F.min(v).alias("vmin"),
+                 F.max(v).alias("vmax")))
+    got = store.read(spark, "crs_grouped__minmax")
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+    assert got.filter(F.col("vmin") < 0).count() == touched
+

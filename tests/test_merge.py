@@ -500,6 +500,32 @@ def test_touched_inline_threshold_boundary(spark):
         == {1, 4, 7}
 
 
+
+def test_touched_inline_struct_in_matches_join_path(spark):
+    """Several group columns inline as one struct ``IN``, whose field
+    comparison is null-safe: the inlined restriction keeps exactly
+    the rows the null-safe join path keeps, NULL members, DECIMAL and
+    DATE groups included."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from linz_bde_uploader_spark.operators import merge as M
+
+    base = spark.createDataFrame(
+        [(i, i % 5 if i % 7 else None,
+          Decimal(i % 3) if i % 11 else None,
+          dt.date(2020, 1, 1 + i % 4)) for i in range(200)],
+        "k long, a long, b decimal(12,2), d date")
+    touched = base.filter(F.col("k") % 9 == 0)
+    for cols in (["a", "b"], ["a", "b", "d"]):
+        t = touched.select(*cols).distinct()
+        inl = M.touched_group_semi(base, t, cols, inline_threshold=64)
+        assert "Join" not in \
+            inl._jdf.queryExecution().executedPlan().toString()
+        join = M.touched_group_semi(base, t, cols, inline_threshold=0)
+        assert sorted(r.k for r in inl.collect()) == \
+            sorted(r.k for r in join.collect())
+
 def test_fallback_touched_derivation_cached_once(spark):
     """The semi-join fallback touched derivation (actions WITHOUT
     carried group columns) is persisted before its multiple uses —

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from linz_bde_uploader_spark.operators import multimodal as MM
+from linz_bde_uploader_spark.operators.view_refresh import ViewSpec
 from linz_bde_uploader_spark.plans.tables import load_table
 from linz_bde_uploader_spark.streaming import events as STR
 from tests.fixtures import write_repository
@@ -819,9 +820,9 @@ def test_streaming_cdc_maintained_view(spark, tmp_path):
 
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_group_cols=["reversed"],
-                             view_value_col="sequence",
-                             view_minmax=True)
+                             views=ViewSpec(group_cols=["reversed"],
+                                            value_col="sequence",
+                                            minmax=True))
     assert stored_view() == direct()
     assert stored_mm() == direct_mm()
     assert isinstance(next(iter(stored_view().values()))[1], Decimal)
@@ -831,9 +832,9 @@ def test_streaming_cdc_maintained_view(spark, tmp_path):
     write_crs(os.path.join(ds2, "xaud.crs"), XAUD_B)
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_group_cols=["reversed"],
-                             view_value_col="sequence",
-                             view_minmax=True)
+                             views=ViewSpec(group_cols=["reversed"],
+                                            value_col="sequence",
+                                            minmax=True))
     assert stored_view() == direct()
     assert stored_mm() == direct_mm()
 
@@ -876,7 +877,7 @@ def test_streaming_cdc_join_view(spark, tmp_path):
 
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_join=vj)
+                             views=ViewSpec(join=vj))
     assert stored() == direct()
 
     ds2 = os.path.join(root, "level_5", "20160602000000")
@@ -884,7 +885,7 @@ def test_streaming_cdc_join_view(spark, tmp_path):
     write_crs(os.path.join(ds2, "xaud.crs"), XAUD_B)
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_join=vj)
+                             views=ViewSpec(join=vj))
     got = stored()
     assert got == direct()
     # golden F2 end-state enriched: re-key + updates + appends all
@@ -923,9 +924,10 @@ def test_streaming_view_replay_guard_crash_window(spark, tmp_path):
     def run():
         STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                                  "audit_id", schema, "pab1", ckpt,
-                                 view_group_cols=["reversed"],
-                                 view_value_col="sequence",
-                                 view_minmax=True, view_join=vj)
+                                 views=ViewSpec(group_cols=["reversed"],
+                                                value_col="sequence",
+                                                minmax=True,
+                                                join=vj))
 
     def direct():
         t = store.read(spark, "crs_parcel_bndry")
@@ -1066,9 +1068,10 @@ def test_streaming_view_replay_guard_multi_dataset_crash(spark, tmp_path):
     def run():
         STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                                  "audit_id", schema, "pab1", ckpt,
-                                 view_group_cols=["reversed"],
-                                 view_value_col="sequence",
-                                 view_minmax=True, view_join=vj)
+                                 views=ViewSpec(group_cols=["reversed"],
+                                                value_col="sequence",
+                                                minmax=True,
+                                                join=vj))
 
     def direct():
         t = store.read(spark, "crs_parcel_bndry")
@@ -1232,8 +1235,8 @@ def test_streaming_cdc_dataset_transaction_same_state(spark, tmp_path):
 
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_group_cols=["reversed"],
-                             view_value_col="sequence",
+                             views=ViewSpec(group_cols=["reversed"],
+                                            value_col="sequence"),
                              use_dataset_transaction=True)
     assert stored_view() == direct()
     # base and view carry the SAME dataset stamp — they flipped
@@ -1246,8 +1249,8 @@ def test_streaming_cdc_dataset_transaction_same_state(spark, tmp_path):
     write_crs(os.path.join(ds2, "xaud.crs"), XAUD_B)
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_group_cols=["reversed"],
-                             view_value_col="sequence",
+                             views=ViewSpec(group_cols=["reversed"],
+                                            value_col="sequence"),
                              use_dataset_transaction=True)
     assert stored_view() == direct()
     assert store.current_dataset("crs_parcel_bndry") == "20160602000000"
@@ -1284,9 +1287,9 @@ def test_streaming_cdc_hll_view(spark, tmp_path):
 
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_group_cols=["reversed"],
-                             view_value_col="sequence",
-                             view_hll_key="audit_id")
+                             views=ViewSpec(group_cols=["reversed"],
+                                            value_col="sequence",
+                                            hll_key="audit_id"))
     assert stored() == direct() and stored()
 
     ds2 = os.path.join(root, "level_5", "20160602000000")
@@ -1294,9 +1297,9 @@ def test_streaming_cdc_hll_view(spark, tmp_path):
     write_crs(os.path.join(ds2, "xaud.crs"), XAUD_B)
     STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                              "audit_id", schema, "pab1", ckpt,
-                             view_group_cols=["reversed"],
-                             view_value_col="sequence",
-                             view_hll_key="audit_id")
+                             views=ViewSpec(group_cols=["reversed"],
+                                            value_col="sequence",
+                                            hll_key="audit_id"))
     assert stored() == direct()
     assert store.current_dataset("crs_parcel_bndry__hll") == \
         "20160602000000"
@@ -1442,10 +1445,10 @@ def test_streaming_cdc_topk_distinct_views(spark, tmp_path):
     def run():
         STR.streaming_cdc_upload(spark, root, store, "crs_parcel_bndry",
                                  "audit_id", schema, "pab1", ckpt,
-                                 view_group_cols=["reversed"],
-                                 view_value_col="sequence",
-                                 view_topk=2,
-                                 view_distinct_col="lin_id")
+                                 views=ViewSpec(group_cols=["reversed"],
+                                                value_col="sequence",
+                                                topk=2,
+                                                distinct_col="lin_id"))
 
     def check():
         base = store.read(spark, "crs_parcel_bndry")
