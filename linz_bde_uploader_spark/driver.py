@@ -14,11 +14,13 @@ driver sequences datasets/tables exactly like the reference
 store's snapshot-pointer commit: nothing is visible until the pointer
 flips, and a failed dataset simply never commits.
 
-A level-5 load of a table with no maintained view runs one Spark
-action, its store write: the merge is one plan
-(``merge.merge_tagged``), the I/U/0/D stats and the gated row count
-are observed in the write, and the row-count tolerance verdict runs
-after the data lands and before the pointer is staged or flipped.
+Every table load (EP1, EP3 and level 5) is one store write
+(``BdeUploader._write_load``) of one plan whose rows carry their action
+(``merge.merge_tagged``, or the staged snapshot as all inserts): the
+I/U/0/D stats and the gated row count are observed in the write, and
+its verdict runs after the data lands and before the pointer is staged
+or flipped — the row-count tolerance gate, then the table's maintained
+views, written from the new version.
 """
 
 from __future__ import annotations
@@ -28,7 +30,6 @@ import subprocess
 import time
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -121,10 +122,10 @@ class UploadConfig:
     # sql/02-bde_control_functions.sql.in:2595-2676; dataset
     # transaction lib/LINZ/BdeDatabase.pm:455-510); here every
     # registered table's <table>__agg/__minmax/__join views refresh
-    # O(changes) per dataset BEFORE the base write, behind the
-    # dataset-stamp replay guard shared with the streaming path
-    # (operators/view_refresh.py) — a crash anywhere replays to the
-    # same state on the next run.
+    # O(changes) per dataset inside the base write's verdict, before
+    # the base pointer flips, behind the dataset-stamp replay guard
+    # shared with the streaming path (operators/view_refresh.py) — a
+    # crash anywhere replays to the same state on the next run.
     views: dict[str, ViewSpec] = field(default_factory=dict)
     # C4 dataset transaction (conf use_dataset_transaction, the
     # reference DEFAULT — conf/linz_bde_uploader.conf:89-92,
@@ -415,68 +416,31 @@ class BdeUploader:
 
     def upload_table_level0(self, job, ds: Dataset, table: TableDef,
                             incremental: bool = False) -> TableResult:
-        """EP1 (or EP3 when incremental=True) per-table load."""
+        """EP1 (or EP3 when incremental=True) per-table load: EP1, and
+        EP3 into an empty store, write the staged snapshot as all
+        inserts; EP3 writes ``merge_tagged``'s full form, the diff
+        against the stored version applied."""
         t0 = time.time()
         header, stg = self._stage(ds, table, "0")
         if table.key:
             validate_key(table, {c.name: c.type_name for c in header.columns})
-
-        # the staged FULL snapshot feeds several executions below —
-        # the row count / diff action counts, the applied-result
-        # materialization, every view-group seed, and the store
-        # write — and its parse plus ~300-rule cleanse is the L0
-        # path's dominant per-pass cost (each pass re-read and
-        # re-cleansed the file: measured 4 passes inside the f30
-        # l0_sec before this persist). Persist it once (the
-        # apply_updates loop releases per dataset). The spill
-        # trade at 100 TB is one transient table-sized copy on
-        # executor disk vs re-parsing the table per consumer.
-        stg = persist(stg, StorageLevel.MEMORY_AND_DISK)
-
-        # counts run only for the tolerance gate (an ungated table's
-        # check_tolerance is "ok" whatever the counts); a count that
-        # does run is recorded as the new pointer's ``rows``
-        gated = _gated(table)
-        prev_count = self._stored_rows(table) if gated else 0
-        new_count = None
+        prev_count = self._stored_rows(table) if _gated(table) else None
         if incremental and self.store.exists(table.name):
-            cur = self.store.read(self.spark, table.name)
-            diff = M.full_diff(cur, stg, table.key, cur.columns)
-            counts = {r["action"]: r["n"] for r in
-                      diff.groupBy("action").agg(F.count("*").alias("n")).collect()}
-            stats = M.MergeStats(ninsert=counts.get("I", 0),
-                                 nupdate=counts.get("U", 0),
-                                 ndelete=counts.get("D", 0))
-            # the applied result is itself consumed up to three times
-            # (tolerance count, view seeds, store write): persist it
-            # too, or each consumer re-runs the full-outer diff join
-            new = persist(M.apply_actions(cur, stg, diff, table.key),
-                          StorageLevel.MEMORY_AND_DISK)
-            if gated:
-                new_count = new.count()
+            tagged = M.merge_tagged(self.store.read(self.spark, table.name),
+                                    stg, None, table.key)
         else:
-            # EP1, or EP3 into an empty store: n inserts, no deletes
-            new_count = stg.count()
-            stats = M.MergeStats(ninsert=new_count)
-            new = M.level0_replace(stg)  # identity: reads stg's cache
-
-        tol, error = _tolerance(table, new_count, prev_count)
-        if error:
-            return TableResult(table.name, ds.name, "0", "error", stats,
-                               error)
+            tagged = stg.withColumn(M.ACTION_COL, F.lit(M.ACTION_INSERT))
         spec = self._views.get(table.name)
+        views = None
         if spec is not None:
             # snapshot semantics: L0 replaces the base wholesale, so
             # views re-seed by direct recompute of the new state, past
             # the stamp guard (see seed_views)
-            seed_views(self.store, table.name, new, ds.name, spec,
-                       table.key)
-        self.store.write(table.name, new, key=table.key, dataset=ds.name,
-                         rows=new_count)
-        self._record_loaded(job, table.name, ds.name, "0", stats,
-                            time.time() - t0, header.end_time or "")
-        return TableResult(table.name, ds.name, "0",
-                           "warning" if tol == "warning" else "loaded", stats)
+            def views(new):
+                seed_views(self.store, table.name, new, ds.name, spec,
+                           table.key)
+        return self._write_load(job, ds, table, "0", header, t0, tagged,
+                                prev_count, views)
 
     def upload_table_level5(self, job, ds: Dataset, table: TableDef,
                             changes, changed_tables: set[str]) -> TableResult:
@@ -504,76 +468,67 @@ class BdeUploader:
         chg = M.fix_key_swaps(stg, cur, chg, table.key, table.unique_cols)
         prev_count = self._stored_rows(table) if _gated(table) else None
         spec = self._views.get(table.name)
-        if spec is None:
-            return self._write_level5(job, ds, table, header, t0,
-                                      cur, stg, chg, prev_count)
-        # with a view, the actions frame (changed keys only) feeds the
-        # stats, both apply branches and every view refresh, so it is
-        # persisted; the apply_updates loop releases it with the
-        # dataset's other persists
-        actions = persist(M.classify_actions(
-            cur, stg, chg, table.key, cur.columns,
-            unique_cols=table.unique_cols, carry_cols=spec.carry_cols))
-        stats = M.merge_stats(actions)
-        merged = M.apply_actions(cur, stg, actions, table.key)
-        new_count = merged.count() if prev_count is not None else None
-        tol, error = _tolerance(table, new_count, prev_count)
-        if error:
-            return TableResult(table.name, ds.name, "5", "error", stats,
-                               error)
-        # maintained views refresh O(changes) BEFORE the base write,
-        # behind the dataset-stamp replay guard shared with
-        # streaming_cdc_upload (operators/view_refresh.py): a crash
-        # between a view write and the base write replays this
-        # dataset on the next run (the ledger watermark advances only
-        # after the base write below), the stamp skips the
-        # already-applied view delta, and the base write completes —
-        # derived state never double-counts and never goes stale, the
-        # reference's same-transaction consistency contract met by
-        # recovery instead (sql/02-bde_control_functions.sql.in:2595-2676)
-        refresh_views(self.spark, self.store, table.name, cur, stg,
-                      actions, merged, ds.name, spec, table.key)
-        self.store.write(table.name, merged, key=table.key,
-                         dataset=ds.name, rows=new_count)
-        self._record_loaded(job, table.name, ds.name, "5", stats,
-                            time.time() - t0, header.end_time or "")
-        return TableResult(table.name, ds.name, "5",
-                           "warning" if tol == "warning" else "loaded", stats)
+        views = None
+        if spec is not None:
+            # the view refresh reads the changed keys' actions several
+            # times, so they are persisted; the apply_updates loop
+            # releases them with the dataset's other persists
+            actions = persist(M.classify_actions(
+                cur, stg, chg, table.key, cur.columns,
+                unique_cols=table.unique_cols, carry_cols=spec.carry_cols))
 
-    def _write_level5(self, job, ds: Dataset, table: TableDef, header,
-                      t0: float, cur, stg, chg,
-                      prev_count: int | None) -> TableResult:
-        """The level-5 merge of a table with no maintained view, whose
-        store write is its only Spark action: ``merge_tagged`` builds
-        classify and apply as one plan, the write observes the action
-        counts and the written row count, and the tolerance verdict
-        runs before the pointer is staged or flipped. ``prev_count``
-        is the gate's previous row count, None for an ungated
-        table."""
+            def views(merged):
+                refresh_views(self.spark, self.store, table.name, cur, stg,
+                              actions, merged, ds.name, spec, table.key)
+        return self._write_load(
+            job, ds, table, "5", header, t0,
+            M.merge_tagged(cur, stg, chg, table.key, table.unique_cols),
+            prev_count, views)
+
+    def _write_load(self, job, ds: Dataset, table: TableDef, level: str,
+                    header, t0: float, tagged, prev_count: int | None,
+                    views) -> TableResult:
+        """Every table load's one store write. ``tagged`` is the new
+        state with each row's action in ``ACTION_COL`` (D rows are
+        dropped in the write); the write observes the action counts
+        and the written row count, then its verdict runs before the
+        pointer is staged or flipped: the tolerance gate first
+        (``prev_count`` is the gate's previous row count, None for an
+        ungated table), then ``views``, if given, with the written
+        version as the new state.
+
+        So views are written after the gate passes and before the base
+        pointer flips. A crash between the two replays the dataset on
+        the next run (the ledger watermark advances only after the
+        base write) and the views' dataset stamps skip the
+        already-applied delta (operators/view_refresh.py): the
+        reference's same-transaction consistency contract
+        (sql/02-bde_control_functions.sql.in:2595-2676) met by
+        recovery."""
         observed = M.MergeObservation()
         outcome = {}
 
-        def verdict():
+        def verdict(written):
             stats, rows = observed.result()
             outcome["stats"] = stats
             outcome["tol"], error = _tolerance(table, rows, prev_count)
             if error:
                 raise _Rejected(error)
+            if views is not None:
+                views(written)
             return rows if prev_count is not None else None
 
         try:
-            self.store.write(
-                table.name,
-                M.merge_tagged(cur, stg, chg, table.key, table.unique_cols),
-                key=table.key, dataset=ds.name,
-                clustered=observed.apply, verdict=verdict)
+            self.store.write(table.name, tagged, key=table.key,
+                             dataset=ds.name, clustered=observed.apply,
+                             verdict=verdict)
         except _Rejected as e:
-            return TableResult(table.name, ds.name, "5", "error",
+            return TableResult(table.name, ds.name, level, "error",
                                outcome["stats"], str(e))
-        self._record_loaded(job, table.name, ds.name, "5",
+        self._record_loaded(job, table.name, ds.name, level,
                             outcome["stats"], time.time() - t0,
                             header.end_time or "")
-        return TableResult(table.name, ds.name, "5",
+        return TableResult(table.name, ds.name, level,
                            "warning" if outcome["tol"] == "warning"
                            else "loaded", outcome["stats"])
 

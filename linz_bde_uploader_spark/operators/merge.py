@@ -27,13 +27,13 @@ Scale notes (100 TB design):
   set (left_anti + union) — with a hash-bucketed store this is a
   partition-pruned rewrite, not a full-table rewrite.
 - ``merge_tagged`` is classify + apply as ONE lazy plan whose rows
-  carry their action; ``MergeObservation`` counts the actions in the
-  store write that consumes it, so a level-5 load of a table with no
-  maintained view runs one Spark action (the write), with no
-  persisted actions frame and no separate stats pass. Tables with
-  views keep ``classify_actions`` → ``apply_actions`` →
-  ``merge_stats`` over a persisted actions frame, which the view
-  refresh reads several times.
+  carry their action (its full form, with no change list, is the
+  EP3 diff applied); ``MergeObservation`` counts the actions in the
+  store write that consumes it, so every driver load writes its
+  result and its stats in one store write, with no separate stats
+  pass. Only a table with a maintained view also persists
+  ``classify_actions``' frame, which its view refresh reads several
+  times.
 - the row comparison is a null-safe column expression (whole-stage
   codegen), never a Python UDF.
 
@@ -445,21 +445,28 @@ def _change_key_set(change_keys: DataFrame) -> DataFrame:
 
 
 def _classify_join(current: DataFrame, staged: DataFrame,
-                   chg: DataFrame, key: str,
+                   chg: DataFrame | None, key: str,
                    side_cols: list[str]) -> DataFrame:
-    """The full-outer join of the two change-key residues: each side
-    semi-joined to ``chg`` (a ``_change_key_set``) and projected to
-    ``key`` + ``side_cols``, aliased ``cur`` and ``stg``."""
-    cur = (current.join(chg, current[key] == chg["key"], "left_semi")
-           .select(F.col(key).alias("key"), *side_cols).alias("cur"))
-    stg = (staged.join(chg, staged[key] == chg["key"], "left_semi")
-           .select(F.col(key).alias("key"), *side_cols).alias("stg"))
-    return cur.join(stg, F.col("cur.key") == F.col("stg.key"), "full_outer")
+    """The full-outer join of the two sides, each projected to ``key``
+    + ``side_cols`` and aliased ``cur`` and ``stg``: restricted to the
+    change-key residues when ``chg`` (a ``_change_key_set``) is given,
+    whole for a full diff (``chg`` None)."""
+    def side(df, alias):
+        if chg is not None:
+            df = df.join(chg, df[key] == chg["key"], "left_semi")
+        return df.select(F.col(key).alias("key"), *side_cols).alias(alias)
+
+    return side(current, "cur").join(
+        side(staged, "stg"), F.col("cur.key") == F.col("stg.key"),
+        "full_outer")
 
 
-def _action(key: str, compare_cols: list[str],
-            unique_cols: list[str]) -> Column:
-    """The I/U/D/0/X action of a ``_classify_join`` row."""
+def _action(key: str, compare_cols: list[str], unique_cols: list[str],
+            same: str | None = ACTION_NULL_UPDATE) -> Column:
+    """The I/U/D/0/X action of a ``_classify_join`` row. ``same`` is
+    the code of a key whose two rows are equal: '0' for a change list
+    (a null update), None for a full diff, where an identical row is
+    no change."""
     non_key_cols = [c for c in compare_cols if c != key]
     equal = rows_equal_expr("cur", "stg", non_key_cols)
     unique_changed = any_differs_expr(
@@ -467,7 +474,7 @@ def _action(key: str, compare_cols: list[str],
     return (
         F.when(F.col("stg.key").isNull(), F.lit(ACTION_DELETE))
         .when(F.col("cur.key").isNull(), F.lit(ACTION_INSERT))
-        .when(equal, F.lit(ACTION_NULL_UPDATE))
+        .when(equal, F.lit(same).cast("string"))
         .when(unique_changed if unique_cols else F.lit(False),
               F.lit(ACTION_KEY_CHANGE))
         .otherwise(F.lit(ACTION_UPDATE))
@@ -559,15 +566,15 @@ def _stats_of(counts: dict[str, int]) -> MergeStats:
 
 def merge_stats(actions: DataFrame) -> MergeStats:
     """A3: I/U/0/D counts of an actions frame, by one aggregate
-    action — the stats of the view path, whose persisted actions
-    frame several consumers read."""
+    action. The driver observes its loads' stats in the store write
+    instead (:class:`MergeObservation`)."""
     return _stats_of({r["action"]: r["n"] for r in
                       actions.groupBy("action")
                       .agg(F.count("*").alias("n")).collect()})
 
 
 def merge_tagged(current: DataFrame, staged: DataFrame,
-                 change_keys: DataFrame, key: str,
+                 change_keys: DataFrame | None, key: str,
                  unique_cols: list[str] | None = None) -> DataFrame:
     """J1-J3 + J6 as one lazy plan: the merged table plus one row per
     deleted key, every row tagged in ``ACTION_COL``.
@@ -587,19 +594,27 @@ def merge_tagged(current: DataFrame, staged: DataFrame,
     reference, too, gets its upload stats as a by-product of the
     apply (sql/02-bde_control_functions.sql.in:1576-1818).
 
+    ``change_keys`` None is the full form, J5's diff applied: the
+    whole of both sides is joined, ``kept`` is empty, and an
+    identical row is the current row with no tag, so the observed
+    stats are :func:`full_diff`'s I/U/D with no null updates.
+
     The chosen side travels as one struct. Choosing per column would
     repeat the action expression (itself a comparison of every
     column) once per column, and the optimizer's cost grows with the
     square of the table's width."""
     cols = current.columns
-    chg = _change_key_set(change_keys)
-    action = _action(key, cols, unique_cols or [])
-    row = (F.when(action.isin(ACTION_DELETE, ACTION_NULL_UPDATE),
-                  F.struct(*[F.col(f"cur.{c}") for c in cols]))
-           .otherwise(F.struct(*[F.col(f"stg.{c}") for c in cols])))
+    chg = None if change_keys is None else _change_key_set(change_keys)
+    action = _action(key, cols, unique_cols or [],
+                     ACTION_NULL_UPDATE if chg is not None else None)
+    row = (F.when(action.isin(*_ADDS),
+                  F.struct(*[F.col(f"stg.{c}") for c in cols]))
+           .otherwise(F.struct(*[F.col(f"cur.{c}") for c in cols])))
     changed = (_classify_join(current, staged, chg, key, cols)
                .select(row.alias("_row"), action.alias(ACTION_COL))
                .select("_row.*", ACTION_COL))
+    if chg is None:
+        return changed
     kept = (current.join(chg, current[key] == chg["key"], "left_anti")
             .withColumn(ACTION_COL, F.lit(None).cast("string")))
     return kept.unionByName(changed)
@@ -644,37 +659,19 @@ def full_diff(current: DataFrame, staged: DataFrame, key: str,
     between the current table and a complete new snapshot by key;
     identical rows produce no action.
 
-    One key-partitioned full-outer join; no change list exists here so
-    both sides scan fully — this is the sort-merge-join path, and the
-    place where a bucketed/co-partitioned store pays off most.
+    The ``(key, action)`` projection of classify's join and action
+    rule in their full form (no change list, so both sides scan
+    fully) — the same plan :func:`merge_tagged` writes for an EP3
+    load. This is the sort-merge-join path, and the place where a
+    bucketed/co-partitioned store pays off most.
     """
     non_key_cols = [c for c in compare_cols if c != key]
-    cur = current.select(F.col(key).alias("key"), *non_key_cols).alias("cur")
-    stg = staged.select(F.col(key).alias("key"), *non_key_cols).alias("stg")
-    joined = cur.join(stg, F.col("cur.key") == F.col("stg.key"), "full_outer")
-    equal = rows_equal_expr("cur", "stg", non_key_cols)
-    action = (
-        F.when(F.col("stg.key").isNull(), F.lit(ACTION_DELETE))
-        .when(F.col("cur.key").isNull(), F.lit(ACTION_INSERT))
-        .when(equal, F.lit(None).cast("string"))
-        .otherwise(F.lit(ACTION_UPDATE))
-    )
     return (
-        joined.select(
-            F.coalesce(F.col("cur.key"), F.col("stg.key")).alias("key"),
-            action.alias("action"),
-        )
+        _classify_join(current, staged, None, key, non_key_cols)
+        .select(F.coalesce(F.col("cur.key"), F.col("stg.key")).alias("key"),
+                _action(key, compare_cols, [], None).alias("action"))
         .filter(F.col("action").isNotNull())
     )
-
-
-def level0_replace(staged: DataFrame) -> DataFrame:
-    """EP1 apply step: level-0 snapshot replace. The reference does
-    DELETE + INSERT (not swap) to keep triggers/versioning intact
-    (sql/02-bde_control_functions.sql.in:1949-1973); in Spark the
-    equivalent is an overwrite of the table's current snapshot — the
-    staged DataFrame IS the new table."""
-    return staged
 
 
 def check_tolerance(new_count: int, prev_count: int,

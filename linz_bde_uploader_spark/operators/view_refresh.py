@@ -16,12 +16,14 @@ dataset's work in one transaction (lib/LINZ/BdeDatabase.pm:455-510).
 Here the equivalent guarantee is recovery-based instead of
 transactional: every view table carries the dataset it last
 incorporated as its store revision comment (C8), a view write is
-skipped when that stamp is AT OR PAST the incoming dataset, and the
-base-table write always comes LAST. Datasets apply in sorted order,
-so stamps are monotone and ">= ds" means "a crashed run already
-applied this delta". The comparison must be ordered, not equality:
-for a crashed multi-dataset run [d1, d2] that died after d2's view
-write but before d2's base write, the re-run replays d1 first — its
+skipped when that stamp is AT OR PAST the incoming dataset, and every
+view write lands before the base pointer flips (the batch driver
+writes views inside the base write's verdict, the streaming path
+before its base write). Datasets apply in sorted order, so stamps
+are monotone and ">= ds" means "a crashed run already applied this
+delta". The comparison must be ordered, not equality: for a crashed
+multi-dataset run [d1, d2] that died after d2's view write but
+before d2's base pointer flipped, the re-run replays d1 first — its
 all-'0' refresh is a no-op delta, but an equality guard would
 re-STAMP the view back to d1, letting d2's delta apply a second time
 and silently double-count the view. With the ordered guard the d1
@@ -197,10 +199,11 @@ def refresh_views(spark: SparkSession, store, table_name: str,
     against one CDC merge's (current, staged, actions, merged)
     quadruple, each write behind the ordered dataset-stamp guard. A
     view with no stored table yet bootstraps (``old=None``).
-    MUST be called BEFORE the base-table write: once the base is
+    MUST be called before the base pointer flips: once the base is
     merged a replay classifies all-'0' and the view delta is no
     longer derivable, so any view still lagging at that point would
-    stay stale forever."""
+    stay stale forever. ``merged`` may be the written, not yet
+    visible, base version (the batch driver's verdict)."""
     for suffix, _, maintain in _views(spec, key):
         vt = f"{table_name}__{suffix}"
         if _behind(store, vt, ds):

@@ -311,7 +311,8 @@ class TableStore:
               rows: int | None = None,
               meta: dict | None = None,
               clustered: Callable[[DataFrame], DataFrame] | None = None,
-              verdict: Callable[[], int | None] | None = None) -> int:
+              verdict: Callable[[DataFrame], int | None] | None = None
+              ) -> int:
         """Write a new snapshot version and atomically commit the
         pointer. ``dataset`` is recorded as the revision comment
         (C8: ver_create_revision with the dataset timestamp).
@@ -333,10 +334,14 @@ class TableStore:
         stage, whose accumulator updates Spark applies once per
         partition even when a stage is retried. ``verdict`` runs
         after the data lands and before the pointer is staged or
-        flipped: its return value is the pointer's ``rows`` (in place
-        of ``rows``), and an exception it raises propagates with the
-        pointer untouched — the new ``v=<n>`` directory is then an
-        orphan the table's next write overwrites.
+        flipped. It receives the written version, read under the
+        schema the pointer will record (no inference job); its return
+        value is the pointer's ``rows`` (in place of ``rows``), and an
+        exception it raises propagates with the pointer untouched —
+        the new ``v=<n>`` directory is then an orphan the table's next
+        write overwrites. Writes the verdict makes to other tables
+        (a base table's maintained views) are staged or flipped
+        before this table's pointer.
 
         The pointer also records the schema of the written files, so
         ``read`` of the current version skips parquet schema
@@ -368,12 +373,14 @@ class TableStore:
         else:
             out = clustered(df)
             out.write.mode("overwrite").parquet(vdir)
+        schema = _as_nullable(out.schema)
         if verdict is not None:
-            rows = verdict()
+            rows = verdict(self._read(df.sparkSession, table, new_v,
+                                      schema))
         payload = {"version": new_v, "key": key, "dataset": dataset,
                    "rows": rows, "meta": meta,
                    "catalog": bucketed and self.use_catalog_buckets,
-                   "schema": _as_nullable(out.schema).jsonValue()}
+                   "schema": schema.jsonValue()}
         with self._staged_lock:
             if self._staged is not None:
                 # dataset-transaction scope: data is on disk but the
@@ -426,12 +433,19 @@ class TableStore:
             version, schema = payload.get("version"), payload.get("schema")
         if version is None:
             raise FileNotFoundError(f"table {table} has no committed version")
+        if schema is not None:
+            schema = T.StructType.fromJson(schema)
+        return self._read(spark, table, version, schema)
+
+    def _read(self, spark: SparkSession, table: str, version: int,
+              schema: T.StructType | None) -> DataFrame:
+        """``version`` of ``table``, under ``schema`` when given."""
         name = self._catalog_name(table, version)
         if self.use_catalog_buckets and spark.catalog.tableExists(name):
             return spark.table(name)
         reader = spark.read
         if schema is not None:
-            reader = reader.schema(T.StructType.fromJson(schema))
+            reader = reader.schema(schema)
         return reader.parquet(os.path.join(self._tdir(table), f"v={version}"))
 
     def exists(self, table: str) -> bool:

@@ -191,6 +191,31 @@ def test_full_diff_matches_model(spark, cur, stg):
     assert got == diff_model(cur, stg)
 
 
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(cur=table, stg=table)
+def test_full_form_merge_matches_model(spark, cur, stg):
+    """J5 applied: ``merge_tagged`` with no change list writes the
+    staged snapshot and observes the model diff's I/U/D counts with no
+    null updates, for any pair of table states (NULL values and keys
+    on one side only included)."""
+    curdf = spark.createDataFrame(
+        [(k, a, b) for k, (a, b) in sorted(cur.items())], SCHEMA)
+    stgdf = spark.createDataFrame(
+        [(k, a, b) for k, (a, b) in sorted(stg.items())], SCHEMA)
+    observed = M.MergeObservation()
+    got = sorted(map(tuple, observed.apply(
+        M.merge_tagged(curdf, stgdf, None, "id")).collect()), key=repr)
+    stats, n = observed.result()
+    want = diff_model(cur, stg)
+    count = {a: sum(x == a for x in want.values()) for a in "IUD"}
+    assert got == sorted(((k, a, b) for k, (a, b) in stg.items()),
+                         key=repr)
+    assert n == len(stg)
+    assert stats == M.MergeStats(ninsert=count["I"], nupdate=count["U"],
+                                 ndelete=count["D"])
+
+
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(cur=table, stg=table, chg=keys)

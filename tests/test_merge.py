@@ -166,6 +166,35 @@ def test_full_diff(spark):
     assert got == {20: "U", 30: "D", 40: "I"}
 
 
+def test_merge_tagged_full_form(spark):
+    """``merge_tagged`` with no change list is J5's diff applied: its
+    written (non-D) rows are ``apply_actions(cur, stg, full_diff)``'s
+    rows and its observed stats are ``full_diff``'s I/U/D with no null
+    updates — identical rows (NULL values included) carry no tag, and
+    keys on one side only are inserts and deletes."""
+    schema = "k long, a int, b string"
+    cur = spark.createDataFrame([
+        (1, None, "x"), (2, 5, None), (3, 7, "y"), (4, None, None),
+        (5, 1, "z")], schema)
+    stg = spark.createDataFrame([
+        (1, None, "x"), (2, 5, "w"), (3, None, "y"), (4, None, None),
+        (6, 2, "n")], schema)
+    diff = M.full_diff(cur, stg, "k", cur.columns)
+    assert {r.key: r.action for r in diff.collect()} == \
+        {2: "U", 3: "U", 5: "D", 6: "I"}
+
+    observed = M.MergeObservation()
+    got = sorted(map(tuple, observed.apply(
+        M.merge_tagged(cur, stg, None, "k")).collect()), key=repr)
+    stats, rows = observed.result()
+    want = sorted(map(tuple, M.apply_actions(cur, stg, diff, "k")
+                      .collect()), key=repr)
+    assert got == want
+    assert rows == len(want) == 5
+    assert stats == M.merge_stats(diff) == M.MergeStats(
+        ninsert=1, nupdate=2, nnullupdate=0, ndelete=1)
+
+
 def test_select_valid_columns():
     assert M.select_valid_columns(
         ["id", "tablename", "tablekeyvalue", "action", "timestamp"],
