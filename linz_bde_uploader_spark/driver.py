@@ -17,10 +17,14 @@ flips, and a failed dataset simply never commits.
 Every table load (EP1, EP3 and level 5) is one store write
 (``BdeUploader._write_load``) of one plan whose rows carry their action
 (``merge.merge_tagged``, or the staged snapshot as all inserts): the
-I/U/0/D stats and the gated row count are observed in the write, and
+I/U/0/D stats and the new row count are observed in the write, and
 its verdict runs after the data lands and before the pointer is staged
 or flipped — the row-count tolerance gate, then the table's maintained
-views, written from the new version.
+views, written from the new version. A load merged onto the version it
+read (level 5, and EP3 onto an existing table) names that version, so
+the store lands only its changed rows as a delta segment that reads
+merge on read (sources/store.py); EP1 and first loads write full
+snapshots. Every keyed load's pointer records its row count.
 """
 
 from __future__ import annotations
@@ -369,9 +373,9 @@ class BdeUploader:
 
     def _stored_rows(self, table: TableDef) -> int:
         """Row count of the table's current store version for the
-        tolerance gate: the pointer's ``rows`` when the writer
-        recorded one, else one count of the stored data (a version
-        written by an ungated load or an older release)."""
+        tolerance gate: the pointer's ``rows``, which every load
+        records, else one count of the stored data (a version written
+        by an older release)."""
         if not self.store.exists(table.name):
             return 0
         rows = self.store.row_count(table.name)
@@ -425,7 +429,9 @@ class BdeUploader:
         if table.key:
             validate_key(table, {c.name: c.type_name for c in header.columns})
         prev_count = self._stored_rows(table) if _gated(table) else None
-        if incremental and self.store.exists(table.name):
+        onto = self.store.current_version(table.name) if incremental \
+            else None
+        if onto is not None:
             tagged = M.merge_tagged(self.store.read(self.spark, table.name),
                                     stg, None, table.key)
         else:
@@ -440,7 +446,7 @@ class BdeUploader:
                 seed_views(self.store, table.name, new, ds.name, spec,
                            table.key)
         return self._write_load(job, ds, table, "0", header, t0, tagged,
-                                prev_count, views)
+                                onto, prev_count, views)
 
     def upload_table_level5(self, job, ds: Dataset, table: TableDef,
                             changes, changed_tables: set[str]) -> TableResult:
@@ -463,6 +469,7 @@ class BdeUploader:
                                 header.end_time or "")
             return TableResult(table.name, ds.name, "5", "loaded", M.MergeStats())
 
+        onto = self.store.current_version(table.name)
         cur = self.store.read(self.spark, table.name)
         chg = M.prepare_change_table(changes, table.name)
         chg = M.fix_key_swaps(stg, cur, chg, table.key, table.unique_cols)
@@ -483,19 +490,23 @@ class BdeUploader:
         return self._write_load(
             job, ds, table, "5", header, t0,
             M.merge_tagged(cur, stg, chg, table.key, table.unique_cols),
-            prev_count, views)
+            onto, prev_count, views)
 
     def _write_load(self, job, ds: Dataset, table: TableDef, level: str,
-                    header, t0: float, tagged, prev_count: int | None,
-                    views) -> TableResult:
+                    header, t0: float, tagged, onto: int | None,
+                    prev_count: int | None, views) -> TableResult:
         """Every table load's one store write. ``tagged`` is the new
-        state with each row's action in ``ACTION_COL`` (D rows are
-        dropped in the write); the write observes the action counts
-        and the written row count, then its verdict runs before the
-        pointer is staged or flipped: the tolerance gate first
-        (``prev_count`` is the gate's previous row count, None for an
-        ungated table), then ``views``, if given, with the written
-        version as the new state.
+        state with each row's action in ``ACTION_COL``, merged onto
+        store version ``onto`` (None for EP1 and a first load). The
+        store writes it as a delta segment of the tagged rows when it
+        can extend ``onto``'s chain, else as the full new state (D
+        rows and the tag dropped); either way the write observes the
+        action counts and the new state's row count, which the pointer
+        records. The verdict runs before the pointer is staged or
+        flipped: the tolerance gate first (``prev_count`` is the
+        gate's previous row count, None for an ungated table), then
+        ``views``, if given, with the written version as the new
+        state.
 
         So views are written after the gate passes and before the base
         pointer flips. A crash between the two replays the dataset on
@@ -516,12 +527,12 @@ class BdeUploader:
                 raise _Rejected(error)
             if views is not None:
                 views(written)
-            return rows if prev_count is not None else None
+            return rows
 
         try:
             self.store.write(table.name, tagged, key=table.key,
                              dataset=ds.name, clustered=observed.apply,
-                             verdict=verdict)
+                             verdict=verdict, onto=onto)
         except _Rejected as e:
             return TableResult(table.name, ds.name, level, "error",
                                outcome["stats"], str(e))

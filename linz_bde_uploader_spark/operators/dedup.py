@@ -252,6 +252,24 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     return all_pairs.unionByName(star).distinct()
 
 
+# simhash's 64-bit vote packing: bits j and j + _PAIR_HALF of a
+# shingle hash ``h`` vote into one signed 64-bit sum ``p<j>`` (see the
+# bound in simhash; pinned by tests/test_suite.py)
+_PAIR_HALF = 32
+
+
+def _packed_vote(j: int) -> str:
+    """SQL for one row's packed vote of bits j and j + _PAIR_HALF."""
+    return f"(h >> {j}) & {(1 << _PAIR_HALF) | 1}"
+
+
+def _unpacked_ones(j: int) -> str:
+    """SQL for bit j's vote count, read from the packed sums."""
+    if j < _PAIR_HALF:
+        return f"p{j} & {(1 << _PAIR_HALF) - 1}"
+    return f"p{j - _PAIR_HALF} >> {_PAIR_HALF}"
+
+
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             bits: int = 64, shingle_words: int = 1,
             portable: bool = True) -> DataFrame:
@@ -289,7 +307,8 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # shingles (tens of GB of text), beyond any real document. The
     # unpacked per-bit counts (low = s & (2^32-1), high = s >> 32) are
     # bit-identical to the old one-column-per-bit sums, pinned by
-    # tests/test_suite.py::test_simhash_packed_votes_bit_identical.
+    # tests/test_suite.py::test_simhash_packed_votes_bit_identical, and
+    # the bound by test_simhash_packed_votes_exact_below_2_31.
     # The shared count(*) completes the threshold: the ±1 vote sum
     # equals 2*ones - n, so "votes >= 0" is "2*ones >= n" —
     # bit-identical to the CASE-WHEN ±1 form (r9 A/B note retained:
@@ -298,16 +317,11 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # 16-bit field would overflow at 65536 shingles — a perfectly
     # ordinary document); bits != 64 callers keep per-bit sums
     if bits == 64:
-        half = bits // 2
-        pair_mask = (1 << half) | 1
-        aggs = [F.sum(F.expr(f"(h >> {j}) & {pair_mask}")).alias(f"p{j}")
-                for j in range(half)]
-        low_mask = (1 << half) - 1
+        aggs = [F.sum(F.expr(_packed_vote(j))).alias(f"p{j}")
+                for j in range(_PAIR_HALF)]
 
         def _ones(j: int) -> F.Column:
-            if j < half:
-                return F.expr(f"p{j} & {low_mask}")
-            return F.expr(f"p{j - half} >> {half}")
+            return F.expr(_unpacked_ones(j))
     else:
         aggs = [F.sum(F.expr(f"(h >> {j}) & 1")).alias(f"v{j}")
                 for j in range(bits)]

@@ -31,9 +31,12 @@ Scale notes (100 TB design):
   EP3 diff applied); ``MergeObservation`` counts the actions in the
   store write that consumes it, so every driver load writes its
   result and its stats in one store write, with no separate stats
-  pass. Only a table with a maintained view also persists
-  ``classify_actions``' frame, which its view refresh reads several
-  times.
+  pass. That write keeps either the new state (a full snapshot) or
+  only the tagged I/U/X rows and D tombstones (a delta segment the
+  store merges on read), and the observed row count is the new
+  state's either way. Only a table with a maintained view also
+  persists ``classify_actions``' frame, which its view refresh reads
+  several times.
 - the row comparison is a null-safe column expression (whole-stage
   codegen), never a Python UDF.
 
@@ -632,17 +635,23 @@ class MergeObservation:
     def __init__(self):
         self._obs = Observation()
 
-    def apply(self, tagged: DataFrame) -> DataFrame:
-        """Observe ``tagged``'s tags, then drop the D rows and the
-        tag column."""
+    def apply(self, tagged: DataFrame, segment: bool = False) -> DataFrame:
+        """Observe ``tagged``'s tags and its new state's row count,
+        then keep the rows a store version holds: for a full snapshot
+        the new state (the D rows and the tag column dropped), for a
+        delta segment (``segment``, see ``TableStore.write``) the
+        changed rows — I, U and X, and D as key tombstones — with
+        their tag."""
         tag = F.col(ACTION_COL)
         written = ~tag.eqNullSafe(ACTION_DELETE)
-        return (tagged.observe(
-                    self._obs,
-                    *[F.count(F.when(tag == a, 1)).alias(f"n_{a}")
-                      for a in self._CODES],
-                    F.count(F.when(written, 1)).alias("rows"))
-                .filter(written).drop(ACTION_COL))
+        observed = tagged.observe(
+            self._obs,
+            *[F.count(F.when(tag == a, 1)).alias(f"n_{a}")
+              for a in self._CODES],
+            F.count(F.when(written, 1)).alias("rows"))
+        if segment:
+            return observed.filter(tag.isin(*_ADDS, ACTION_DELETE))
+        return observed.filter(written).drop(ACTION_COL)
 
     def result(self) -> tuple[MergeStats, int]:
         """``(stats, rows written)``."""

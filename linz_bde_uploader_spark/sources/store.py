@@ -1,4 +1,5 @@
-"""Keyed table store: Parquet snapshot directories with an atomic
+"""Keyed table store: Parquet version directories — full snapshots,
+or a snapshot base plus delta segments — with an atomic
 current-version pointer.
 
 Re-expresses the reference's "atomic replace with revision semantics"
@@ -7,12 +8,27 @@ sql/02-bde_control_functions.sql.in:2880-2991) without PostgreSQL
 transactions: each write lands in a new ``v=<n>`` directory; a tiny
 ``_CURRENT`` pointer file is renamed into place only after the write
 succeeds. Readers resolve the pointer first, so they always see a
-complete snapshot; old versions remain as revisions until vacuumed.
+complete version; old versions remain as revisions until vacuumed.
 
-Scale design: data files are written hash-clustered by the merge key
-(``repartition(key)`` + sorted within partitions) with no fixed file
-count: AQE coalesces the shuffle, so the number of files follows the
-data — one file for a small table, not one per bucket. ``n_buckets``
+A keyed load merged onto the version it read (``write(onto=...)``)
+lands only its changed rows, as a delta segment: the reference's
+row-change revisions (``table_version._ver_apply_changes``,
+``ver_create_revision``). The segment holds the I/U/X rows and a key
+tombstone per D row, each tagged in ``_action``; the pointer, and a
+``_CHAIN`` record inside the segment's own directory, name the chain
+``[base, seg1, ...]`` and the base schema, and ``read`` folds the
+chain in order: the state anti-joined with a segment's broadcast
+keys, unioned with its non-tombstone rows. A chain folds back into a
+full snapshot once it would pass a fixed bound (``MAX_SEGMENTS``
+segments, or segment rows over ``FOLD_RATIO`` of the table's rows);
+every write that names no version it merged onto (EP1, views, the
+index services, ``compact``, streaming) is a full snapshot.
+
+Scale design: snapshot files are written hash-clustered by the merge
+key (``repartition(key)`` + sorted within partitions) with no fixed
+file count: AQE coalesces the shuffle, so the number of files follows
+the data — one file for a small table, not one per bucket. A segment
+is written as its plan produces it, with no repartition. ``n_buckets``
 applies only with ``use_catalog_buckets=True``, where each version is
 additionally registered as a BUCKETED catalog table
 (``bucketBy(n, key).sortBy(key)``), which is what lets Catalyst
@@ -20,7 +36,8 @@ actually elide the shuffle (and sort) when two store tables join on
 the key — plain parquet directories carry no bucketing metadata, so
 without the catalog the files are clustered but the join still
 exchanges. On a real cluster the catalog is the metastore; locally it
-is the session catalog.
+is the session catalog. A catalog store writes snapshots only: a
+merged read has no bucketing to offer.
 """
 
 from __future__ import annotations
@@ -32,9 +49,25 @@ import shutil
 import threading
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from linz_bde_uploader_spark.operators.merge import ACTION_COL, ACTION_DELETE
+
+# The fold bound: a load merged onto a chain that already holds
+# MAX_SEGMENTS segments, or whose segments already hold more than
+# FOLD_RATIO of the table's rows, writes a full snapshot instead of
+# another segment (dedup_index's auto_compact_ratio, applied to the
+# store). A segment's size is known only once it has landed, so the
+# row bound reads the chain as recorded.
+MAX_SEGMENTS = 8
+FOLD_RATIO = 0.25
+# the record a segment write leaves in its own v=<n> directory (Spark
+# skips files whose names start with "_"), so an explicit read of that
+# version resolves its chain
+CHAIN_RECORD = "_CHAIN"
+_SEG_KEY = "_seg_key"
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -269,14 +302,14 @@ class TableStore:
 
         return _scope()
 
-    def _staged_version(self, table: str) -> int | None:
-        """Newest version staged for ``table`` in the open scope, so a
-        second staged write to the same table (rare) stacks instead of
-        colliding."""
-        if self._staged is None:
-            return None
-        vs = [p["version"] for t, p in self._staged if t == table]
-        return max(vs) if vs else None
+    def _latest_payload(self, table: str) -> dict | None:
+        """The pointer ``table``'s next write follows: the newest one
+        staged for it in the open scope, else the committed one. So a
+        second staged write to the same table (rare) stacks on, and
+        extends the chain of, the first instead of colliding. Call
+        with ``_staged_lock`` held."""
+        staged = [p for t, p in self._staged or [] if t == table]
+        return staged[-1] if staged else self._payload(table)
 
     def _tdir(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -310,77 +343,105 @@ class TableStore:
               dataset: str | None = None,
               rows: int | None = None,
               meta: dict | None = None,
-              clustered: Callable[[DataFrame], DataFrame] | None = None,
-              verdict: Callable[[DataFrame], int | None] | None = None
-              ) -> int:
-        """Write a new snapshot version and atomically commit the
-        pointer. ``dataset`` is recorded as the revision comment
-        (C8: ver_create_revision with the dataset timestamp).
-        ``rows`` optionally records the table's row count in the
-        pointer — driver-side metadata the index services use for
-        size-triggered maintenance without re-counting (see
-        ``row_count``); callers pass it only when they already know
-        the number (no extra job is ever launched here). ``meta`` is
-        an arbitrary JSON-able dict of frozen table identity (e.g. an
-        index's banding parameters) readable via ``table_meta`` with
-        no Spark job — the analog of the reference persisting a
-        table's key columns in its control ledger rather than
-        re-deriving them per upload
+              clustered: Callable[..., DataFrame] | None = None,
+              verdict: Callable[[DataFrame], int | None] | None = None,
+              onto: int | None = None) -> int:
+        """Write a new version and atomically commit the pointer.
+        ``dataset`` is recorded as the revision comment (C8:
+        ver_create_revision with the dataset timestamp). ``rows``
+        optionally records the table's row count in the pointer —
+        driver-side metadata the index services and the fold bound use
+        without re-counting (see ``row_count``); callers pass it only
+        when they already know the number (no extra job is ever
+        launched here). ``meta`` is an arbitrary JSON-able dict of
+        frozen table identity (e.g. an index's banding parameters)
+        readable via ``table_meta`` with no Spark job — the analog of
+        the reference persisting a table's key columns in its control
+        ledger rather than re-deriving them per upload
         (sql/01-bde_control_tables.sql:100-140).
 
-        ``clustered`` maps the key-clustered frame to the frame the
-        files receive. It runs after the ``repartition(key)``, so an
-        ``Observation`` it places sits in the write job's result
-        stage, whose accumulator updates Spark applies once per
-        partition even when a stage is retried. ``verdict`` runs
-        after the data lands and before the pointer is staged or
-        flipped. It receives the written version, read under the
-        schema the pointer will record (no inference job); its return
+        ``onto`` names the version ``df`` was merged onto, and makes
+        ``df`` a tagged frame: the table's columns plus each row's
+        action in ``_action``. When ``onto`` is the version this write
+        follows (the committed one, or the newest staged in the open
+        scope), the frame is keyed with the base's schema and the
+        chain is within the fold bound (``MAX_SEGMENTS``,
+        ``FOLD_RATIO`` of the pointer's ``rows``), the write lands a
+        delta segment: ``clustered(frame, segment=True)`` must keep
+        the changed rows with their tag (a D row is a key tombstone,
+        every other row an upsert), and the pointer names the chain.
+        Every other write — no ``onto``, a stale ``onto``, a catalog
+        store, a pointer without ``rows`` or ``schema`` — is a full
+        snapshot of ``clustered(frame)``, which must then be the new
+        state without the tag; a full snapshot folds any chain.
+
+        ``clustered`` maps the frame to the frame the files receive.
+        For a snapshot it runs after the ``repartition(key)``, and a
+        segment has no exchange of its own, so an ``Observation`` it
+        places sits in the write job's result stage, whose accumulator
+        updates Spark applies once per partition even when a stage is
+        retried. ``verdict`` runs after the data lands and before the
+        pointer is staged or flipped. It receives the written version
+        as ``read`` would return it (no inference job); its return
         value is the pointer's ``rows`` (in place of ``rows``), and an
         exception it raises propagates with the pointer untouched —
-        the new ``v=<n>`` directory is then an orphan the table's next
-        write overwrites. Writes the verdict makes to other tables
-        (a base table's maintained views) are staged or flipped
-        before this table's pointer.
+        the new ``v=<n>`` directory is then an orphan that ``vacuum``
+        collects and the table's next write overwrites. Writes the
+        verdict makes to other tables (a base table's maintained
+        views) are staged or flipped before this table's pointer.
 
-        The pointer also records the schema of the written files, so
-        ``read`` of the current version skips parquet schema
-        inference (a Spark job per read)."""
+        The pointer also records the schema of the written files (a
+        chain's: its base's), so ``read`` of the current version skips
+        parquet schema inference (a Spark job per read)."""
+        spark = df.sparkSession
         with self._staged_lock:
-            base_v = max(self.current_version(table) or 0,
-                         self._staged_version(table) or 0)
-        new_v = base_v + 1
+            prev = self._latest_payload(table)
+        new_v = (prev["version"] if prev else 0) + 1
         tdir = self._tdir(table)
         os.makedirs(tdir, exist_ok=True)
         vdir = os.path.join(tdir, f"v={new_v}")
         bucketed = key is not None and key in df.columns
         if clustered is None:
-            def clustered(d):
+            def clustered(d, segment=False):
                 return d
-        if bucketed and self.use_catalog_buckets:
-            name = self._catalog_name(table, new_v)
-            df.sparkSession.sql(f"DROP TABLE IF EXISTS {name}")
-            out = clustered(df.repartition(self.n_buckets, F.col(key)))
-            (out.write.mode("overwrite").format("parquet")
-               .bucketBy(self.n_buckets, key).sortBy(key)
-               .option("path", vdir).saveAsTable(name))
-        elif bucketed:
-            # hash-cluster by merge key for co-located future merges;
-            # no partition count, so AQE sizes the files from the data
-            out = (clustered(df.repartition(F.col(key)))
-                   .sortWithinPartitions(key))
-            out.write.mode("overwrite").parquet(vdir)
+        chain = self._segment_chain(prev, df, key, onto)
+        if chain is not None:
+            counted = Observation()
+            (clustered(df, segment=True)
+             .observe(counted, F.count(F.lit(1)).alias("n"))
+             .write.mode("overwrite").parquet(vdir))
+            record = {"key": key, "schema": prev["schema"],
+                      "chain": chain + [new_v],
+                      "chain_rows": (prev.get("chain_rows", 0)
+                                     + counted.get["n"])}
+            with open(os.path.join(vdir, CHAIN_RECORD), "w") as fh:
+                json.dump(record, fh)
         else:
-            out = clustered(df)
-            out.write.mode("overwrite").parquet(vdir)
-        schema = _as_nullable(out.schema)
-        if verdict is not None:
-            rows = verdict(self._read(df.sparkSession, table, new_v,
-                                      schema))
+            record = {}
+            if bucketed and self.use_catalog_buckets:
+                name = self._catalog_name(table, new_v)
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
+                out = clustered(df.repartition(self.n_buckets, F.col(key)))
+                (out.write.mode("overwrite").format("parquet")
+                   .bucketBy(self.n_buckets, key).sortBy(key)
+                   .option("path", vdir).saveAsTable(name))
+            elif bucketed:
+                # hash-cluster by merge key for co-located future
+                # merges; no partition count, so AQE sizes the files
+                # from the data
+                out = (clustered(df.repartition(F.col(key)))
+                       .sortWithinPartitions(key))
+                out.write.mode("overwrite").parquet(vdir)
+            else:
+                out = clustered(df)
+                out.write.mode("overwrite").parquet(vdir)
+            record["schema"] = _as_nullable(out.schema).jsonValue()
         payload = {"version": new_v, "key": key, "dataset": dataset,
                    "rows": rows, "meta": meta,
                    "catalog": bucketed and self.use_catalog_buckets,
-                   "schema": schema.jsonValue()}
+                   **record}
+        if verdict is not None:
+            payload["rows"] = verdict(self._resolve(spark, table, payload))
         with self._staged_lock:
             if self._staged is not None:
                 # dataset-transaction scope: data is on disk but the
@@ -403,6 +464,29 @@ class TableStore:
         os.replace(tmp, self._pointer(table))  # atomic commit
         return new_v
 
+    def _segment_chain(self, prev: dict | None, df: DataFrame,
+                       key: str | None, onto: int | None
+                       ) -> list[int] | None:
+        """The chain a write of ``df`` merged onto version ``onto``
+        extends with a delta segment, or None when it must be a full
+        snapshot (see ``write``)."""
+        if (onto is None or prev is None or onto != prev["version"]
+                or key is None or self.use_catalog_buckets
+                or prev.get("rows") is None or prev.get("schema") is None
+                or prev.get("key") != key):
+            return None
+        chain = prev.get("chain", [prev["version"]])
+        if (len(chain) > MAX_SEGMENTS
+                or prev.get("chain_rows", 0) > FOLD_RATIO * prev["rows"]):
+            return None
+        fields = _as_nullable(df.schema).fields
+        base = T.StructType.fromJson(prev["schema"]).fields
+        if ([(f.name, f.dataType) for f in fields]
+                != [(f.name, f.dataType) for f in base]
+                + [(ACTION_COL, T.StringType())]):
+            return None
+        return chain
+
     def row_count(self, table: str) -> int | None:
         """The ``rows`` metadata of the current version, if the writer
         recorded one (None otherwise — absence means "unknown", never
@@ -424,22 +508,65 @@ class TableStore:
     def read(self, spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
         """The table at ``version``, the current one by default. The
         current version reads under the schema its pointer recorded,
-        which starts no Spark job; an explicit ``version`` and a
-        pointer written before pointers carried a schema infer it
-        from the parquet footers."""
-        schema = None
+        and a segment version under its chain record's, which starts
+        no Spark job; an explicit snapshot ``version`` and a pointer
+        written before pointers carried a schema infer it from the
+        parquet footers.
+
+        A chain ``[base, seg1, ...]`` is folded in order: for each
+        segment, the state so far anti-joined (null-safe) with the
+        segment's broadcast keys, unioned with its rows that are not
+        D tombstones, in the base's column order — the same rows as
+        the full snapshot the load would otherwise have written."""
         if version is None:
-            payload = self._payload(table) or {}
-            version, schema = payload.get("version"), payload.get("schema")
-        if version is None:
-            raise FileNotFoundError(f"table {table} has no committed version")
+            payload = self._payload(table)
+            if payload is None:
+                raise FileNotFoundError(
+                    f"table {table} has no committed version")
+            return self._resolve(spark, table, payload)
+        record = self._chain_record(table, version)
+        if record is not None:
+            return self._resolve(spark, table, record)
+        return self._read(spark, table, version, None)
+
+    def _chain_record(self, table: str, version: int) -> dict | None:
+        """The ``CHAIN_RECORD`` a segment write left in ``version``'s
+        directory, None for a snapshot version."""
+        path = os.path.join(self._tdir(table), f"v={version}",
+                            CHAIN_RECORD)
+        if not os.path.exists(path):
+            return None
+        with open(path) as fh:
+            return json.load(fh)
+
+    def _resolve(self, spark: SparkSession, table: str,
+                 desc: dict) -> DataFrame:
+        """The version a pointer payload or a chain record describes,
+        under its recorded schema: its directory, or its chain folded
+        (see ``read``)."""
+        schema = desc.get("schema")
         if schema is not None:
             schema = T.StructType.fromJson(schema)
-        return self._read(spark, table, version, schema)
+        chain = desc.get("chain") or [desc["version"]]
+        state = self._read(spark, table, chain[0], schema)
+        if len(chain) == 1:
+            return state
+        segment = T.StructType(
+            schema.fields + [T.StructField(ACTION_COL, T.StringType())])
+        key = desc["key"]
+        on = F.expr(f"`{key}` <=> {_SEG_KEY}")
+        upsert = F.expr(f"NOT ({ACTION_COL} <=> '{ACTION_DELETE}')")
+        for v in chain[1:]:
+            seg = self._read(spark, table, v, segment)
+            keys = F.broadcast(seg.select(F.col(key).alias(_SEG_KEY)))
+            state = (state.join(keys, on, "left_anti")
+                     .union(seg.filter(upsert).select(*schema.names)))
+        return state
 
     def _read(self, spark: SparkSession, table: str, version: int,
               schema: T.StructType | None) -> DataFrame:
-        """``version`` of ``table``, under ``schema`` when given."""
+        """``version``'s directory of ``table``, under ``schema`` when
+        given."""
         name = self._catalog_name(table, version)
         if self.use_catalog_buckets and spark.catalog.tableExists(name):
             return spark.table(name)
@@ -469,7 +596,9 @@ class TableStore:
         footers per read. Compaction is just a read + ``write`` (the
         store's normal repartition/bucket path), committed through the
         same atomic pointer — readers never see a partial rewrite, and
-        the old layout remains a revision until vacuumed. The
+        the old layout remains a revision until vacuumed. It is also
+        the explicit fold: the new version is a full snapshot, so the
+        pointer names no chain. The
         pointer's ``dataset`` revision comment (C8 lineage) is carried
         from the current version — maintenance must not erase which
         dataset a table's contents came from. Returns the new version
@@ -485,12 +614,30 @@ class TableStore:
     def vacuum(self, table: str, keep: int = 2,
                spark: SparkSession | None = None) -> list[int]:
         """C7: drop old revisions (the reference's VACUUM ANALYSE /
-        -maintain-database analog). Pass ``spark`` to also drop the
-        catalog entries of bucketed versions."""
-        cur = self.current_version(table)
+        -maintain-database analog): every version below the newest
+        ``keep`` that no kept version's chain names (a kept segment
+        needs its base and earlier segments), and every orphan above
+        the current version that the open scope does not stage (a
+        load the verdict rejected, a scope aborted or a write that
+        crashed). Like every write it assumes no concurrent writer to
+        ``table``. Pass ``spark`` to also drop the catalog entries of
+        bucketed versions."""
+        payload = self._payload(table)
+        cur = 0 if payload is None else payload["version"]
+        with self._staged_lock:
+            live = [p for t, p in self._staged or [] if t == table]
+        if payload is not None:
+            live.append(payload)
+        live += [{"version": v}
+                 for v in self.versions(table) if cur - keep < v <= cur]
+        named = set()
+        for p in live:
+            record = p if "chain" in p else (
+                self._chain_record(table, p["version"]) or {})
+            named.update(record.get("chain") or [p["version"]])
         dropped = []
         for v in self.versions(table):
-            if cur is not None and v <= cur - keep:
+            if v not in named:
                 shutil.rmtree(os.path.join(self._tdir(table), f"v={v}"))
                 if spark is not None:
                     spark.sql(

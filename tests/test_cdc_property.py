@@ -7,6 +7,8 @@ semantics across the state space (null values, overlapping and
 disjoint key sets, keys in neither table, empty changesets).
 """
 
+import os
+
 import pytest
 
 from hypothesis import HealthCheck, example, given, settings
@@ -214,6 +216,83 @@ def test_full_form_merge_matches_model(spark, cur, stg):
     assert n == len(stg)
     assert stats == M.MergeStats(ninsert=count["I"], nupdate=count["U"],
                                  ndelete=count["D"])
+
+
+load = st.one_of(
+    st.tuples(st.just("L5"), table, chg_list, st.sampled_from([None, 0, 1])),
+    st.tuples(st.just("EP3"), table, st.just([]), st.just(None)))
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(first=table, loads=st.lists(load, min_size=2, max_size=5))
+@example(first={k: (k % 4, "x") for k in range(8)},              # 2 of 8
+         loads=[("L5", {0: (9, "y"), 1: (9, "y")}, [0, 1], None),
+                ("L5", {2: (9, "y")}, [2], None),               # 3 > 8/4
+                ("EP3", {k: (k % 4, "x") for k in range(4, 12)}, [], None),
+                ("L5", {5: (1, None)}, [5, 6], 1)])
+def test_store_chain_matches_model(spark, first, loads):
+    """Level-5 and EP3 loads written through the store as the driver
+    writes them (``merge_tagged`` observed by ``MergeObservation``,
+    ``store.write(onto=...)``): after every load the read equals the
+    pure-Python model in the table's column order and equals what
+    ``compact`` writes, the observed row count is the pointer's, and
+    a load onto a chain past the fold bound writes a full snapshot —
+    on small tables, whose chains cross the bound often."""
+    import shutil
+    import tempfile
+
+    from linz_bde_uploader_spark.sources import store as S
+
+    root = tempfile.mkdtemp(prefix="chain-")
+    try:
+        store = S.TableStore(os.path.join(root, "store"))
+        store.write("t", spark.createDataFrame(
+            [(k, a, b) for k, (a, b) in sorted(first.items())], SCHEMA),
+            key="id", rows=len(first))
+        state = dict(first)
+        for kind, stg, chg, u in loads:
+            prev = store._payload("t")
+            cur = store.read(spark, "t")
+            stgdf = spark.createDataFrame(
+                [(k, a, b) for k, (a, b) in sorted(stg.items())], SCHEMA)
+            if kind == "L5":
+                unique_cols = [] if u is None else [["a", "b"][u]]
+                chgdf = M.fix_key_swaps(stgdf, cur, M.prepare_change_table(
+                    spark.createDataFrame([("T1", k) for k in chg],
+                                          CHG_SCHEMA), "t1"),
+                    "id", unique_cols)
+                tagged = M.merge_tagged(cur, stgdf, chgdf, "id", unique_cols)
+                state = swap_model(state, stg, chg, u)[1]
+            else:
+                tagged = M.merge_tagged(cur, stgdf, None, "id")
+                state = dict(stg)
+            observed = M.MergeObservation()
+            store.write("t", tagged, key="id", clustered=observed.apply,
+                        verdict=lambda w, o=observed: o.result()[1],
+                        onto=prev["version"])
+            payload = store._payload("t")
+            chain = prev.get("chain", [prev["version"]])
+            if (len(chain) > S.MAX_SEGMENTS or prev.get("chain_rows", 0)
+                    > S.FOLD_RATIO * prev["rows"]):
+                assert "chain" not in payload
+            else:
+                assert payload["chain"] == chain + [payload["version"]]
+            want = sorted(((k, a, b) for k, (a, b) in state.items()),
+                          key=repr)
+            got = store.read(spark, "t")
+            assert got.columns == ["id", "a", "b"]
+            assert sorted(map(tuple, got.collect()), key=repr) == want
+            assert payload["rows"] == len(want)
+            copy = os.path.join(root, f"compact{payload['version']}")
+            shutil.copytree(store.root, copy)
+            compacted = S.TableStore(copy)
+            compacted.compact(spark, "t")
+            assert "chain" not in compacted._payload("t")
+            assert sorted(map(tuple, compacted.read(spark, "t").collect()),
+                          key=repr) == want
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @settings(max_examples=10, deadline=None,

@@ -235,12 +235,15 @@ def test_cli_end_to_end(tmp_path, spark):
     assert cli.main(common + ["-full-incremental", "-rebuild"]) == 2
     assert cli.main(common + ["-purge", "-remove-zombie"]) == 0
 
-    # -maintain-database vacuums old revisions down to the keep window
+    # -maintain-database compacts the current version into a full
+    # snapshot and vacuums old revisions down to the keep window plus
+    # the chain the kept level-5 segment names: [1, 2] + compacted 3
     from linz_bde_uploader_spark.sources.store import TableStore
     store = TableStore(str(tmp_path / "store"))
     assert cli.main(common + ["-full", "-maintain-database",
                               "-skip-postupload-tasks"]) == 0
-    assert len(store.versions("crs_parcel_bndry")) <= 2
+    assert store.versions("crs_parcel_bndry") == [1, 2, 3]
+    assert "chain" not in store._payload("crs_parcel_bndry")
 
     # C1 single-job gate through the CLI: a stuck active job refuses
     # the next run cleanly; -override-locks proceeds
@@ -1299,8 +1302,9 @@ def _traced_loads(spark, monkeypatch, store):
 
 def test_ungated_level5_runs_no_count(spark, tmp_path, monkeypatch):
     """A table with no row_tol never reads a row count, so its L5 load
-    runs no ``DataFrame.count`` and its pointer records no ``rows``.
-    With no maintained view the store write is the merge's only Spark
+    runs no ``DataFrame.count``; its pointer still records the
+    observed ``rows``. With no maintained view the store write is the
+    merge's only Spark
     action: no ``collect`` (the dataset's one change scan and
     ``read_crs``' malformed-row probe aside), no persist, and no
     ``merge_stats`` — the stats are observed in the write."""
@@ -1323,10 +1327,37 @@ TABLE crs_parcel_bndry key=audit_id files pab1
     assert r[-1].status == "loaded"
     s = r[-1].stats
     assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
-    assert store.row_count("crs_parcel_bndry") is None
+    assert store.row_count("crs_parcel_bndry") == 5
     rows = {x.audit_id: x.sequence
             for x in store.read(spark, "crs_parcel_bndry").collect()}
     assert rows == {100: 3, 80401149: 20, 80401148: 10, 300: 4, 400: 5}
+
+
+def test_ungated_ep1_then_gated_level5_runs_no_count(spark, tmp_path,
+                                                     monkeypatch):
+    """An ungated EP1 pointer records the observed ``rows``, so when the
+    table is gated for the next load the tolerance gate reads its
+    previous count from the pointer: the level-5 load runs no
+    ``DataFrame.count``."""
+    repo = BdeRepository(write_repository(str(tmp_path / "repo")))
+    store = TableStore(str(tmp_path / "store"), n_buckets=2)
+    tables = parse_tables_conf("""
+TABLE l5_change_table l5_change_table files xaud
+TABLE crs_parcel_bndry key=audit_id files pab1
+""")
+    up = BdeUploader(spark, repo, store, Ledger(str(tmp_path / "ctl")),
+                     tables)
+    up.apply_updates(level0=True)
+    assert store.row_count("crs_parcel_bndry") == 3
+    for t in tables:
+        if t.name == "crs_parcel_bndry":
+            t.row_tol_error, t.row_tol_warning = 0.20, 0.95
+
+    with _traced_loads(spark, monkeypatch, store) as t:
+        r = up.apply_updates(level5=True)
+    assert t["counted"] == []
+    assert r[-1].status == "loaded"
+    assert store.row_count("crs_parcel_bndry") == 5
 
 
 def test_every_load_is_one_observed_write(spark, tmp_path, monkeypatch):

@@ -31,13 +31,26 @@ def _jobs(spark, fn):
 
 
 def _assert_pointer_schema(spark, store, table):
+    """The pointer's schema is the one inference gives its base
+    directory, each delta segment of its chain holds that schema plus
+    ``_action string``, and the current read starts no job and returns
+    the base schema."""
     payload = store._payload(table)
-    vdir = os.path.join(store.root, table, f"v={payload['version']}")
-    inferred = spark.read.parquet(vdir).schema
-    assert T.StructType.fromJson(payload["schema"]) == inferred, table
+    base, *segments = payload.get("chain") or [payload["version"]]
+
+    def inferred(v):
+        return spark.read.parquet(
+            os.path.join(store.root, table, f"v={v}")).schema
+
+    schema = T.StructType.fromJson(payload["schema"])
+    assert schema == inferred(base), table
+    for v in segments:
+        assert inferred(v) == T.StructType(
+            schema.fields + [T.StructField("_action", T.StringType())]), \
+            (table, v)
     df, jobs = _jobs(spark, lambda: store.read(spark, table))
     assert jobs == [], table
-    assert df.schema == inferred, table
+    assert df.schema == schema, table
 
 
 def _stored_tables(store):
@@ -72,7 +85,8 @@ def test_current_read_starts_no_job(spark, tmp_path):
 
 def test_pointer_schema_of_driver_loads(spark, tmp_path):
     """Level-0, level-5 (with and without a maintained view) and view
-    writes each record the schema inference gives their files."""
+    writes each record the schema inference gives their files; the
+    level-5 loads land delta segments, whose chains read with no job."""
     repo = BdeRepository(write_repository(str(tmp_path / "repo")))
     store = TableStore(str(tmp_path / "store"), n_buckets=2)
     cfg = UploadConfig(views={"crs_parcel_bndry": ViewSpec(
@@ -92,6 +106,7 @@ TABLE crs_parcel_bndry2 key=audit_id row_tol=0.20,0.95 files pab1
                 "crs_parcel_bndry__minmax"} <= set(tables)
         for t in tables:
             _assert_pointer_schema(spark, store, t)
+    assert store._payload("crs_parcel_bndry")["chain"] == [1, 2]
 
 
 def test_pointer_schema_of_dedup_index(spark, tmp_path):

@@ -211,6 +211,38 @@ def test_simhash_packed_votes_bit_identical(spark):
     assert got == want and len(got) > 0
 
 
+def test_simhash_packed_votes_exact_below_2_31(spark):
+    """The packed vote sum is exact while a document has n < 2^31
+    shingles. Evaluated on literal sums, not 2^31 rows: the per-row
+    packed votes of hashes with bit 0, bit 32 or both set, summed n
+    times, unpack to each bit's count at n = 2^31 - 1; at n = 2^31 the
+    high field's sum passes 2^63, and the wrapped sum a signed long
+    would hold unpacks to a negative count, so the bound is tight."""
+    from pyspark.sql import functions as F
+
+    from linz_bde_uploader_spark.operators import dedup as D
+
+    def unpack(s):
+        r = spark.range(1).select(F.lit(s).cast("bigint").alias("p0")) \
+            .select(F.expr(D._unpacked_ones(0)).alias("lo"),
+                    F.expr(D._unpacked_ones(32)).alias("hi")).first()
+        return r.lo, r.hi
+
+    votes = spark.createDataFrame([(1,), (1 << 32,), (-1,)], "h long") \
+        .select(F.expr(D._packed_vote(0)).alias("v")).collect()
+    low, high, both = (r.v for r in votes)
+    assert (low, high, both) == (1, 1 << 32, (1 << 32) | 1)
+    n = (1 << 31) - 1
+    for lo, hi in ((n, 0), (0, n), (n, n), (n - 1, n), (n, 1)):
+        s = (lo - min(lo, hi)) * low + (hi - min(lo, hi)) * high \
+            + min(lo, hi) * both
+        assert s < 1 << 63
+        assert unpack(s) == (lo, hi)
+    s = (n + 1) * both
+    assert s >= 1 << 63
+    assert unpack(s - (1 << 64)) == (n + 1, -(n + 1))
+
+
 def test_jaccard_prefix_filter_is_exact(spark):
     """The PPJoin-style prefix-filtered Jaccard must return EXACTLY
     the inverted-index results — prefix filtering prunes candidates,
