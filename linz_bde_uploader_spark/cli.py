@@ -239,7 +239,14 @@ def main(argv: list[str] | None = None) -> int:
         return 1
     if args.maintain_db:
         # the reference's VACUUM ANALYSE pass: compact the current
-        # snapshot (small-files rewrite), then drop old revisions
+        # snapshot (small-files rewrite, and the fold of a delta
+        # chain), then drop old revisions. It runs after
+        # apply_updates has returned, outside the ledger's job gate,
+        # so it assumes no other writer on the store: compact writes
+        # the table's next version like any load would
+        # (TableStore.begin_dataset_commit's single-committer
+        # contract); vacuum itself never touches a version above the
+        # current one.
         for t in tables:
             if not t.l5_change_table and store.exists(t.name):
                 store.compact(spark, t.name)

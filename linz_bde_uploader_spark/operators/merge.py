@@ -32,7 +32,7 @@ Scale notes (100 TB design):
   store write that consumes it, so every driver load writes its
   result and its stats in one store write, with no separate stats
   pass. That write keeps either the new state (a full snapshot) or
-  only the tagged I/U/X rows and D tombstones (a delta segment the
+  only the tagged rows, D rows as key tombstones (a delta segment the
   store merges on read), and the observed row count is the new
   state's either way. Only a table with a maintained view also
   persists ``classify_actions``' frame, which its view refresh reads
@@ -639,9 +639,12 @@ class MergeObservation:
         """Observe ``tagged``'s tags and its new state's row count,
         then keep the rows a store version holds: for a full snapshot
         the new state (the D rows and the tag column dropped), for a
-        delta segment (``segment``, see ``TableStore.write``) the
-        changed rows — I, U and X, and D as key tombstones — with
-        their tag."""
+        delta segment (``segment``, see ``TableStore.write``) every
+        tagged row with its tag: I, U, X and the null-update 0 rows,
+        and D rows as key tombstones. So a segment holds every new row
+        of each key it names, which is what lets the fold replace the
+        key's stored rows wholesale (a staged file repeating a changed
+        key included)."""
         tag = F.col(ACTION_COL)
         written = ~tag.eqNullSafe(ACTION_DELETE)
         observed = tagged.observe(
@@ -650,7 +653,7 @@ class MergeObservation:
               for a in self._CODES],
             F.count(F.when(written, 1)).alias("rows"))
         if segment:
-            return observed.filter(tag.isin(*_ADDS, ACTION_DELETE))
+            return observed.filter(tag.isNotNull())
         return observed.filter(written).drop(ACTION_COL)
 
     def result(self) -> tuple[MergeStats, int]:

@@ -13,16 +13,19 @@ complete version; old versions remain as revisions until vacuumed.
 A keyed load merged onto the version it read (``write(onto=...)``)
 lands only its changed rows, as a delta segment: the reference's
 row-change revisions (``table_version._ver_apply_changes``,
-``ver_create_revision``). The segment holds the I/U/X rows and a key
-tombstone per D row, each tagged in ``_action``; the pointer, and a
-``_CHAIN`` record inside the segment's own directory, name the chain
-``[base, seg1, ...]`` and the base schema, and ``read`` folds the
-chain in order: the state anti-joined with a segment's broadcast
-keys, unioned with its non-tombstone rows. A chain folds back into a
-full snapshot once it would pass a fixed bound (``MAX_SEGMENTS``
-segments, or segment rows over ``FOLD_RATIO`` of the table's rows);
-every write that names no version it merged onto (EP1, views, the
-index services, ``compact``, streaming) is a full snapshot.
+``ver_create_revision``). The segment holds every row the load
+tagged, each with its action in ``_action``: I, U, X and null-update
+(0) rows, and a key tombstone per D row, so it holds every new row of
+each key it names. A ``_CHAIN`` record inside the segment's own
+directory, and nothing else, names the chain ``[base, seg1, ...]``,
+the key and the base schema; the pointer names only the version.
+``read`` folds the chain in order: the state anti-joined with a
+segment's keys, unioned with its non-tombstone rows. A chain folds
+back into a full snapshot once it would pass a fixed bound
+(``MAX_SEGMENTS`` segments, or segment rows over ``FOLD_RATIO`` of the
+table's rows); every write that names no version it merged onto (EP1,
+views, the index services, ``compact``, streaming) is a full
+snapshot.
 
 Scale design: snapshot files are written hash-clustered by the merge
 key (``repartition(key)`` + sorted within partitions) with no fixed
@@ -58,10 +61,17 @@ from linz_bde_uploader_spark.operators.merge import ACTION_COL, ACTION_DELETE
 # The fold bound: a load merged onto a chain that already holds
 # MAX_SEGMENTS segments, or whose segments already hold more than
 # FOLD_RATIO of the table's rows, writes a full snapshot instead of
-# another segment (dedup_index's auto_compact_ratio, applied to the
-# store). A segment's size is known only once it has landed, so the
-# row bound reads the chain as recorded.
-MAX_SEGMENTS = 8
+# another segment. A segment's size is known only once it has landed,
+# so the row bound reads the chain as recorded. scripts/
+# chain_read_cost.py sets MAX_SEGMENTS: with 2% level-5 loads on 2k
+# and 200k rows (4 cores), each segment adds a roughly fixed 0.1 s to
+# every read, so the mean load cost over a fold cycle is lowest at 1-2
+# segments and reaches the cost of writing every load as a snapshot at
+# 6-8. The same script found a segment's read cost flat in its size up
+# to the whole table at those sizes; FOLD_RATIO (dedup_index's
+# auto_compact_ratio) bounds the rows a read scans, and the shuffle an
+# anti join past the broadcast threshold costs, at scale.
+MAX_SEGMENTS = 2
 FOLD_RATIO = 0.25
 # the record a segment write leaves in its own v=<n> directory (Spark
 # skips files whose names start with "_"), so an explicit read of that
@@ -367,13 +377,13 @@ class TableStore:
         scope), the frame is keyed with the base's schema and the
         chain is within the fold bound (``MAX_SEGMENTS``,
         ``FOLD_RATIO`` of the pointer's ``rows``), the write lands a
-        delta segment: ``clustered(frame, segment=True)`` must keep
-        the changed rows with their tag (a D row is a key tombstone,
-        every other row an upsert), and the pointer names the chain.
-        Every other write — no ``onto``, a stale ``onto``, a catalog
-        store, a pointer without ``rows`` or ``schema`` — is a full
-        snapshot of ``clustered(frame)``, which must then be the new
-        state without the tag; a full snapshot folds any chain.
+        delta segment and its ``CHAIN_RECORD``: ``clustered(frame,
+        segment=True)`` must keep every tagged row with its tag (a D
+        row is a key tombstone, every other row one of its key's new
+        rows). Every other write — no ``onto``, a stale ``onto``, a
+        catalog store, a pointer without ``rows`` or ``schema`` — is a
+        full snapshot of ``clustered(frame)``, which must then be the
+        new state without the tag; a full snapshot folds any chain.
 
         ``clustered`` maps the frame to the frame the files receive.
         For a snapshot it runs after the ``repartition(key)``, and a
@@ -385,14 +395,15 @@ class TableStore:
         as ``read`` would return it (no inference job); its return
         value is the pointer's ``rows`` (in place of ``rows``), and an
         exception it raises propagates with the pointer untouched —
-        the new ``v=<n>`` directory is then an orphan that ``vacuum``
-        collects and the table's next write overwrites. Writes the
+        the new ``v=<n>`` directory is then an orphan that the table's
+        next write overwrites (it reuses the version number). Writes the
         verdict makes to other tables (a base table's maintained
         views) are staged or flipped before this table's pointer.
 
-        The pointer also records the schema of the written files (a
-        chain's: its base's), so ``read`` of the current version skips
-        parquet schema inference (a Spark job per read)."""
+        A snapshot's pointer also records the schema of the written
+        files (a segment's chain record records its base's), so
+        ``read`` of the current version skips parquet schema inference
+        (a Spark job per read)."""
         spark = df.sparkSession
         with self._staged_lock:
             prev = self._latest_payload(table)
@@ -404,20 +415,18 @@ class TableStore:
         if clustered is None:
             def clustered(d, segment=False):
                 return d
-        chain = self._segment_chain(prev, df, key, onto)
-        if chain is not None:
+        record = self._segment_chain(table, prev, df, key, onto)
+        schema = None
+        if record is not None:
             counted = Observation()
             (clustered(df, segment=True)
              .observe(counted, F.count(F.lit(1)).alias("n"))
              .write.mode("overwrite").parquet(vdir))
-            record = {"key": key, "schema": prev["schema"],
-                      "chain": chain + [new_v],
-                      "chain_rows": (prev.get("chain_rows", 0)
-                                     + counted.get["n"])}
             with open(os.path.join(vdir, CHAIN_RECORD), "w") as fh:
-                json.dump(record, fh)
+                json.dump({**record, "chain": record["chain"] + [new_v],
+                           "chain_rows": (record["chain_rows"]
+                                          + counted.get["n"])}, fh)
         else:
-            record = {}
             if bucketed and self.use_catalog_buckets:
                 name = self._catalog_name(table, new_v)
                 spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -435,13 +444,15 @@ class TableStore:
             else:
                 out = clustered(df)
                 out.write.mode("overwrite").parquet(vdir)
-            record["schema"] = _as_nullable(out.schema).jsonValue()
+            schema = _as_nullable(out.schema).jsonValue()
         payload = {"version": new_v, "key": key, "dataset": dataset,
                    "rows": rows, "meta": meta,
-                   "catalog": bucketed and self.use_catalog_buckets,
-                   **record}
+                   "catalog": bucketed and self.use_catalog_buckets}
+        if schema is not None:
+            payload["schema"] = schema
         if verdict is not None:
-            payload["rows"] = verdict(self._resolve(spark, table, payload))
+            payload["rows"] = verdict(
+                self._resolve(spark, table, new_v, schema))
         with self._staged_lock:
             if self._staged is not None:
                 # dataset-transaction scope: data is on disk but the
@@ -464,28 +475,31 @@ class TableStore:
         os.replace(tmp, self._pointer(table))  # atomic commit
         return new_v
 
-    def _segment_chain(self, prev: dict | None, df: DataFrame,
-                       key: str | None, onto: int | None
-                       ) -> list[int] | None:
-        """The chain a write of ``df`` merged onto version ``onto``
-        extends with a delta segment, or None when it must be a full
-        snapshot (see ``write``)."""
+    def _segment_chain(self, table: str, prev: dict | None,
+                       df: DataFrame, key: str | None, onto: int | None
+                       ) -> dict | None:
+        """The chain record of version ``onto`` (a snapshot's is its
+        one-version chain) when a write of ``df`` merged onto it
+        extends that chain with a delta segment, None when the write
+        must be a full snapshot (see ``write``)."""
         if (onto is None or prev is None or onto != prev["version"]
                 or key is None or self.use_catalog_buckets
-                or prev.get("rows") is None or prev.get("schema") is None
-                or prev.get("key") != key):
+                or prev.get("rows") is None or prev.get("key") != key):
             return None
-        chain = prev.get("chain", [prev["version"]])
-        if (len(chain) > MAX_SEGMENTS
-                or prev.get("chain_rows", 0) > FOLD_RATIO * prev["rows"]):
+        record = self._chain_record(table, onto) or {
+            "key": key, "schema": prev.get("schema"), "chain": [onto],
+            "chain_rows": 0}
+        if (record["schema"] is None
+                or len(record["chain"]) > MAX_SEGMENTS
+                or record["chain_rows"] > FOLD_RATIO * prev["rows"]):
             return None
         fields = _as_nullable(df.schema).fields
-        base = T.StructType.fromJson(prev["schema"]).fields
+        base = T.StructType.fromJson(record["schema"]).fields
         if ([(f.name, f.dataType) for f in fields]
                 != [(f.name, f.dataType) for f in base]
                 + [(ACTION_COL, T.StringType())]):
             return None
-        return chain
+        return record
 
     def row_count(self, table: str) -> int | None:
         """The ``rows`` metadata of the current version, if the writer
@@ -506,31 +520,33 @@ class TableStore:
         return None if payload is None else payload.get("meta")
 
     def read(self, spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
-        """The table at ``version``, the current one by default. The
-        current version reads under the schema its pointer recorded,
+        """The table at ``version``, the current one by default. A
+        current snapshot reads under the schema its pointer recorded,
         and a segment version under its chain record's, which starts
         no Spark job; an explicit snapshot ``version`` and a pointer
         written before pointers carried a schema infer it from the
         parquet footers.
 
-        A chain ``[base, seg1, ...]`` is folded in order: for each
-        segment, the state so far anti-joined (null-safe) with the
-        segment's broadcast keys, unioned with its rows that are not
-        D tombstones, in the base's column order — the same rows as
-        the full snapshot the load would otherwise have written."""
+        A segment version's chain ``[base, seg1, ...]`` is folded in
+        order: for each segment, the state so far anti-joined
+        (null-safe) with the segment's keys, unioned with its rows
+        that are not D tombstones, in the base's column order — the
+        same rows as the full snapshot the load would otherwise have
+        written. The anti join carries no broadcast hint: Spark
+        broadcasts a segment under its size threshold and sort-merges
+        a larger one."""
         if version is None:
             payload = self._payload(table)
             if payload is None:
                 raise FileNotFoundError(
                     f"table {table} has no committed version")
-            return self._resolve(spark, table, payload)
-        record = self._chain_record(table, version)
-        if record is not None:
-            return self._resolve(spark, table, record)
-        return self._read(spark, table, version, None)
+            return self._resolve(spark, table, payload["version"],
+                                 payload.get("schema"))
+        return self._resolve(spark, table, version)
 
     def _chain_record(self, table: str, version: int) -> dict | None:
-        """The ``CHAIN_RECORD`` a segment write left in ``version``'s
+        """The ``CHAIN_RECORD`` (``key``, base ``schema``, ``chain``,
+        ``chain_rows``) a segment write left in ``version``'s
         directory, None for a snapshot version."""
         path = os.path.join(self._tdir(table), f"v={version}",
                             CHAIN_RECORD)
@@ -539,26 +555,32 @@ class TableStore:
         with open(path) as fh:
             return json.load(fh)
 
-    def _resolve(self, spark: SparkSession, table: str,
-                 desc: dict) -> DataFrame:
-        """The version a pointer payload or a chain record describes,
-        under its recorded schema: its directory, or its chain folded
-        (see ``read``)."""
-        schema = desc.get("schema")
-        if schema is not None:
-            schema = T.StructType.fromJson(schema)
-        chain = desc.get("chain") or [desc["version"]]
-        state = self._read(spark, table, chain[0], schema)
-        if len(chain) == 1:
-            return state
+    def _chain(self, table: str, version: int) -> list[int]:
+        """The versions a read of ``version`` folds, base first: its
+        chain record's chain, ``[version]`` for a snapshot."""
+        return (self._chain_record(table, version)
+                or {"chain": [version]})["chain"]
+
+    def _resolve(self, spark: SparkSession, table: str, version: int,
+                 schema: dict | None = None) -> DataFrame:
+        """``version`` of ``table``: a snapshot's directory, under
+        ``schema`` (its pointer's) when given, or a segment version's
+        chain folded under its chain record's schema (see ``read``)."""
+        record = self._chain_record(table, version)
+        if record is None:
+            return self._read(spark, table, version, schema and
+                              T.StructType.fromJson(schema))
+        schema = T.StructType.fromJson(record["schema"])
         segment = T.StructType(
             schema.fields + [T.StructField(ACTION_COL, T.StringType())])
-        key = desc["key"]
+        key = record["key"]
         on = F.expr(f"`{key}` <=> {_SEG_KEY}")
         upsert = F.expr(f"NOT ({ACTION_COL} <=> '{ACTION_DELETE}')")
-        for v in chain[1:]:
+        base, *segments = record["chain"]
+        state = self._read(spark, table, base, schema)
+        for v in segments:
             seg = self._read(spark, table, v, segment)
-            keys = F.broadcast(seg.select(F.col(key).alias(_SEG_KEY)))
+            keys = seg.select(F.col(key).alias(_SEG_KEY))
             state = (state.join(keys, on, "left_anti")
                      .union(seg.filter(upsert).select(*schema.names)))
         return state
@@ -597,12 +619,11 @@ class TableStore:
         store's normal repartition/bucket path), committed through the
         same atomic pointer — readers never see a partial rewrite, and
         the old layout remains a revision until vacuumed. It is also
-        the explicit fold: the new version is a full snapshot, so the
-        pointer names no chain. The
-        pointer's ``dataset`` revision comment (C8 lineage) is carried
-        from the current version — maintenance must not erase which
-        dataset a table's contents came from. Returns the new version
-        number."""
+        the explicit fold: the new version is a full snapshot, with no
+        chain record. The pointer's ``dataset`` revision comment (C8
+        lineage) is carried from the current version — maintenance
+        must not erase which dataset a table's contents came from.
+        Returns the new version number."""
         df = self.read(spark, table)
         meta = self._payload(table)
         meta_key = key if key is not None else meta.get("key")
@@ -614,30 +635,25 @@ class TableStore:
     def vacuum(self, table: str, keep: int = 2,
                spark: SparkSession | None = None) -> list[int]:
         """C7: drop old revisions (the reference's VACUUM ANALYSE /
-        -maintain-database analog): every version below the newest
-        ``keep`` that no kept version's chain names (a kept segment
-        needs its base and earlier segments), and every orphan above
-        the current version that the open scope does not stage (a
-        load the verdict rejected, a scope aborted or a write that
-        crashed). Like every write it assumes no concurrent writer to
-        ``table``. Pass ``spark`` to also drop the catalog entries of
-        bucketed versions."""
-        payload = self._payload(table)
-        cur = 0 if payload is None else payload["version"]
-        with self._staged_lock:
-            live = [p for t, p in self._staged or [] if t == table]
-        if payload is not None:
-            live.append(payload)
-        live += [{"version": v}
-                 for v in self.versions(table) if cur - keep < v <= cur]
+        -maintain-database analog): every version at or below the
+        current one minus ``keep`` that no newer version's chain names
+        (a kept segment needs its base and earlier segments). Nothing
+        above the current version is touched: it may be a write
+        another instance has staged or is landing, and an orphan there
+        (a rejected, aborted or crashed load) is overwritten by the
+        table's next write. Pass ``spark`` to also drop the catalog
+        entries of bucketed versions."""
+        cur = self.current_version(table)
+        if cur is None:
+            return []
+        versions = self.versions(table)
         named = set()
-        for p in live:
-            record = p if "chain" in p else (
-                self._chain_record(table, p["version"]) or {})
-            named.update(record.get("chain") or [p["version"]])
+        for v in versions:
+            if v > cur - keep:
+                named.update(self._chain(table, v))
         dropped = []
-        for v in self.versions(table):
-            if v not in named:
+        for v in versions:
+            if v <= cur - keep and v not in named:
                 shutil.rmtree(os.path.join(self._tdir(table), f"v={v}"))
                 if spark is not None:
                     spark.sql(

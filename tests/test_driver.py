@@ -243,7 +243,8 @@ def test_cli_end_to_end(tmp_path, spark):
     assert cli.main(common + ["-full", "-maintain-database",
                               "-skip-postupload-tasks"]) == 0
     assert store.versions("crs_parcel_bndry") == [1, 2, 3]
-    assert "chain" not in store._payload("crs_parcel_bndry")
+    assert store._chain("crs_parcel_bndry", 3) == [3]
+    assert store.current_version("crs_parcel_bndry") == 3
 
     # C1 single-job gate through the CLI: a stuck active job refuses
     # the next run cleanly; -override-locks proceeds

@@ -31,18 +31,21 @@ def _jobs(spark, fn):
 
 
 def _assert_pointer_schema(spark, store, table):
-    """The pointer's schema is the one inference gives its base
-    directory, each delta segment of its chain holds that schema plus
-    ``_action string``, and the current read starts no job and returns
-    the base schema."""
+    """The recorded schema (a snapshot pointer's, or a segment's chain
+    record's, which the pointer does not repeat) is the one inference
+    gives the chain's base directory, each delta segment of the chain
+    holds that schema plus ``_action string``, and the current read
+    starts no job and returns the base schema."""
     payload = store._payload(table)
-    base, *segments = payload.get("chain") or [payload["version"]]
+    record = store._chain_record(table, payload["version"])
+    base, *segments = store._chain(table, payload["version"])
 
     def inferred(v):
         return spark.read.parquet(
             os.path.join(store.root, table, f"v={v}")).schema
 
-    schema = T.StructType.fromJson(payload["schema"])
+    assert record is None or "schema" not in payload, table
+    schema = T.StructType.fromJson((record or payload)["schema"])
     assert schema == inferred(base), table
     for v in segments:
         assert inferred(v) == T.StructType(
@@ -106,7 +109,8 @@ TABLE crs_parcel_bndry2 key=audit_id row_tol=0.20,0.95 files pab1
                 "crs_parcel_bndry__minmax"} <= set(tables)
         for t in tables:
             _assert_pointer_schema(spark, store, t)
-    assert store._payload("crs_parcel_bndry")["chain"] == [1, 2]
+    assert store._chain("crs_parcel_bndry", 2) == [1, 2]
+    assert store.current_version("crs_parcel_bndry") == 2
 
 
 def test_pointer_schema_of_dedup_index(spark, tmp_path):

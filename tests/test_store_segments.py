@@ -40,6 +40,11 @@ def _jobs(spark, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _current_chain(store, table="t"):
+    """The chain the table's current version reads, base first."""
+    return store._chain(table, store.current_version(table))
+
+
 def _rows(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
@@ -90,28 +95,32 @@ def test_level5_and_ep3_write_segments(spark, tmp_path):
     the next load (EP3), past the fold bound, writes a snapshot."""
     up, store = _uploader(spark, tmp_path)
     up.apply_updates(level0=True)
-    assert "chain" not in store._payload(BASE)
+    assert _current_chain(store, BASE) == [1]
     columns = store.read(spark, BASE).columns
 
     r = up.apply_updates(level5=True)
     s = r[-1].stats
     assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (3, 2, 0, 1)
+    # the pointer names only the version; the chain is in its record
     payload = store._payload(BASE)
-    assert payload["chain"] == [1, 2] and payload["rows"] == 5
+    assert set(payload) == {"version", "key", "dataset", "rows", "meta",
+                            "catalog"}
+    assert payload["rows"] == 5
+    record = store._chain_record(BASE, 2)
+    assert (record["key"], record["chain"]) == ("audit_id", [1, 2])
     seg = spark.read.parquet(os.path.join(store.root, BASE, "v=2"))
     assert sorted(r[M.ACTION_COL] for r in seg.collect()) == \
         ["D", "I", "I", "I", "U", "U"]
-    assert payload["chain_rows"] == 6
+    assert record["chain_rows"] == 6
     assert store.read(spark, BASE).columns == columns
     assert _sequences(spark, store) == L5_ROWS
 
-    # 6 segment rows > FOLD_RATIO * 5: the next load folds the chain
+    # 6 segment rows > FOLD_RATIO of 5: the next load folds the chain
     write_crs(os.path.join(up.repo.root, "level_0", "20160701000000",
                            "pab1.crs"), PAB1_L0)
     r = up.apply_updates(full_incremental=True)
     assert (r[-1].stats.ninsert, r[-1].stats.ndelete) == (1, 3)
-    payload = store._payload(BASE)
-    assert "chain" not in payload and payload["version"] == 3
+    assert _current_chain(store, BASE) == [3]
     assert store.row_count(BASE) == 3
     assert _sequences(spark, store) == {80401148: 1, 80401149: 2,
                                         80401150: 3}
@@ -128,9 +137,9 @@ def test_ep3_onto_stored_table_writes_segment(spark, tmp_path):
     r = up.apply_updates(full_incremental=True)
     s = r[-1].stats
     assert (s.ninsert, s.nupdate, s.nnullupdate, s.ndelete) == (0, 1, 0, 0)
-    payload = store._payload(BASE)
-    assert (payload["chain"], payload["chain_rows"], payload["rows"]) == \
-        ([1, 2], 1, 3)
+    record = store._chain_record(BASE, store.current_version(BASE))
+    assert (record["chain"], record["chain_rows"], store.row_count(BASE)) \
+        == ([1, 2], 1, 3)
     seg = spark.read.parquet(os.path.join(store.root, BASE, "v=2"))
     assert [(r.audit_id, r[M.ACTION_COL]) for r in seg.collect()] == \
         [(80401150, "U")]
@@ -145,12 +154,11 @@ def test_fold_bound_segment_count(spark, tmp_path):
     _base(spark, store, 40)
     for i in range(S.MAX_SEGMENTS):
         _upsert(spark, store, "t", [(i, f"w{i}")])
-    chain = store._payload("t")["chain"]
+    chain = _current_chain(store)
     assert len(chain) == S.MAX_SEGMENTS + 1
     v = _upsert(spark, store, "t", [(39, "last")])
-    payload = store._payload("t")
-    assert "chain" not in payload and payload["version"] == v
-    assert payload["rows"] == 40
+    assert _current_chain(store) == [v]
+    assert store.row_count("t") == 40
     want = {i: f"v{i}" for i in range(40)}
     want.update({i: f"w{i}" for i in range(S.MAX_SEGMENTS)})
     want[39] = "last"
@@ -159,18 +167,20 @@ def test_fold_bound_segment_count(spark, tmp_path):
 
 def test_fold_bound_segment_rows(spark, tmp_path):
     """A load onto a chain whose segments already hold more than
-    FOLD_RATIO of the pointer's rows writes a full snapshot."""
-    store = TableStore(str(tmp_path / "store"))
-    _base(spark, store, 8)
-    _upsert(spark, store, "t", [(0, "a"), (1, "b")])       # 2 <= 8 / 4
-    assert store._payload("t")["chain"] == [1, 2]
-    _upsert(spark, store, "t", [(2, "c")])                 # onto 2 rows
-    assert store._payload("t")["chain"] == [1, 2, 3]
-    assert store._payload("t")["chain_rows"] == 3
-    _upsert(spark, store, "t", [(3, "d")])                 # 3 > 8 / 4
-    assert "chain" not in store._payload("t")
-    assert dict(store.read(spark, "t").collect()) == {
-        **{i: f"v{i}" for i in range(8)}, 0: "a", 1: "b", 2: "c", 3: "d"}
+    FOLD_RATIO of the pointer's rows writes a full snapshot; at the
+    ratio itself it still lands a segment."""
+    n = 40
+    limit = int(S.FOLD_RATIO * n)
+    for rows, chain in ((limit, [1, 2, 3]), (limit + 1, [3])):
+        store = TableStore(str(tmp_path / f"store{rows}"))
+        _base(spark, store, n)
+        _upsert(spark, store, "t", [(i, "a") for i in range(rows)])
+        assert store._chain_record("t", 2)["chain_rows"] == rows
+        _upsert(spark, store, "t", [(n - 1, "z")])
+        assert _current_chain(store) == chain
+        assert dict(store.read(spark, "t").collect()) == {
+            **{i: f"v{i}" for i in range(n)},
+            **{i: "a" for i in range(rows)}, n - 1: "z"}
 
 
 def test_snapshot_writes_stay_snapshots(spark, tmp_path):
@@ -180,15 +190,15 @@ def test_snapshot_writes_stay_snapshots(spark, tmp_path):
     store.write("t", spark.createDataFrame([(1, "a")], "id long, v string"),
                 key="id")                                  # no rows
     _upsert(spark, store, "t", [(2, "b")])
-    assert "chain" not in store._payload("t")
+    assert _current_chain(store) == [2]
     _upsert(spark, store, "t", [(3, "c")])
-    assert store._payload("t")["chain"] == [2, 3]
+    assert _current_chain(store) == [2, 3]
     cur = store.read(spark, "t")
     stg = spark.createDataFrame([(4, "d")], "id long, v string")
     tagged = M.merge_tagged(cur, stg, spark.createDataFrame(
         [(4,)], "key long"), "id")
     _load(store, "t", tagged, onto=2)                      # stale onto
-    assert "chain" not in store._payload("t")
+    assert _current_chain(store) == [4]
     assert dict(store.read(spark, "t").collect()) == {
         1: "a", 2: "b", 3: "c", 4: "d"}
 
@@ -200,7 +210,7 @@ def test_read_version_resolves_its_own_chain(spark, tmp_path):
     _base(spark, store, 8)
     _upsert(spark, store, "t", [(0, "a")])
     _upsert(spark, store, "t", [(1, "b"), (9, "new")])
-    assert store._payload("t")["chain"] == [1, 2, 3]
+    assert _current_chain(store) == [1, 2, 3]
     df, jobs = _jobs(spark, lambda: store.read(spark, "t", version=2))
     assert jobs == []
     assert dict(df.collect()) == {**{i: f"v{i}" for i in range(8)},
@@ -220,18 +230,20 @@ def test_vacuum_keeps_every_version_a_kept_chain_names(spark, tmp_path):
     assert store.vacuum("t", keep=1) == []
     want = _rows(store.read(spark, "t"))
     assert store.compact(spark, "t") == 4
-    assert "chain" not in store._payload("t")
+    assert _current_chain(store) == [4]
     assert store.vacuum("t", keep=2) == []     # v3 kept, chain [1, 2, 3]
     assert store.vacuum("t", keep=1) == [1, 2, 3]
     assert _rows(store.read(spark, "t")) == want
 
 
-def test_vacuum_collects_orphans_above_current(spark, tmp_path):
-    """A load the verdict rejects leaves its ``v=<n>`` directory as an
-    orphan above the current version; ``vacuum`` collects it, but not
-    a version the open scope stages."""
+def test_vacuum_leaves_versions_above_current(spark, tmp_path):
+    """``vacuum`` touches nothing above the current version: neither a
+    version the open scope stages nor the orphan a rejected load
+    leaves, which may as well be a write another instance is landing.
+    The table's next write reuses the orphan's version number."""
     store = TableStore(str(tmp_path / "store"))
     df = spark.createDataFrame([(1, "a")], "id long, v string")
+    store.write("t", df, key="id")
     store.write("t", df, key="id")
 
     def reject(written):
@@ -239,20 +251,44 @@ def test_vacuum_collects_orphans_above_current(spark, tmp_path):
 
     with pytest.raises(ValueError):
         store.write("t", df, key="id", verdict=reject)
-    assert store.versions("t") == [1, 2]
-    assert store.vacuum("t") == [2]
-    assert store.versions("t") == [1]
+    assert store.versions("t") == [1, 2, 3]
+    assert store.vacuum("t", keep=1) == [1]
+    assert store.versions("t") == [2, 3]
 
     store.begin_dataset_commit()
-    store.write("t", df, key="id")
-    assert store.vacuum("t") == []
+    assert store.write("t", spark.createDataFrame(
+        [(1, "b")], "id long, v string"), key="id") == 3
+    assert store.vacuum("t", keep=1) == []
     store.commit_dataset()
-    assert store.current_version("t") == 2
+    assert store.current_version("t") == 3
+    assert store.read(spark, "t").collect()[0].v == "b"
+
+
+def test_segment_past_broadcast_threshold_sort_merges(spark, tmp_path):
+    """A segment larger than the broadcast threshold folds through a
+    sort-merge anti join, with no broadcast, and reads the same rows:
+    one segment may be as large as its table."""
+    store = TableStore(str(tmp_path / "store"))
+    _base(spark, store, 400)
+    _upsert(spark, store, "t", [(i, f"w{i}") for i in range(0, 400, 5)])
+    assert _current_chain(store) == [1, 2]
+    want = {i: f"w{i}" if i % 5 == 0 else f"v{i}" for i in range(400)}
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        df = store.read(spark, "t")
+        assert dict(df.collect()) == want
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(conf, prev)
+    assert "SortMergeJoin" in plan and "Broadcast" not in plan
 
 
 def test_cli_maintain_leaves_chain_free_pointer(spark, tmp_path):
     """``-maintain-database`` (compact + vacuum) after a level-5 load
-    leaves the table's pointer naming no chain, with the same rows."""
+    leaves the table's current version a snapshot with no chain, with
+    the same rows."""
     from linz_bde_uploader_spark import cli
 
     repo_root = write_repository(str(tmp_path / "repo"))
@@ -263,10 +299,10 @@ def test_cli_maintain_leaves_chain_free_pointer(spark, tmp_path):
     assert cli.main(common + ["-full"]) == 0
     assert cli.main(common + ["-incremental"]) == 0
     store = TableStore(str(tmp_path / "store"))
-    assert store._payload(BASE)["chain"] == [1, 2]
+    assert _current_chain(store, BASE) == [1, 2]
     assert cli.main(common + ["-incremental", "-maintain-database"]) == 0
-    payload = store._payload(BASE)
-    assert "chain" not in payload and payload["rows"] == 5
+    assert _current_chain(store, BASE) == [3]
+    assert store.row_count(BASE) == 5
     assert _sequences(spark, store) == L5_ROWS
     assert store.versions(BASE) == [1, 2, 3]   # v2 is kept, with its base
 
@@ -307,26 +343,27 @@ def test_crash_after_segment_lands(spark, tmp_path, use_tx):
                       config=up.config)
     r = up2.apply_updates(level5=True)
     assert r[-1].status == "loaded"
-    assert store._payload(BASE)["chain"] == [1, 2]
+    assert _current_chain(store, BASE) == [1, 2]
     assert _sequences(spark, store) == L5_ROWS
 
 
 def test_dataset_manifest_with_chain_rolls_forward(spark, tmp_path):
-    """A ``_DATASET_COMMIT`` manifest whose pointer names a chain rolls
+    """A ``_DATASET_COMMIT`` manifest whose pointer names a segment rolls
     forward on the next open to the folded state."""
     store = TableStore(str(tmp_path / "store"))
     _base(spark, store, 4)
     store.begin_dataset_commit()
     _upsert(spark, store, "t", [(0, "a"), (7, "new")])
     staged = store._staged
-    assert staged[0][1]["chain"] == [1, 2]
+    assert "chain" not in staged[0][1]
+    assert store._chain("t", staged[0][1]["version"]) == [1, 2]
     with open(store._manifest_path(), "w") as fh:
         json.dump([{"table": t, "pointer": p} for t, p in staged], fh)
     assert store.current_version("t") == 1
 
     store2 = TableStore(str(tmp_path / "store"))
     assert not os.path.exists(store2._manifest_path())
-    assert store2._payload("t")["chain"] == [1, 2]
+    assert _current_chain(store2) == [1, 2]
     assert dict(store2.read(spark, "t").collect()) == {
         0: "a", 1: "v1", 2: "v2", 3: "v3", 7: "new"}
 
@@ -344,10 +381,11 @@ def test_second_staged_write_extends_staged_chain(spark, tmp_path):
     _load(store, "t", M.merge_tagged(
         staged, stg, spark.createDataFrame([(1,)], "key long"), "id"),
         onto=2)
-    assert [p["chain"] for _, p in store._staged] == [[1, 2], [1, 2, 3]]
+    assert [store._chain("t", p["version"]) for _, p in store._staged] \
+        == [[1, 2], [1, 2, 3]]
     assert store.current_version("t") == 1
     store.commit_dataset()
-    assert store._payload("t")["chain"] == [1, 2, 3]
+    assert _current_chain(store) == [1, 2, 3]
     assert dict(store.read(spark, "t").collect()) == {
         **{i: f"v{i}" for i in range(8)}, 0: "a", 1: "b"}
 
@@ -369,7 +407,7 @@ def test_segment_write_observes_in_result_stage(spark, tmp_path,
     monkeypatch.setattr(DataFrameWriter, "parquet", capture)
     _upsert(spark, store, "t", [(0, "a"), (9, "b")])
     monkeypatch.undo()
-    assert store._payload("t")["chain"] == [1, 2]
+    assert _current_chain(store) == [1, 2]
     plan = (written[-1]._jdf.queryExecution().executedPlan().toString()
             .splitlines())
     metrics = [i for i, line in enumerate(plan) if "CollectMetrics" in line]
@@ -444,7 +482,7 @@ def test_segment_read_equals_snapshot_with_null_keys(spark, tmp_path):
         onto = store.current_version("t")
         tagged = M.merge_tagged(store.read(spark, "t"), stg, changes, "id")
         _load(store, "t", tagged, onto)
-        assert store._payload("t")["chain"] == [onto, onto + 1]
+        assert _current_chain(store) == [onto, onto + 1]
         want = _rows(M.MergeObservation().apply(
             M.merge_tagged(cur, stg, changes, "id")))
         assert _rows(store.read(spark, "t")) == want
