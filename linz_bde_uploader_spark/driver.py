@@ -25,6 +25,18 @@ read (level 5, and EP3 onto an existing table) names that version, so
 the store lands only its changed rows as a delta segment that reads
 merge on read (sources/store.py); EP1 and first loads write full
 snapshots. Every keyed load's pointer records its row count.
+
+A load runs no Spark job besides its own write. Each staged file's
+malformed-row check (``sources.crs.RowCheck``) is observed in the
+action that consumes the file, the way bde_copy counts a file's
+columns in the pass that loads it (lib/LINZ/BdeUpload.pm:1146-1201):
+a table's staged files in its store write, whose verdict reads the
+checks before anything else, and the level-5 change file in the
+dataset's one scan of its table names. The two exits that write
+nothing (a level-5 table with no changed keys, a failed start-time
+continuity check) probe their files instead. A malformed file raises
+``CrsReadError`` with its pointer neither staged nor flipped; the
+``v=<n>`` it wrote is an orphan, as after a tolerance rejection.
 """
 
 from __future__ import annotations
@@ -45,7 +57,7 @@ from linz_bde_uploader_spark.operators.view_refresh import (
     ViewSpec, refresh_views, seed_views,
 )
 from linz_bde_uploader_spark.sources.crs import (
-    CleanseConfig, parse_header, read_crs,
+    CleanseConfig, RowCheck, parse_header, read_crs,
 )
 from linz_bde_uploader_spark.sources.repository import BdeRepository, Dataset
 from linz_bde_uploader_spark.sources.store import TableStore
@@ -254,16 +266,20 @@ class BdeUploader:
             log.error("sql hook %s failed: %s", event, e)
 
     def _stage(self, ds: Dataset, table: TableDef, level: str):
-        """``(header, stg)``: the union of ``table``'s files in ``ds``
-        (header of the last file). With -keep-files the cleansed
+        """``(header, stg, checks)``: the union of ``table``'s files in
+        ``ds`` (header of the last file) and each file's malformed-row
+        check, which the action consuming ``stg`` fills (see
+        ``_load_file``). With -keep-files the cleansed
         staging frame is also snapshot under
         <store>/scratch/<dataset>_L<level>_<table> for debugging
         (analog of the reference's retained .unl working files,
         lib/LINZ/BdeUpload.pm:1146-1176)."""
         files = ds.files()
         header = stg = None
+        checks = []
         for tag in table.files:
-            header, part = self._load_file(files[tag], table)
+            header, part, check = self._load_file(files[tag], table)
+            checks.append(check)
             stg = part if stg is None else stg.unionByName(
                 part, allowMissingColumns=True)
         if self.config.keep_files:
@@ -272,7 +288,7 @@ class BdeUploader:
                                 f"{ds.name}_L{level}_{table.name}")
             stg.write.mode("overwrite").parquet(path)
             log.info("kept working files: %s", path)
-        return header, stg
+        return header, stg, checks
 
     def _record_loaded(self, job, table_name: str, dataset: str,
                        level: str, stats, duration: float,
@@ -384,7 +400,11 @@ class BdeUploader:
         return rows
 
     def _load_file(self, path: str, table: TableDef):
-        """S4+S5+P1: parse header, project valid columns, read+cleanse."""
+        """S4+S5+P1: parse header, project valid columns, read+cleanse.
+        Returns ``(header, frame, check)``: ``check`` is the file's
+        malformed-row check, deferred to the action that consumes
+        ``frame`` (``RowCheck.verify`` once it has run,
+        ``RowCheck.probe`` if none will)."""
         header = parse_header(path)
         if table.column_overrides:
             file_cols = [c for c, _ in table.column_overrides]
@@ -393,9 +413,10 @@ class BdeUploader:
         target_cols = file_cols  # target schema == file schema v0;
         # P1 column intersection still validates overrides vs header
         valid = M.select_valid_columns(header.field_names, target_cols)
+        check = RowCheck()
         df = read_crs(self.spark, path, header=header, valid_columns=valid,
-                      cleanse=self.config.cleanse)
-        return header, df
+                      cleanse=self.config.cleanse, check=check)
+        return header, df, check
 
     def _check_start_continuity(self, table: TableDef, header) -> str | None:
         """§2.8 level-5 gap detector: file START must be close to the
@@ -425,7 +446,7 @@ class BdeUploader:
         inserts; EP3 writes ``merge_tagged``'s full form, the diff
         against the stored version applied."""
         t0 = time.time()
-        header, stg = self._stage(ds, table, "0")
+        header, stg, checks = self._stage(ds, table, "0")
         if table.key:
             validate_key(table, {c.name: c.type_name for c in header.columns})
         prev_count = self._stored_rows(table) if _gated(table) else None
@@ -446,7 +467,7 @@ class BdeUploader:
                 seed_views(self.store, table.name, new, ds.name, spec,
                            table.key)
         return self._write_load(job, ds, table, "0", header, t0, tagged,
-                                onto, prev_count, views)
+                                onto, prev_count, views, checks)
 
     def upload_table_level5(self, job, ds: Dataset, table: TableDef,
                             changes, changed_tables: set[str]) -> TableResult:
@@ -455,15 +476,20 @@ class BdeUploader:
         ``changed_tables`` is ``_changed_tables(changes)``, computed
         once per dataset."""
         t0 = time.time()
-        header, stg = self._stage(ds, table, "5")
+        header, stg, checks = self._stage(ds, table, "5")
 
         cont = self._check_start_continuity(table, header)
         if cont == "fail":
+            # no write consumes the staged files: probe them here
+            for check in checks:
+                check.probe()
             return TableResult(table.name, ds.name, "5", "error",
                                message="start-time continuity gap exceeds fail tolerance")
 
         # early-exit if this table has no changed keys (reference :1713)
         if table.name.lower() not in changed_tables:
+            for check in checks:
+                check.probe()
             self._record_loaded(job, table.name, ds.name, "5",
                                 M.MergeStats(), time.time() - t0,
                                 header.end_time or "")
@@ -490,11 +516,12 @@ class BdeUploader:
         return self._write_load(
             job, ds, table, "5", header, t0,
             M.merge_tagged(cur, stg, chg, table.key, table.unique_cols),
-            onto, prev_count, views)
+            onto, prev_count, views, checks)
 
     def _write_load(self, job, ds: Dataset, table: TableDef, level: str,
                     header, t0: float, tagged, onto: int | None,
-                    prev_count: int | None, views) -> TableResult:
+                    prev_count: int | None, views,
+                    checks: list[RowCheck]) -> TableResult:
         """Every table load's one store write. ``tagged`` is the new
         state with each row's action in ``ACTION_COL``, merged onto
         store version ``onto`` (None for EP1 and a first load). The
@@ -503,10 +530,13 @@ class BdeUploader:
         rows and the tag dropped); either way the write observes the
         action counts and the new state's row count, which the pointer
         records. The verdict runs before the pointer is staged or
-        flipped: the tolerance gate first (``prev_count`` is the
-        gate's previous row count, None for an ungated table), then
-        ``views``, if given, with the written version as the new
-        state.
+        flipped, in three steps: the input checks first (``checks``,
+        the staged files' malformed-row checks, which the write just
+        filled: a malformed file raises ``CrsReadError``), then the
+        tolerance gate (``prev_count`` is the gate's previous row
+        count, None for an ungated table), then ``views``, if given,
+        with the written version as the new state (built only then:
+        a load with no views never plans the read of its own write).
 
         So views are written after the gate passes and before the base
         pointer flips. A crash between the two replays the dataset on
@@ -520,13 +550,15 @@ class BdeUploader:
         outcome = {}
 
         def verdict(written):
+            for check in checks:
+                check.verify()
             stats, rows = observed.result()
             outcome["stats"] = stats
             outcome["tol"], error = _tolerance(table, rows, prev_count)
             if error:
                 raise _Rejected(error)
             if views is not None:
-                views(written)
+                views(written())
             return rows
 
         try:
@@ -628,8 +660,11 @@ class BdeUploader:
                         chg_def = self._change_table_def()
                         if chg_def is None:
                             raise RuntimeError("no l5_change_table configured")
-                        _, changes = self._load_file(ds.files()[chg_def.files[0]], chg_def)
+                        _, changes, check = self._load_file(
+                            ds.files()[chg_def.files[0]], chg_def)
                         changed = _changed_tables(changes)
+                        # that scan consumed the change file
+                        check.verify()
                     for t in tabs:
                         if t.name in failed_tables:
                             # a failed increment must not be skipped over:

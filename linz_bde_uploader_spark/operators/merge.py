@@ -38,7 +38,10 @@ Scale notes (100 TB design):
   persists ``classify_actions``' frame, which its view refresh reads
   several times.
 - the row comparison is a null-safe column expression (whole-stage
-  codegen), never a Python UDF.
+  codegen), never a Python UDF. It and the action rule are written as
+  SQL text (functions/sqltext.py), so building a merge plan costs a
+  fixed number of py4j calls per DataFrame operation, not one or more
+  per column reference.
 
 The maintained-view (IVM) family — ``maintain_aggregate``,
 ``maintain_extrema``, ``maintain_topk``, ``maintain_sums``,
@@ -69,6 +72,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from linz_bde_uploader_spark.cache import persist
+from linz_bde_uploader_spark.functions.sqltext import ident, literal
 
 # Action codes, matching the reference exactly
 # (sql/02-bde_control_functions.sql.in:1750-1765):
@@ -363,22 +367,22 @@ def select_valid_columns(file_columns: list[str], table_columns: list[str]) -> l
     return valid
 
 
-def rows_equal_expr(left: str, right: str, columns: list[str]) -> Column:
-    """Null-safe all-columns-equal comparison (the reference generates
-    per-column null-safe compare SQL via table_version
-    `_ver_get_compare_sql`; here it is one codegen-friendly conjunction).
-    """
-    cond = F.lit(True)
-    for c in columns:
-        cond = cond & F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}"))
-    return cond
+def rows_equal_expr(left: str, right: str, columns: list[str]) -> str:
+    """SQL text of the null-safe all-columns-equal comparison of the
+    ``left`` and ``right`` aliases (the reference generates per-column
+    null-safe compare SQL via table_version `_ver_get_compare_sql`;
+    here it is one codegen-friendly conjunction)."""
+    return " AND ".join(
+        ["true"] + [f"({ident(left, c)} <=> {ident(right, c)})"
+                    for c in columns])
 
 
-def any_differs_expr(left: str, right: str, columns: list[str]) -> Column:
-    cond = F.lit(False)
-    for c in columns:
-        cond = cond | ~F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}"))
-    return cond
+def any_differs_expr(left: str, right: str, columns: list[str]) -> str:
+    """SQL text that is true when some column of ``columns`` differs
+    null-safely between the two aliases."""
+    return " OR ".join(
+        ["false"] + [f"(NOT ({ident(left, c)} <=> {ident(right, c)}))"
+                     for c in columns])
 
 
 def prepare_change_table(changes: DataFrame, table_name: str,
@@ -457,31 +461,37 @@ def _classify_join(current: DataFrame, staged: DataFrame,
     def side(df, alias):
         if chg is not None:
             df = df.join(chg, df[key] == chg["key"], "left_semi")
-        return df.select(F.col(key).alias("key"), *side_cols).alias(alias)
+        return df.selectExpr(f"{ident(key)} AS `key`",
+                             *map(ident, side_cols)).alias(alias)
 
     return side(current, "cur").join(
         side(staged, "stg"), F.col("cur.key") == F.col("stg.key"),
         "full_outer")
 
 
+# the key of a ``_classify_join`` row, whichever side holds it
+_EITHER_KEY = f"coalesce({ident('cur', 'key')}, {ident('stg', 'key')})"
+
+
 def _action(key: str, compare_cols: list[str], unique_cols: list[str],
-            same: str | None = ACTION_NULL_UPDATE) -> Column:
-    """The I/U/D/0/X action of a ``_classify_join`` row. ``same`` is
-    the code of a key whose two rows are equal: '0' for a change list
-    (a null update), None for a full diff, where an identical row is
-    no change."""
+            same: str | None = ACTION_NULL_UPDATE) -> str:
+    """SQL text of the I/U/D/0/X action of a ``_classify_join`` row.
+    ``same`` is the code of a key whose two rows are equal: '0' for a
+    change list (a null update), None for a full diff, where an
+    identical row is no change."""
     non_key_cols = [c for c in compare_cols if c != key]
     equal = rows_equal_expr("cur", "stg", non_key_cols)
-    unique_changed = any_differs_expr(
+    unique_changed = (any_differs_expr(
         "cur", "stg", [c for c in unique_cols if c != key])
-    return (
-        F.when(F.col("stg.key").isNull(), F.lit(ACTION_DELETE))
-        .when(F.col("cur.key").isNull(), F.lit(ACTION_INSERT))
-        .when(equal, F.lit(same).cast("string"))
-        .when(unique_changed if unique_cols else F.lit(False),
-              F.lit(ACTION_KEY_CHANGE))
-        .otherwise(F.lit(ACTION_UPDATE))
-    )
+        if unique_cols else "false")
+    same_code = "NULL" if same is None else literal(same)
+    return (f"CASE WHEN {ident('stg', 'key')} IS NULL "
+            f"THEN {literal(ACTION_DELETE)} "
+            f"WHEN {ident('cur', 'key')} IS NULL "
+            f"THEN {literal(ACTION_INSERT)} "
+            f"WHEN {equal} THEN CAST({same_code} AS STRING) "
+            f"WHEN {unique_changed} THEN {literal(ACTION_KEY_CHANGE)} "
+            f"ELSE {literal(ACTION_UPDATE)} END")
 
 
 def classify_actions(current: DataFrame, staged: DataFrame, change_keys: DataFrame,
@@ -523,11 +533,11 @@ def classify_actions(current: DataFrame, staged: DataFrame, change_keys: DataFra
                               if c not in compare_cols]))
     joined = _classify_join(current, staged, _change_key_set(change_keys),
                             key, side_cols)
-    return joined.select(
-        F.coalesce(F.col("cur.key"), F.col("stg.key")).alias("key"),
-        _action(key, compare_cols, unique_cols).alias("action"),
-        *[F.col(f"cur.{c}").alias(f"_old_{c}") for c in carry_cols],
-        *[F.col(f"stg.{c}").alias(f"_new_{c}") for c in carry_cols],
+    return joined.selectExpr(
+        f"{_EITHER_KEY} AS `key`",
+        f"{_action(key, compare_cols, unique_cols)} AS `action`",
+        *[f"{ident('cur', c)} AS {ident(f'_old_{c}')}" for c in carry_cols],
+        *[f"{ident('stg', c)} AS {ident(f'_new_{c}')}" for c in carry_cols],
     )
 
 
@@ -610,11 +620,15 @@ def merge_tagged(current: DataFrame, staged: DataFrame,
     chg = None if change_keys is None else _change_key_set(change_keys)
     action = _action(key, cols, unique_cols or [],
                      ACTION_NULL_UPDATE if chg is not None else None)
-    row = (F.when(action.isin(*_ADDS),
-                  F.struct(*[F.col(f"stg.{c}") for c in cols]))
-           .otherwise(F.struct(*[F.col(f"cur.{c}") for c in cols])))
+
+    def side(alias):
+        return f"struct({', '.join(ident(alias, c) for c in cols)})"
+
+    adds = ", ".join(map(literal, _ADDS))
+    row = (f"CASE WHEN ({action}) IN ({adds}) THEN {side('stg')} "
+           f"ELSE {side('cur')} END")
     changed = (_classify_join(current, staged, chg, key, cols)
-               .select(row.alias("_row"), action.alias(ACTION_COL))
+               .selectExpr(f"{row} AS _row", f"{action} AS {ACTION_COL}")
                .select("_row.*", ACTION_COL))
     if chg is None:
         return changed
@@ -680,9 +694,9 @@ def full_diff(current: DataFrame, staged: DataFrame, key: str,
     non_key_cols = [c for c in compare_cols if c != key]
     return (
         _classify_join(current, staged, None, key, non_key_cols)
-        .select(F.coalesce(F.col("cur.key"), F.col("stg.key")).alias("key"),
-                _action(key, compare_cols, [], None).alias("action"))
-        .filter(F.col("action").isNotNull())
+        .selectExpr(f"{_EITHER_KEY} AS `key`",
+                    f"{_action(key, compare_cols, [], None)} AS `action`")
+        .filter("`action` IS NOT NULL")
     )
 
 

@@ -3,6 +3,17 @@
 Local testing runs ``local[N]``; the settings below are the ones that
 matter at cluster scale too (AQE, skew handling, partition sizing,
 Arrow for the few Pandas-UDF operators).
+
+It also turns off PySpark's per-call origin capture
+(``spark.python.sql.dataFrameDebugging.enabled``, a static conf that
+is on by default in Spark 4.1). With it on, every ``Column`` and
+``DataFrame`` call walks the Python stack and sends the call site to
+the JVM, which roughly doubles the py4j round trips of a plan build;
+the upload builds a few plans per table, so that is a fixed driver
+cost per load. The trade-off: an analysis error raised in a session
+from ``get_spark`` no longer names the Python line that built the
+failing expression (the error itself and its SQL context are
+unchanged). This is a fixed setting, not an option.
 """
 
 from __future__ import annotations
@@ -39,5 +50,8 @@ def get_spark(app_name: str = "linz-bde-spark", shuffle_partitions: int | None =
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture per Column/DataFrame call (see
+        # the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

@@ -34,17 +34,20 @@ malformed-row error budget.
 
 from __future__ import annotations
 
+import functools
 import gzip
+import hashlib
 import io
 import re
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from linz_bde_uploader_spark.cache import persist, release
+from linz_bde_uploader_spark.functions.sqltext import ident, literal
 
 # Header type name -> Spark type
 # (types observed across reference fixtures + tables.conf overrides;
@@ -251,42 +254,100 @@ class CrsReadError(RuntimeError):
     (bde_copy ``max_errors``/``column_count error`` semantics)."""
 
 
+def _malformed(path: str, bad_rows: DataFrame, budget: int,
+               count: str) -> CrsReadError:
+    """The error for a file whose malformed rows exceed ``budget``,
+    with a sample of ``bad_rows`` (a job run on this failure path
+    only)."""
+    sample = [r["_p"] for r in bad_rows.limit(16).collect()]
+    return CrsReadError(f"{path}: {count} malformed row(s) exceed "
+                        f"max_errors={budget}; sample={sample[:3]!r}")
+
+
+class RowCheck:
+    """``read_crs``' malformed-row check of one file, deferred to the
+    Spark action that consumes the read. bde_copy counts a file's
+    columns in the same streaming pass that loads it
+    (lib/LINZ/BdeUpload.pm:1146-1201); an observed read does the same,
+    where the eager check is a ``take(1)`` job of its own.
+
+    ``read_crs`` defers only a splittable file at a budget of 0: the
+    count sits in a map stage, where a retried task can count a row
+    twice, and at budget 0 only zero against non-zero matters. A gz
+    file or a budget above 0 is checked eagerly as before, and the
+    check then holds nothing: ``verify`` and ``probe`` pass."""
+
+    def __init__(self):
+        self.observation = Observation()
+        self._deferred: tuple[str, DataFrame] | None = None
+
+    def _observe(self, path: str, split: DataFrame,
+                 bad_rows: DataFrame) -> DataFrame:
+        self._deferred = (path, bad_rows)
+        return split.observe(self.observation,
+                             F.expr("count_if(NOT _ok) AS bad"))
+
+    def verify(self) -> None:
+        """Raise ``CrsReadError`` if the action that consumed the read
+        saw a malformed row; call this only once that action has run.
+        An action whose plan dropped the read (adaptive execution
+        prunes a join side it proved empty) reports no metric: the
+        check then falls back to ``probe``."""
+        if self._deferred is None:
+            return
+        row = self.observation._jo.getRow()
+        if row.size() == 0:
+            self.probe()
+        elif row.getLong(0):
+            raise _malformed(*self._deferred, 0, "at least one")
+
+    def probe(self) -> None:
+        """The same check for a read no action consumes: the eager
+        ``take(1)`` probe, one job."""
+        if self._deferred is not None and self._deferred[1].take(1):
+            raise _malformed(*self._deferred, 0, "at least one")
+
+
 def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
              valid_columns: list[str] | None = None,
              cleanse: CleanseConfig | None = None,
-             enforce_budget: bool = True) -> DataFrame:
+             enforce_budget: bool = True,
+             check: RowCheck | None = None) -> DataFrame:
     """S5: distributed read of a .crs[.gz] file.
 
     Plan shape: ``spark.read.text`` -> filter (data rows end with '|')
-    -> split -> per-column cast, all whole-stage-codegen column
-    expressions. With ``enforce_budget`` the malformed-row check on a
-    SPLITTABLE (plain-text) file is a separate counting pass over the
-    parallel scan (at the production budget of 0 it short-circuits at
-    the first bad row via take(1)); the main projection then re-scans —
-    the same two passes the reference makes (bde_copy cleanses to a
-    temp file, COPY re-reads it). A ``.gz`` file decompresses ONCE:
-    the repartitioned lines are persisted, the budget count fills the
-    cache, and the projection reads from it (see the inline comment;
-    release via ``cache.release_caches()`` in long-lived sessions).
+    -> split -> per-column cast and cleanse, all whole-stage-codegen
+    column expressions. They are written as SQL text
+    (functions/sqltext.py), so building the plan costs a fixed number
+    of py4j calls per DataFrame operation and a small constant per
+    column, whatever the cleanse map's rule count.
+
+    ``enforce_budget`` checks the malformed rows against
+    ``max_errors``. For a SPLITTABLE (plain-text) file at the
+    production budget of 0, a ``check`` (:class:`RowCheck`) moves the
+    check into the action that consumes the read: the split rows are
+    observed above the ``_ok`` filter, and ``check.verify()`` raises
+    once that action has run. Without one, the check is a ``take(1)``
+    job that stops at the first bad row. A budget above 0 counts the
+    bad rows in a pass of its own, and the main projection re-scans.
+    A ``.gz`` file decompresses ONCE: the repartitioned lines are
+    persisted, the budget count fills the cache, and the projection
+    reads from it (see the inline comment; release via
+    ``cache.release_caches()`` in long-lived sessions).
     ``valid_columns`` applies P1 column intersection (projection
     happens before casting, so pruned columns cost nothing).
     """
     header = header or parse_header(path)
-    lines = spark.read.text(path)
+    cleanse = cleanse or CleanseConfig()
     # normalize CRLF: header parsing strips \r, data rows must too or
-    # every line of a CRLF file would fail the trailing-pipe filter
-    value = F.regexp_replace(F.col("value"), r"\r$", "")
+    # every line of a CRLF file would fail the trailing-pipe filter.
     # Data rows carry a trailing '|'; header lines never do.
-    rows = lines.select(value.alias("value")) \
-                .filter(F.col("value").endswith("|"))
-
-    ncols = len(header.columns)
-    parts = F.split(F.col("value"), r"\|", -1)
+    rows = (spark.read.text(path)
+            .selectExpr(r"regexp_replace(value, '\\r$', '') AS value")
+            .filter("endswith(value, '|')"))
     # trailing '|' => len == ncols + 1 with empty last element
-    ok = F.size(parts) == ncols + 1
-
-    def split_rows(df: DataFrame) -> DataFrame:
-        return df.select(parts.alias("_p"), ok.alias("_ok"))
+    parts = r"split(value, '\\|', -1)"
+    split = (f"{parts} AS _p", f"size({parts}) = {len(header.columns) + 1} AS _ok")
 
     is_gz = path.endswith(".gz")
     if is_gz:
@@ -321,32 +382,33 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
             # (one string row per data line, spills to disk).
             rows = persist(rows, StorageLevel.MEMORY_AND_DISK)
 
+    data = rows.selectExpr(*split)
     if enforce_budget:
-        budget = (cleanse.max_errors if cleanse else 0)
-        bad_rows = split_rows(rows).filter(~F.col("_ok"))
+        budget = cleanse.max_errors
+        bad_rows = data.filter("NOT _ok")
         if budget == 0 and not is_gz:
-            # splittable scan: any bad row is fatal, stop at the
-            # first. take(1) scans partitions in growing rounds and
-            # stops at the first bad row: one job for a one-split
-            # file (a limit(1).count() runs two). Re-reading is cheap
-            # because the plain text scan is parallel, unlike gz above
-            bad = len(bad_rows.take(1))
+            # splittable scan: any bad row is fatal. Observed in the
+            # consuming action when the caller takes a check; else
+            # take(1) scans partitions in growing rounds and stops at
+            # the first bad row: one job for a one-split file.
+            # Re-reading is cheap because the plain text scan is
+            # parallel, unlike gz above
+            if check is not None:
+                data = check._observe(path, data, bad_rows)
+            elif bad_rows.take(1):
+                raise _malformed(path, bad_rows, budget, "at least one")
         else:
             bad = bad_rows.count()
-        if bad > budget:
-            sample = [r["_p"] for r in bad_rows.limit(16).collect()]
-            count = "at least one" if budget == 0 and not is_gz else str(bad)
-            if is_gz:
-                # the raise abandons the gz line cache unconsumed —
-                # free it NOW, or a session that validates many files
-                # and catches CrsReadError leaks one full cached copy
-                # per rejected file until the next release_caches()
-                release(rows)
-            raise CrsReadError(
-                f"{path}: {count} malformed row(s) exceed "
-                f"max_errors={budget}; sample={sample[:3]!r}"
-            )
-    data = split_rows(rows)
+            if bad > budget:
+                error = _malformed(path, bad_rows, budget, str(bad))
+                if is_gz:
+                    # the raise abandons the gz line cache unconsumed —
+                    # free it NOW, or a session that validates many
+                    # files and catches CrsReadError leaks one full
+                    # cached copy per rejected file until the next
+                    # release_caches()
+                    release(rows)
+                raise error
 
     cols = header.columns
     if valid_columns is not None:
@@ -354,51 +416,55 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
         keep = [(i, c) for i, c in enumerate(cols) if c.name.lower() in wanted]
     else:
         keep = list(enumerate(cols))
-
-    exprs = []
-    for i, c in keep:
-        # F.get is NULL past the end, so no filter order — Catalyst
-        # may evaluate a pushed-down predicate on a parsed column
-        # before ``_ok`` — can raise on a short malformed row. Rows
-        # that pass ``_ok`` hold every field.
-        raw = F.get(F.col("_p"), i)
-        val = F.when(raw == "", F.lit(None)).otherwise(raw)  # empty = NULL
-        exprs.append(_cast_and_cleanse(val, c, cleanse).alias(c.name))
-    return data.filter(F.col("_ok")).select(*exprs)
+    return data.filter("_ok").selectExpr(*[
+        f"{_cast_and_cleanse(_field(i), c, cleanse)} AS {ident(c.name)}"
+        for i, c in keep])
 
 
-def _cast_and_cleanse(col, c: CrsColumn, cleanse: CleanseConfig | None):
+def _field(i: int) -> str:
+    """SQL text of field ``i`` of the split row, an empty field as
+    NULL (COPY ``NULL AS ''``). ``get`` is NULL past the end, so no
+    filter order — Catalyst may evaluate a pushed-down predicate on a
+    parsed column before ``_ok`` — can raise on a short malformed row.
+    Rows that pass ``_ok`` hold every field."""
+    pick = f"get(_p, {i})"
+    return f"CASE WHEN {pick} = '' THEN NULL ELSE {pick} END"
+
+
+_DATETIME = literal("yyyy-MM-dd HH:mm:ss")
+
+
+def _cast_and_cleanse(value: str, c: CrsColumn, cleanse: CleanseConfig) -> str:
+    """SQL text casting and cleansing the SQL expression ``value`` as
+    column ``c``."""
     t = c.spark_type
-    base = c.type_name.lower().split("(")[0]
-    if cleanse is None:
-        cleanse = CleanseConfig()
     if isinstance(t, T.StringType):
-        if base in _GEOM_TYPES:
-            return cleanse_wkt(col, cleanse)
-        return cleanse_text(col, cleanse)
+        if c.type_name.lower().split("(")[0] in _GEOM_TYPES:
+            return cleanse_wkt(value, cleanse)
+        return cleanse_text(value, cleanse)
     if isinstance(t, (T.TimestampNTZType, T.TimestampType)):
-        ts = F.to_timestamp_ntz(col, F.lit("yyyy-MM-dd HH:mm:ss"))
+        ts = f"to_timestamp_ntz({value}, {_DATETIME})"
         if cleanse.minimum_year > 0:
-            ts = F.when(
-                F.year(ts) < cleanse.minimum_year,
-                F.to_timestamp_ntz(F.lit(cleanse.invalid_datetime),
-                                   F.lit("yyyy-MM-dd HH:mm:ss")),
-            ).otherwise(ts)
+            floor = (f"to_timestamp_ntz({literal(cleanse.invalid_datetime)}, "
+                     f"{_DATETIME})")
+            ts = (f"CASE WHEN year({ts}) < {cleanse.minimum_year} "
+                  f"THEN {floor} ELSE {ts} END")
         return ts
     if isinstance(t, T.DateType):
-        d = F.coalesce(F.try_to_timestamp(col, F.lit("yyyy-MM-dd")),
-                       F.try_to_timestamp(col, F.lit("dd/MM/yyyy"))).cast("date")
+        d = (f"CAST(coalesce(try_to_timestamp({value}, 'yyyy-MM-dd'), "
+             f"try_to_timestamp({value}, 'dd/MM/yyyy')) AS DATE)")
         if cleanse.minimum_year > 0:
-            sentinel = _normalize_date_string(cleanse.invalid_date)
-            d = F.when(F.year(d) < cleanse.minimum_year,
-                       F.lit(sentinel).cast("date")).otherwise(d)
+            sentinel = literal(_normalize_date_string(cleanse.invalid_date))
+            d = (f"CASE WHEN year({d}) < {cleanse.minimum_year} "
+                 f"THEN CAST({sentinel} AS DATE) ELSE {d} END")
         return d
-    return col.cast(t)
+    return f"CAST({value} AS {t.simpleString()})"
 
 
-def cleanse_text(col, cleanse: CleanseConfig):
-    """bde_copy character mapping + UTF-8 enforcement, as JVM-side
-    expressions (no Python UDF).
+def cleanse_text(value: str, cleanse: CleanseConfig) -> str:
+    """bde_copy character mapping + UTF-8 enforcement of the SQL
+    expression ``value``, as SQL text of JVM-side expressions (no
+    Python UDF).
 
     The production map (conf/linz_bde_uploader.conf:416-1244) holds
     ~300 rules; chaining one regexp_replace per rule would nest 300
@@ -407,15 +473,16 @@ def cleanse_text(col, cleanse: CleanseConfig):
     multi-character replacements (newline -> literal "\\n") need a
     regexp each. With ``utf8_encoding enforced``, non-ASCII characters
     the map doesn't allow become ``utf8_replace_unmapped`` (reference
-    default '?').
+    default '?'). The chain is compiled once per configuration into
+    text around one slot for the value (``_compile_chain``).
 
     That chain still scans a value once per step (18 scans for a
     310-rule map with 15 multi-character rules), yet almost every
     value is plain ASCII that no rule touches, so it runs behind a one-scan
-    gate: ``when(col.rlike(trigger), chain).otherwise(col)``. The gate
-    is exact. Every step is the identity on a value holding none of
-    the rule source characters (translate, delete and regexp rules),
-    none of the C0 controls the chain deletes, and no non-ASCII
+    gate: ``CASE WHEN value RLIKE trigger THEN chain ELSE value END``.
+    The gate is exact. Every step is the identity on a value holding
+    none of the rule source characters (translate, delete and regexp
+    rules), none of the C0 controls the chain deletes, and no non-ASCII
     character (which the UTF-8 step may replace). Such a value passes
     through unchanged; any other runs the same chain as before, so
     the output is identical and NULL stays NULL. The trigger is
@@ -424,17 +491,19 @@ def cleanse_text(col, cleanse: CleanseConfig):
     a positive class listing the ~300 trigger characters compiles to
     a chain of per-character tests and is slower than no gate at all.
     The collision fallback (``_single_pass_map_udf``) is not gated."""
-    out, sources = _cleanse_chain(col, cleanse)
+    chain, sources = _cleanse_chain(value, cleanse)
     if sources is None:
-        return out
-    return F.when(col.rlike(_trigger_class(sources)), out).otherwise(col)
+        return chain
+    return (f"CASE WHEN {value} RLIKE {literal(_trigger_class(sources))} "
+            f"THEN {chain} ELSE {value} END")
 
 
 # C0 controls the chain deletes (tab, LF and CR are kept)
 _C0_DELETED = r"[\x00-\x08\x0B\x0C\x0E-\x1F]"
 
 
-def _trigger_class(sources: set[str]) -> str:
+@functools.lru_cache(maxsize=32)
+def _trigger_class(sources: frozenset[str]) -> str:
     """Java regex matching any character some cleanse step can change:
     the complement of the ASCII characters that are neither a rule
     source nor a deleted C0 control (see ``cleanse_text``)."""
@@ -449,12 +518,30 @@ def _java_replacement(s: str) -> str:
     return s.replace("\\", "\\\\").replace("$", "\\$")
 
 
-def _cleanse_chain(col, cleanse: CleanseConfig):
-    """The ungated cleanse of ``cleanse_text`` and the set of rule
-    source characters that gate it; the set is None when a rule
-    collision forces the single-pass UDF instead."""
+def _cleanse_chain(value: str, cleanse: CleanseConfig
+                   ) -> tuple[str, frozenset[str] | None]:
+    """The ungated cleanse of ``cleanse_text`` as SQL text, and the set
+    of rule source characters that gate it; the set is None when a
+    rule collision forces the single-pass UDF instead."""
+    compiled = _compile_chain(tuple(cleanse.char_map.items()),
+                              cleanse.utf8_enforced, cleanse.utf8_unmapped)
+    if compiled is None:
+        udf = _registered("char_map", sorted(cleanse.char_map.items()),
+                          _single_pass_map_udf(cleanse))
+        return f"{udf}({value})", None
+    prefix, suffix, sources = compiled
+    return prefix + value + suffix, sources
+
+
+@functools.lru_cache(maxsize=32)
+def _compile_chain(char_items: tuple[tuple[str, str], ...],
+                   utf8_enforced: bool, utf8_unmapped: str
+                   ) -> tuple[str, str, frozenset[str]] | None:
+    """The ungated chain of a configuration's map and UTF-8 rule as
+    the SQL text before and after its one value slot, with its rule
+    source set; None on a rule collision."""
     kept_src, kept_dst, del_src, rx_rules, allowed = [], [], [], [], set()
-    for src, dst in cleanse.char_map.items():
+    for src, dst in char_items:
         allowed.update(ch for ch in dst if ord(ch) > 127)
         if len(src) == 1 and src == dst:
             allowed.add(src)
@@ -471,21 +558,34 @@ def _cleanse_chain(col, cleanse: CleanseConfig):
     # that as long as no translate output is itself a regexp source;
     # on collision fall back to a single-pass per-character map.
     if set(kept_dst) & {s for s, _ in rx_rules}:
-        return _single_pass_map_udf(cleanse)(col), None
-    out = col
+        return None
+    steps = []
     # translate pairs positionally; unpaired trailing chars are deleted
     if kept_src or del_src:
-        out = F.translate(out, "".join(kept_src + del_src), "".join(kept_dst))
+        steps.append(("translate", "".join(kept_src + del_src),
+                      "".join(kept_dst)))
     for src, dst in rx_rules:
-        out = F.regexp_replace(out, re.escape(src), _java_replacement(dst))
+        steps.append(("regexp_replace", re.escape(src), _java_replacement(dst)))
     # delete remaining C0 control characters (utf8_replace_invalid delete)
-    out = F.regexp_replace(out, _C0_DELETED, "")
-    if cleanse.utf8_enforced:
+    steps.append(("regexp_replace", _C0_DELETED, ""))
+    if utf8_enforced:
         keep_class = "".join(re.escape(c) for c in sorted(allowed))
-        out = F.regexp_replace(out, f"[^\\x00-\\x7F{keep_class}]",
-                               _java_replacement(cleanse.utf8_unmapped))
-    sources = set(kept_src + del_src).union(*(s for s, _ in rx_rules))
-    return out, sources
+        steps.append(("regexp_replace", f"[^\\x00-\\x7F{keep_class}]",
+                      _java_replacement(utf8_unmapped)))
+    prefix = "".join(f"{fn}(" for fn, _, _ in reversed(steps))
+    suffix = "".join(f", {literal(a)}, {literal(b)})" for _, a, b in steps)
+    sources = frozenset(kept_src + del_src).union(*(s for s, _ in rx_rules))
+    return prefix, suffix, sources
+
+
+def _registered(kind: str, key, udf) -> str:
+    """Register the Python UDF ``udf`` in the active session as a
+    temporary function named for ``kind`` and ``key`` (two
+    configurations never share a name), for SQL text to call; returns
+    the quoted name."""
+    name = f"bde_{kind}_{hashlib.sha1(repr(key).encode()).hexdigest()[:16]}"
+    SparkSession.active().udf.register(name, udf)
+    return ident(name)
 
 
 def _single_pass_map_udf(cleanse: CleanseConfig):
@@ -502,16 +602,18 @@ def _single_pass_map_udf(cleanse: CleanseConfig):
     return F.udf(one, "string", useArrow=True)
 
 
-def cleanse_wkt(col, cleanse: CleanseConfig):
-    """bde_copy spatial fixup: strip leading digits/spaces, prepend
-    ``wkt_prefix``. The longitude offset (+160.0 on every longitude)
-    requires numeric edits inside the WKT text -> Arrow-batched Pandas
-    UDF (slow path, geometry columns only)."""
-    stripped = F.regexp_replace(col, r"^[0-9 ]+", "")
-    prefixed = F.concat(F.lit(cleanse.wkt_prefix), stripped)
-    if not cleanse.longitude_offset:
+def cleanse_wkt(value: str, cleanse: CleanseConfig) -> str:
+    """bde_copy spatial fixup of the SQL expression ``value``, as SQL
+    text: strip leading digits/spaces, prepend ``wkt_prefix``. The
+    longitude offset (+160.0 on every longitude) requires numeric edits
+    inside the WKT text -> Arrow-batched Pandas UDF (slow path,
+    geometry columns only), called by its registered name."""
+    prefixed = (f"concat({literal(cleanse.wkt_prefix)}, "
+                f"regexp_replace({value}, '^[0-9 ]+', ''))")
+    offset = cleanse.longitude_offset
+    if not offset:
         return prefixed
-    return _wkt_offset_udf(cleanse.longitude_offset)(prefixed)
+    return f"{_registered('wkt_offset', offset, _wkt_offset_udf(offset))}({prefixed})"
 
 
 def _wkt_offset_udf(offset: float):

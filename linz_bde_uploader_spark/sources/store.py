@@ -354,7 +354,8 @@ class TableStore:
               rows: int | None = None,
               meta: dict | None = None,
               clustered: Callable[..., DataFrame] | None = None,
-              verdict: Callable[[DataFrame], int | None] | None = None,
+              verdict: Callable[[Callable[[], DataFrame]], int | None]
+              | None = None,
               onto: int | None = None) -> int:
         """Write a new version and atomically commit the pointer.
         ``dataset`` is recorded as the revision comment (C8:
@@ -391,8 +392,10 @@ class TableStore:
         places sits in the write job's result stage, whose accumulator
         updates Spark applies once per partition even when a stage is
         retried. ``verdict`` runs after the data lands and before the
-        pointer is staged or flipped. It receives the written version
-        as ``read`` would return it (no inference job); its return
+        pointer is staged or flipped. It receives a zero-argument
+        callable that returns the written version as ``read`` would
+        (no inference job), so a verdict that never reads it pays
+        neither the chain-record read nor the fold plan; its return
         value is the pointer's ``rows`` (in place of ``rows``), and an
         exception it raises propagates with the pointer untouched —
         the new ``v=<n>`` directory is then an orphan that the table's
@@ -452,7 +455,7 @@ class TableStore:
             payload["schema"] = schema
         if verdict is not None:
             payload["rows"] = verdict(
-                self._resolve(spark, table, new_v, schema))
+                lambda: self._resolve(spark, table, new_v, schema))
         with self._staged_lock:
             if self._staged is not None:
                 # dataset-transaction scope: data is on disk but the

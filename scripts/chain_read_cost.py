@@ -92,7 +92,7 @@ def _load(spark, store, staged, keys, onto):
     observed = M.MergeObservation()
     store.write("t", M.merge_tagged(cur, stg, chg, "id"), key="id",
                 clustered=observed.apply,
-                verdict=lambda written: observed.result()[1], onto=onto)
+                verdict=lambda new: observed.result()[1], onto=onto)
     return time.perf_counter() - t0
 
 

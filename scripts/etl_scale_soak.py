@@ -250,10 +250,11 @@ def cleanse_path_taken(spark, cfg) -> str:
     single-pass per-character fallback fires."""
     from pyspark.sql import functions as F
 
+    from linz_bde_uploader_spark.functions.sqltext import literal
     from linz_bde_uploader_spark.sources.crs import cleanse_text
 
-    df = spark.range(1).select(
-        cleanse_text(F.lit("x é – \\ | probe"), cfg).alias("t"))
+    df = spark.range(1).select(F.expr(
+        cleanse_text(literal("x é – \\ | probe"), cfg)).alias("t"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     return ("udf" if ("EvalPython" in plan or "PythonUDF" in plan)
             else "composed")

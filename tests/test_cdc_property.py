@@ -286,7 +286,7 @@ def test_store_chain_matches_model(spark, first, loads):
                 state = dict(stg)
             observed = M.MergeObservation()
             store.write("t", tagged, key="id", clustered=observed.apply,
-                        verdict=lambda w, o=observed: o.result()[1],
+                        verdict=lambda new, o=observed: o.result()[1],
                         onto=prev["version"])
             payload = store._payload("t")
             if (len(chain) > S.MAX_SEGMENTS

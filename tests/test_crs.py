@@ -5,6 +5,7 @@ import pytest
 from linz_bde_uploader_spark.sources.crs import (
     CleanseConfig, CrsReadError, cleanse_text, parse_header, read_crs,
 )
+from linz_bde_uploader_spark.functions.sqltext import literal
 from tests.fixtures import PAB1_L0, UTF8, XAUD, write_crs
 
 
@@ -123,7 +124,7 @@ def test_cleanse_char_map(spark):
     import pyspark.sql.functions as F
     cfg = CleanseConfig()
     df = spark.range(1).select(F.lit("a|b\\c\nd").alias("s"))
-    out = df.select(cleanse_text(F.col("s"), cfg).alias("s")).first().s
+    out = df.select(F.expr(cleanse_text("s", cfg)).alias("s")).first().s
     assert out == "a b c\\nd"
 
 
@@ -145,8 +146,8 @@ def test_date_floor_uses_configured_sentinel(spark):
     from linz_bde_uploader_spark.sources.crs import CrsColumn, _cast_and_cleanse
 
     cfg = CleanseConfig(minimum_year=1900, invalid_date="01/01/1900")
-    col = _cast_and_cleanse(F.lit("1850-06-15"), CrsColumn("d", "date", True), cfg)
-    got = spark.range(1).select(col.alias("d")).first()["d"]
+    col = _cast_and_cleanse(literal("1850-06-15"), CrsColumn("d", "date", True), cfg)
+    got = spark.range(1).select(F.expr(col).alias("d")).first()["d"]
     assert str(got) == "1900-01-01"
 
 
@@ -160,13 +161,14 @@ def test_wkt_offset_preserves_precision(spark):
     cfg = CleanseConfig(longitude_offset=160.0)
     raw = "POINT (14.76602860417 -36.84846000321)"
     got = spark.range(1).select(
-        cleanse_wkt(F.lit(raw), cfg).alias("g")).first()["g"]
+        F.expr(cleanse_wkt(literal(raw), cfg)).alias("g")).first()["g"]
     assert got == "SRID=4167;POINT (174.76602860417 -36.84846000321)"
 
     # a fractional offset on an integer coordinate keeps its fraction
     cfg2 = CleanseConfig(longitude_offset=160.5)
     got2 = spark.range(1).select(
-        cleanse_wkt(F.lit("POINT (14 -41)"), cfg2).alias("g")).first()["g"]
+        F.expr(cleanse_wkt(literal("POINT (14 -41)"), cfg2)).alias("g")
+    ).first()["g"]
     assert got2 == "SRID=4167;POINT (174.5 -41)"
 
 
@@ -177,7 +179,7 @@ def test_cleanse_single_pass_on_collision(spark):
     import pyspark.sql.functions as F
     cfg = CleanseConfig(char_map={"x": "\n", "\n": "\\n"})
     df = spark.range(1).select(F.lit("ax\nb").alias("s"))
-    out = df.select(cleanse_text(F.col("s"), cfg).alias("s")).first().s
+    out = df.select(F.expr(cleanse_text("s", cfg)).alias("s")).first().s
     assert out == "a\n\\nb"
 
 
@@ -216,7 +218,7 @@ def test_production_conf_block(spark):
 
     raw = "a|b\\c\x01d é ok – dash ♯sharp\ne"
     got = spark.range(1).select(
-        cleanse_text(F.lit(raw), cfg).alias("t")).first()["t"]
+        F.expr(cleanse_text(literal(raw), cfg)).alias("t")).first()["t"]
     # | and \ -> space; \x01 control char deleted; é and – kept by the
     # UTF-8 map; ♯ unmapped -> '?'; newline -> literal \n
     assert got == "a b cd é ok – dash ?sharp\\ne"
@@ -245,7 +247,7 @@ def test_wkt_cleanse(spark):
     from linz_bde_uploader_spark.sources.crs import cleanse_wkt
     cfg = CleanseConfig()
     df = spark.range(1).select(F.lit("12 POINT(10.5 -41.2)").alias("g"))
-    out = df.select(cleanse_wkt(F.col("g"), cfg).alias("g")).first().g
+    out = df.select(F.expr(cleanse_wkt("g", cfg)).alias("g")).first().g
     assert out == "SRID=4167;POINT(170.5 -41.2)"
 
 
@@ -395,6 +397,14 @@ _GATE_CONFS = {
 }
 
 
+def _gate_values(cfg):
+    """Every character U+0000-U+024F (alone and inside ASCII text), a
+    CJK and an astral character, every map source, "" and NULL."""
+    chars = [chr(i) for i in range(0x250)] + ["中", "\U0001F600"]
+    chars += list(cfg.char_map)
+    return [None, ""] + chars + [f"xy {c} zw" for c in chars]
+
+
 @pytest.mark.parametrize("conf", sorted(_GATE_CONFS))
 def test_cleanse_gate_matches_ungated_chain(spark, conf):
     """The gate in front of the cleanse chain is exact: for every
@@ -406,14 +416,12 @@ def test_cleanse_gate_matches_ungated_chain(spark, conf):
     from linz_bde_uploader_spark.sources.crs import _cleanse_chain
 
     cfg = _GATE_CONFS[conf]()
-    chars = [chr(i) for i in range(0x250)] + ["中", "\U0001F600"]
-    chars += list(cfg.char_map)
-    values = [None, ""] + chars + [f"xy {c} zw" for c in chars]
+    values = _gate_values(cfg)
     df = spark.createDataFrame([(v,) for v in values], "s string")
-    chain, sources = _cleanse_chain(F.col("s"), cfg)
+    chain, sources = _cleanse_chain("s", cfg)
     assert sources is not None  # the composed path, not the UDF
-    rows = df.select("s", cleanse_text(F.col("s"), cfg).alias("gated"),
-                     chain.alias("ungated")).collect()
+    rows = df.select("s", F.expr(cleanse_text("s", cfg)).alias("gated"),
+                     F.expr(chain).alias("ungated")).collect()
     assert len(rows) == len(values)
     bad = [(r.s, r.gated, r.ungated) for r in rows
            if r.gated != r.ungated]
@@ -422,6 +430,65 @@ def test_cleanse_gate_matches_ungated_chain(spark, conf):
     by_value = {r.s: r.gated for r in rows}
     assert by_value["xy A zw"] == "xy A zw"
     assert by_value[None] is None
+
+
+def _column_chain(col, cleanse):
+    """The gated cleanse chain as ``cleanse_text`` built it from
+    ``Column`` calls before it was written as SQL text (composed path
+    only), kept as the reference the SQL text must match. The string
+    helpers it calls are the module's own."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from linz_bde_uploader_spark.sources.crs import (
+        _C0_DELETED, _java_replacement, _trigger_class,
+    )
+
+    kept_src, kept_dst, del_src, rx_rules, allowed = [], [], [], [], set()
+    for src, dst in cleanse.char_map.items():
+        allowed.update(ch for ch in dst if ord(ch) > 127)
+        if len(src) == 1 and src == dst:
+            allowed.add(src)
+            continue
+        if len(src) == 1 and len(dst) == 1:
+            kept_src.append(src)
+            kept_dst.append(dst)
+        elif len(src) == 1 and dst == "":
+            del_src.append(src)
+        else:
+            rx_rules.append((src, dst))
+    assert not set(kept_dst) & {s for s, _ in rx_rules}
+    out = col
+    if kept_src or del_src:
+        out = F.translate(out, "".join(kept_src + del_src), "".join(kept_dst))
+    for src, dst in rx_rules:
+        out = F.regexp_replace(out, re.escape(src), _java_replacement(dst))
+    out = F.regexp_replace(out, _C0_DELETED, "")
+    if cleanse.utf8_enforced:
+        keep_class = "".join(re.escape(c) for c in sorted(allowed))
+        out = F.regexp_replace(out, f"[^\\x00-\\x7F{keep_class}]",
+                               _java_replacement(cleanse.utf8_unmapped))
+    sources = set(kept_src + del_src).union(*(s for s, _ in rx_rules))
+    return F.when(col.rlike(_trigger_class(frozenset(sources))),
+                  out).otherwise(col)
+
+
+@pytest.mark.parametrize("conf", sorted(_GATE_CONFS))
+def test_sql_text_chain_matches_column_chain(spark, conf):
+    """The cleanse chain written as SQL text gives, value for value,
+    what the ``Column``-built chain gave, over the gate test's
+    character set."""
+    from pyspark.sql import functions as F
+
+    cfg = _GATE_CONFS[conf]()
+    values = _gate_values(cfg)
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    rows = df.select("s", F.expr(cleanse_text("s", cfg)).alias("text"),
+                     _column_chain(F.col("s"), cfg).alias("ref")).collect()
+    assert len(rows) == len(values)
+    bad = [(r.s, r.text, r.ref) for r in rows if r.text != r.ref]
+    assert not bad, bad[:5]
 
 
 def test_cleanse_gate_keeps_composed_path_for_300_rules(spark):
@@ -442,7 +509,7 @@ def test_cleanse_gate_keeps_composed_path_for_300_rules(spark):
     assert len(cfg.char_map) >= 300
     assert cleanse_path_taken(spark, cfg) == "composed"
     df = spark.range(1).select(
-        cleanse_text(F.col("id").cast("string"), cfg).alias("t"))
+        F.expr(cleanse_text("CAST(id AS STRING)", cfg)).alias("t"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "PythonUDF" not in plan
 
@@ -456,7 +523,7 @@ def test_cleanse_multichar_replacement_with_dollar(spark):
                                         "replace ~ \\\\$1\n")
     assert cfg.char_map == {"€": "EUR$", "~": "\\$1"}
     got = spark.range(1).select(
-        cleanse_text(F.lit("5€ ~ok"), cfg).alias("t")).first().t
+        F.expr(cleanse_text(literal("5€ ~ok"), cfg)).alias("t")).first().t
     assert got == "5EUR$ \\$1ok"
 
 
@@ -469,5 +536,5 @@ def test_cleanse_utf8_unmapped_dollar(spark):
                                         "utf8_replace_unmapped $\n")
     assert cfg.utf8_enforced and cfg.utf8_unmapped == "$"
     got = spark.range(1).select(
-        cleanse_text(F.lit("a♯b é"), cfg).alias("t")).first().t
+        F.expr(cleanse_text(literal("a♯b é"), cfg)).alias("t")).first().t
     assert got == "a$b $"

@@ -1249,9 +1249,11 @@ def test_level5_changes_absent_from_both_sides(spark, env):
 def _traced_loads(spark, monkeypatch, store):
     """Record the ``DataFrame.count``, ``collect`` and ``persist``
     calls and the store writes made inside the block, with the
-    collects of the dataset's one change scan and ``read_crs``'
-    malformed-row probe also listed as excused; ``merge_stats``
-    raises. Undoes every patch of ``monkeypatch`` on exit."""
+    collects of the dataset's one change scan also listed as excused;
+    ``merge_stats`` raises. ``read_crs`` is not excused: a staged
+    file's malformed-row check rides the action that consumes it, so
+    a ``take(1)`` probe shows as a collect. Undoes every patch of
+    ``monkeypatch`` on exit."""
     from linz_bde_uploader_spark import driver as D
 
     t = {"counted": [], "collected": [], "excused": [], "persisted": [],
@@ -1293,7 +1295,6 @@ def _traced_loads(spark, monkeypatch, store):
     monkeypatch.setattr(DataFrame, "persist", tracing_persist)
     monkeypatch.setattr(store, "write", tracing_write)
     monkeypatch.setattr(D, "_changed_tables", excusing(D._changed_tables))
-    monkeypatch.setattr(D, "read_crs", excusing(D.read_crs))
     monkeypatch.setattr(D.M, "merge_stats", no_merge_stats)
     try:
         yield t
@@ -1305,10 +1306,11 @@ def test_ungated_level5_runs_no_count(spark, tmp_path, monkeypatch):
     """A table with no row_tol never reads a row count, so its L5 load
     runs no ``DataFrame.count``; its pointer still records the
     observed ``rows``. With no maintained view the store write is the
-    merge's only Spark
-    action: no ``collect`` (the dataset's one change scan and
-    ``read_crs``' malformed-row probe aside), no persist, and no
-    ``merge_stats`` — the stats are observed in the write."""
+    merge's only Spark action: the one ``collect`` is the dataset's
+    change scan (which also fills the change file's malformed-row
+    check), with no probe of either file, no persist, and no
+    ``merge_stats`` — the stats and the staged file's check are
+    observed in the write."""
     repo = BdeRepository(write_repository(str(tmp_path / "repo")))
     store = TableStore(str(tmp_path / "store"), n_buckets=2)
     ledger = Ledger(str(tmp_path / "ctl"))
@@ -1323,7 +1325,7 @@ TABLE crs_parcel_bndry key=audit_id files pab1
         r = up.apply_updates(level5=True)
     assert t["counted"] == []
     assert t["persisted"] == []
-    assert t["collected"] and t["collected"] == t["excused"]
+    assert len(t["collected"]) == 1 and t["collected"] == t["excused"]
     assert t["written"] == ["crs_parcel_bndry"]
     assert r[-1].status == "loaded"
     s = r[-1].stats

@@ -68,7 +68,7 @@ def _load(store, table, tagged, onto):
     way the driver writes it: the pointer records the new row count."""
     observed = M.MergeObservation()
     return store.write(table, tagged, key="id", clustered=observed.apply,
-                       verdict=lambda written: observed.result()[1],
+                       verdict=lambda new: observed.result()[1],
                        onto=onto)
 
 
@@ -246,7 +246,7 @@ def test_vacuum_leaves_versions_above_current(spark, tmp_path):
     store.write("t", df, key="id")
     store.write("t", df, key="id")
 
-    def reject(written):
+    def reject(new):
         raise ValueError("rejected")
 
     with pytest.raises(ValueError):
