@@ -34,7 +34,6 @@ malformed-row error budget.
 
 from __future__ import annotations
 
-import functools
 import gzip
 import hashlib
 import io
@@ -303,9 +302,17 @@ class RowCheck:
 
     def probe(self) -> None:
         """The same check for a read no action consumes: the eager
-        ``take(1)`` probe, one job."""
-        if self._deferred is not None and self._deferred[1].take(1):
-            raise _malformed(*self._deferred, 0, "at least one")
+        probe (``_probe``), one job."""
+        if self._deferred is not None:
+            _probe(*self._deferred)
+
+
+def _probe(path: str, bad_rows: DataFrame) -> None:
+    """The eager budget-0 check: ``take(1)`` scans partitions in
+    growing rounds and stops at the first bad row, one job for a
+    one-split file."""
+    if bad_rows.take(1):
+        raise _malformed(path, bad_rows, 0, "at least one")
 
 
 def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
@@ -389,14 +396,12 @@ def read_crs(spark: SparkSession, path: str, header: CrsHeader | None = None,
         if budget == 0 and not is_gz:
             # splittable scan: any bad row is fatal. Observed in the
             # consuming action when the caller takes a check; else
-            # take(1) scans partitions in growing rounds and stops at
-            # the first bad row: one job for a one-split file.
-            # Re-reading is cheap because the plain text scan is
-            # parallel, unlike gz above
+            # probed now. Re-reading is cheap because the plain text
+            # scan is parallel, unlike gz above
             if check is not None:
                 data = check._observe(path, data, bad_rows)
-            elif bad_rows.take(1):
-                raise _malformed(path, bad_rows, budget, "at least one")
+            else:
+                _probe(path, bad_rows)
         else:
             bad = bad_rows.count()
             if bad > budget:
@@ -473,8 +478,7 @@ def cleanse_text(value: str, cleanse: CleanseConfig) -> str:
     multi-character replacements (newline -> literal "\\n") need a
     regexp each. With ``utf8_encoding enforced``, non-ASCII characters
     the map doesn't allow become ``utf8_replace_unmapped`` (reference
-    default '?'). The chain is compiled once per configuration into
-    text around one slot for the value (``_compile_chain``).
+    default '?').
 
     That chain still scans a value once per step (18 scans for a
     310-rule map with 15 multi-character rules), yet almost every
@@ -502,7 +506,6 @@ def cleanse_text(value: str, cleanse: CleanseConfig) -> str:
 _C0_DELETED = r"[\x00-\x08\x0B\x0C\x0E-\x1F]"
 
 
-@functools.lru_cache(maxsize=32)
 def _trigger_class(sources: frozenset[str]) -> str:
     """Java regex matching any character some cleanse step can change:
     the complement of the ASCII characters that are neither a rule
@@ -523,25 +526,8 @@ def _cleanse_chain(value: str, cleanse: CleanseConfig
     """The ungated cleanse of ``cleanse_text`` as SQL text, and the set
     of rule source characters that gate it; the set is None when a
     rule collision forces the single-pass UDF instead."""
-    compiled = _compile_chain(tuple(cleanse.char_map.items()),
-                              cleanse.utf8_enforced, cleanse.utf8_unmapped)
-    if compiled is None:
-        udf = _registered("char_map", sorted(cleanse.char_map.items()),
-                          _single_pass_map_udf(cleanse))
-        return f"{udf}({value})", None
-    prefix, suffix, sources = compiled
-    return prefix + value + suffix, sources
-
-
-@functools.lru_cache(maxsize=32)
-def _compile_chain(char_items: tuple[tuple[str, str], ...],
-                   utf8_enforced: bool, utf8_unmapped: str
-                   ) -> tuple[str, str, frozenset[str]] | None:
-    """The ungated chain of a configuration's map and UTF-8 rule as
-    the SQL text before and after its one value slot, with its rule
-    source set; None on a rule collision."""
     kept_src, kept_dst, del_src, rx_rules, allowed = [], [], [], [], set()
-    for src, dst in char_items:
+    for src, dst in cleanse.char_map.items():
         allowed.update(ch for ch in dst if ord(ch) > 127)
         if len(src) == 1 and src == dst:
             allowed.add(src)
@@ -558,24 +544,26 @@ def _compile_chain(char_items: tuple[tuple[str, str], ...],
     # that as long as no translate output is itself a regexp source;
     # on collision fall back to a single-pass per-character map.
     if set(kept_dst) & {s for s, _ in rx_rules}:
-        return None
-    steps = []
+        udf = _registered("char_map", sorted(cleanse.char_map.items()),
+                          _single_pass_map_udf(cleanse))
+        return f"{udf}({value})", None
+    out = value
     # translate pairs positionally; unpaired trailing chars are deleted
     if kept_src or del_src:
-        steps.append(("translate", "".join(kept_src + del_src),
-                      "".join(kept_dst)))
+        out = (f"translate({out}, {literal(''.join(kept_src + del_src))}, "
+               f"{literal(''.join(kept_dst))})")
     for src, dst in rx_rules:
-        steps.append(("regexp_replace", re.escape(src), _java_replacement(dst)))
+        out = (f"regexp_replace({out}, {literal(re.escape(src))}, "
+               f"{literal(_java_replacement(dst))})")
     # delete remaining C0 control characters (utf8_replace_invalid delete)
-    steps.append(("regexp_replace", _C0_DELETED, ""))
-    if utf8_enforced:
+    out = f"regexp_replace({out}, {literal(_C0_DELETED)}, '')"
+    if cleanse.utf8_enforced:
         keep_class = "".join(re.escape(c) for c in sorted(allowed))
-        steps.append(("regexp_replace", f"[^\\x00-\\x7F{keep_class}]",
-                      _java_replacement(utf8_unmapped)))
-    prefix = "".join(f"{fn}(" for fn, _, _ in reversed(steps))
-    suffix = "".join(f", {literal(a)}, {literal(b)})" for _, a, b in steps)
+        non_ascii = literal(f"[^\\x00-\\x7F{keep_class}]")
+        out = (f"regexp_replace({out}, {non_ascii}, "
+               f"{literal(_java_replacement(cleanse.utf8_unmapped))})")
     sources = frozenset(kept_src + del_src).union(*(s for s, _ in rx_rules))
-    return prefix, suffix, sources
+    return out, sources
 
 
 def _registered(kind: str, key, udf) -> str:

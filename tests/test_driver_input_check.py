@@ -23,6 +23,9 @@ TABLES_CONF = """
 TABLE l5_change_table l5_change_table files xaud
 TABLE crs_parcel_bndry key=audit_id row_tol=0.20,0.95 files pab1
 """
+# lin_id is unique, and the golden level-5 re-key 80401150 -> 100
+# keeps lin_id 11960041: a key swap that ``fix_key_swaps`` repairs
+UNIQUE_CONF = TABLES_CONF.replace("files pab1", "unique=lin_id files pab1")
 BASE = "crs_parcel_bndry"
 TABLES = [BASE, f"{BASE}__agg", f"{BASE}__minmax"]
 BAD_ROW = "1|2|3|\n"          # three fields where the header has five
@@ -30,13 +33,13 @@ LEVEL0 = ("level_0", "20160701000000")
 LEVEL5 = ("level_5", "20160602000000")
 
 
-def _uploader(spark, tmp_path, use_tx, **cfg):
+def _uploader(spark, tmp_path, use_tx, conf=TABLES_CONF, **cfg):
     """An uploader with maintained views over the golden repository,
     loaded through its level-0 and level-5 datasets."""
     repo = BdeRepository(write_repository(str(tmp_path / "repo")))
     store = TableStore(str(tmp_path / "store"), n_buckets=2)
     up = BdeUploader(spark, repo, store, Ledger(str(tmp_path / "ctl")),
-                     parse_tables_conf(TABLES_CONF),
+                     parse_tables_conf(conf),
                      config=UploadConfig(
                          use_dataset_transaction=use_tx,
                          views={BASE: ViewSpec(
@@ -92,6 +95,25 @@ def test_malformed_file_stops_the_load(spark, tmp_path, case, use_tx):
     raises ``CrsReadError`` at ``max_errors=0`` and leaves every
     pointer, every view and the ledger watermarks as they were."""
     up, store = _uploader(spark, tmp_path, use_tx)
+    before = _state(spark, up, store)
+    kwargs = _stage_bad(up, case)
+    with pytest.raises(CrsReadError, match=r"max_errors=0; sample="):
+        up.apply_updates(**kwargs)
+    assert _state(spark, up, store) == before
+
+
+@pytest.mark.parametrize("use_tx", [False, True])
+@pytest.mark.parametrize("case", ["level5", "change"])
+def test_malformed_file_stops_a_unique_table_load(spark, tmp_path, case,
+                                                  use_tx):
+    """A ``unique=`` table with views reads its level-5 staged file in
+    the key-swap repair, in the write's classify join and in the
+    views' persisted actions. The golden load (one swap) passes the
+    check, and a malformed file still stops the next load with
+    nothing changed."""
+    up, store = _uploader(spark, tmp_path, use_tx, conf=UNIQUE_CONF)
+    rows = {r.audit_id: r.sequence for r in store.read(spark, BASE).collect()}
+    assert rows == {100: 3, 80401149: 20, 80401148: 10, 300: 4, 400: 5}
     before = _state(spark, up, store)
     kwargs = _stage_bad(up, case)
     with pytest.raises(CrsReadError, match=r"max_errors=0; sample="):
